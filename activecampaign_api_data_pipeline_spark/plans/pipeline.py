@@ -16,21 +16,35 @@ reference's incremental semantics:
 
 Differences by design (SURVEY.md §7): no full-master rewrites (the store
 is incremental), explicit tiebreakers everywhere, sentinel strings
-normalized to NULL at silver. Stages are independent per table and
-pipelined by Spark; the per-contact fetches run distributed under a
-GLOBAL rate budget (``cfg.rate`` is divided across fetch partitions —
-the reference's deliberate 4 req/s stays an aggregate cap, :42).
+normalized to NULL at silver. The per-contact fetches run distributed
+under a GLOBAL rate budget (``cfg.rate`` is divided across fetch
+partitions — the reference's deliberate 4 req/s stays an aggregate cap,
+:42).
+
+Schedule: the API serves one client at a time. Each fan-out runs on the
+calling thread at the full budget, in ``cfg.children`` order, then deals,
+then deal children, and is materialized once (``localCheckpoint``) before
+the next one starts. Everything else that is per table — each persist and
+each dim load — is a task on a driver-side thread pool, one task per
+table, so the persists overlap each other and the next fan-out. A dim
+load takes the API only for its fetch. The mart's chatter and digest are
+written side by side once every persist has finished. A failed task stops
+the run before its next fan-out; ``run_pipeline`` raises once every task
+it started has finished, and the watermark stays where it was (T1).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from activecampaign_api_data_pipeline_spark.functions.scalars import (
     code_map,
@@ -238,6 +252,11 @@ def resolve_seed_ids(seed: DataFrame, cfg: "PipelineConfig | None" = None) -> Da
 
 # ------------------------------------------------------------- S6 dim cache
 
+#: Held by whichever client is spending the API budget: a fan-out or a dim
+#: fetch. ``cfg.rate`` is one budget, so two clients never run at once.
+_API_TURN = threading.Lock()
+
+
 def load_dim_cached(
     spark: SparkSession,
     cfg: PipelineConfig,
@@ -246,7 +265,8 @@ def load_dim_cached(
 ) -> DataFrame:
     """TTL-cached dim snapshot (S6, :335-384): parquet + meta JSON sidecar,
     refetched when older than ``refresh_days``; 404 → empty dim. The dim
-    fetch is a single driver-side client, so it uses the full budget."""
+    fetch is a single driver-side client, so it uses the full budget, and
+    waits for its turn at the API."""
     cache_dir = f"{cfg.lake_root}/dims/{name}"
     meta_path = f"{cache_dir}/_meta.json"
     fresh = False
@@ -256,7 +276,8 @@ def load_dim_cached(
         fresh = (time.time() - meta["fetched_at"]) < cfg.refresh_days * 86400
     if not fresh:
         client = RestClient(cfg.base_url, rate=cfg.rate)
-        rows = client.paged(f"api/3/{name}", collection=name, page_limit=cfg.page_limit)
+        with _API_TURN:
+            rows = client.paged(f"api/3/{name}", collection=name, page_limit=cfg.page_limit)
         data = []
         for r in rows:
             if len(data) >= cfg.max_dim_rows:
@@ -354,83 +375,110 @@ def run_pipeline(
                 "udate",
             )
         )
-    store.persist(contacts, "contacts", ["contact_id"], run_id=run_id, updated_col="udate")
 
-    # --- dims with TTL cache (S6)
-    dims = {d: load_dim_cached(spark, cfg, d, DIM_ENDPOINTS[d]) for d in cfg.dims}
-
-    # --- per-contact child fan-out → persist (S4 → K2, :1605-1664).
-    # cfg.rate is the GLOBAL budget; fetch_children divides it across its
-    # partitions so the aggregate request rate stays under the cap.
-    counts: dict[str, int] = {}
-    for child in cfg.children:
-        spec = CHILD_SPECS[child]
-        df = fetch_children(
-            universe,
-            base_url=cfg.base_url,
-            endpoint_template=f"api/3/contacts/{{id}}/{child}",
-            collection=child,
-            fields=spec["fields"],
-            rate=cfg.rate,
-            page_limit=cfg.page_limit,
-            n_partitions=cfg.fetch_partitions,
-        )
-        enrich = spec.get("enrich")
-        if enrich is not None:
-            df = enrich(df, dims)
-        res = store.persist(df, child, ["id", "contact_id"], run_id=run_id, updated_col=spec["ts"])
-        counts[child] = res.n_delta
-
-    # --- two-level deals bundle (S5, :793-861): contacts → deals, then the
-    # fetched deal ids drive a SECOND fan-out; contact_id rides along via a
-    # broadcast join back to the deals table
+    # --- one task per table on a driver-side pool (see the module
+    # docstring). Tasks go through inheritable_thread_target so the
+    # caller's job group and description reach their Spark jobs.
+    n_tasks = 1 + len(cfg.dims) + len(cfg.children)
     if cfg.deal_children:
-        deals = fetch_children(
-            universe,
-            base_url=cfg.base_url,
-            endpoint_template="api/3/contacts/{id}/deals",
-            collection="deals",
-            fields=["id", "title", "stage", "group", "mdate"],
-            rate=cfg.rate,
-            page_limit=cfg.page_limit,
-            n_partitions=cfg.fetch_partitions,
-        )
-        res = store.persist(deals, "deals", ["id", "contact_id"], run_id=run_id, updated_col="mdate")
-        counts["deals"] = res.n_delta
-        deal_ids = store.read_best("deals").select(
-            F.col("id").alias("deal_id"), "contact_id"
-        ).dropDuplicates(["deal_id"])
-        for dchild in cfg.deal_children:
-            spec = DEAL_CHILD_SPECS[dchild]
-            df = fetch_children(
-                deal_ids,
-                base_url=cfg.base_url,
-                endpoint_template=f"api/3/deals/{{id}}/{dchild}",
-                collection=dchild,
-                fields=spec["fields"],
-                id_col="deal_id",
-                parent_col="deal_id",
-                rate=cfg.rate,
-                page_limit=cfg.page_limit,
-                n_partitions=cfg.fetch_partitions,
-            ).join(F.broadcast(deal_ids), "deal_id")
-            res = store.persist(df, dchild, ["id", "deal_id"], run_id=run_id, updated_col=spec["ts"])
-            counts[dchild] = res.n_delta
+        n_tasks += 1 + len(cfg.deal_children)
+    started: list[Future] = []
+    dim_tasks: dict[str, Future] = {}
+    persists: dict[str, Future] = {}
+    with ThreadPoolExecutor(max_workers=n_tasks, thread_name_prefix="run_pipeline") as pool:
 
-    # --- mart (§3.3) + per-contact txt digests (K4, :1684-1692)
-    chatter, digest = build_ac_chatter(
-        store, dims, cfg.max_events_per_contact, local_tz=cfg.local_tz
-    )
-    chatter.write.mode("overwrite").parquet(f"{cfg.lake_root}/mart/chatter_master")
-    digest.write.mode("overwrite").parquet(f"{cfg.lake_root}/mart/contact_digest")
-    write_digests(
-        spark.read.parquet(f"{cfg.lake_root}/mart/contact_digest").filter(
-            F.col("digest") != ""
-        ),
-        f"{cfg.lake_root}/mart/contact_digest_txt",
-        "contact_id",
-        "digest",
-    )
+        def submit(fn, *args) -> Future:
+            # a failed task stops the run before the next fan-out spends
+            # API budget; leaving the ``with`` waits for the running tasks
+            for f in started:
+                if f.done() and f.exception() is not None:
+                    raise f.exception()
+            started.append(pool.submit(inheritable_thread_target(spark)(fn), *args))
+            return started[-1]
+
+        def fan_out(ids: DataFrame, template: str, collection: str, fields: list[str],
+                    **kw) -> DataFrame:
+            # cfg.rate is the GLOBAL budget; fetch_children divides it
+            # across its partitions so the aggregate stays under the cap
+            with _API_TURN:
+                return fetch_children(
+                    ids,
+                    base_url=cfg.base_url,
+                    endpoint_template=template,
+                    collection=collection,
+                    fields=fields,
+                    rate=cfg.rate,
+                    page_limit=cfg.page_limit,
+                    n_partitions=cfg.fetch_partitions,
+                    **kw,
+                ).localCheckpoint(eager=True)
+
+        def persist(df: DataFrame, table: str, keys: list[str], ts: str | None,
+                    enrich=None) -> int:
+            if enrich is not None:
+                df = enrich(df, {d: f.result() for d, f in dim_tasks.items()})
+            return store.persist(df, table, keys, run_id=run_id, updated_col=ts).n_delta
+
+        submit(persist, contacts, "contacts", ["contact_id"], "udate")
+
+        # --- dims with TTL cache (S6)
+        for d in cfg.dims:
+            dim_tasks[d] = submit(load_dim_cached, spark, cfg, d, DIM_ENDPOINTS[d])
+
+        # --- per-contact child fan-out → persist (S4 → K2, :1605-1664)
+        for child in cfg.children:
+            spec = CHILD_SPECS[child]
+            df = fan_out(universe, f"api/3/contacts/{{id}}/{child}", child, spec["fields"])
+            persists[child] = submit(
+                persist, df, child, ["id", "contact_id"], spec["ts"], spec.get("enrich")
+            )
+
+        # --- two-level deals bundle (S5, :793-861): contacts → deals, then
+        # this run's deal ids drive a SECOND fan-out; contact_id rides along
+        # via a broadcast join back to those deals
+        if cfg.deal_children:
+            deals = fan_out(universe, "api/3/contacts/{id}/deals", "deals",
+                            ["id", "title", "stage", "group", "mdate"])
+            persists["deals"] = submit(persist, deals, "deals", ["id", "contact_id"], "mdate")
+            deal_ids = deals.select(
+                F.col("id").alias("deal_id"), "contact_id"
+            ).dropDuplicates(["deal_id"])
+            for dchild in cfg.deal_children:
+                spec = DEAL_CHILD_SPECS[dchild]
+                df = fan_out(deal_ids, f"api/3/deals/{{id}}/{dchild}", dchild, spec["fields"],
+                             id_col="deal_id", parent_col="deal_id")
+                persists[dchild] = submit(
+                    persist, df.join(F.broadcast(deal_ids), "deal_id"), dchild,
+                    ["id", "deal_id"], spec["ts"],
+                )
+
+        for f in started:
+            f.result()
+        counts = {t: f.result() for t, f in persists.items()}
+        dims = {d: f.result() for d, f in dim_tasks.items()}
+
+        # --- mart (§3.3) + per-contact txt digests (K4, :1684-1692); the
+        # chatter and the digest are written side by side
+        chatter, digest = build_ac_chatter(
+            store, dims, cfg.max_events_per_contact, local_tz=cfg.local_tz
+        )
+        mart = f"{cfg.lake_root}/mart"
+
+        def write_digest() -> None:
+            digest.write.mode("overwrite").parquet(f"{mart}/contact_digest")
+            write_digests(
+                spark.read.parquet(f"{mart}/contact_digest").filter(F.col("digest") != ""),
+                f"{mart}/contact_digest_txt",
+                "contact_id",
+                "digest",
+            )
+
+        marts = [
+            submit(chatter.write.mode("overwrite").parquet, f"{mart}/chatter_master"),
+            submit(write_digest),
+        ]
+        for f in marts:
+            f.result()
 
     # --- watermark advanced only after everything succeeded (T1, :1696-1700);
     # computed from the materialized snapshot that was persisted above.

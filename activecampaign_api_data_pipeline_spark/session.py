@@ -129,7 +129,13 @@ def scoped_advisory_partition(spark: SparkSession, size: str):
     scale-safe at 100 TB: it under-merges (more, smaller reduce tasks —
     exactly what a CPU-dense consumer wants), never over-splits, and the
     write-path file sizing of other queries is untouched because the
-    scope ends with the query."""
+    scope ends with the query.
+
+    Single-threaded use only: the scope sets SESSION-wide conf, so do not
+    enter it while other threads run Spark work on the same session (a
+    streaming query's micro-batches, ``run_pipeline``'s persist pool, or
+    another scope). Their jobs would run under the scoped advisory, and
+    overlapping scopes restore each other's values out of order."""
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     old = spark.conf.get(key)
     spark.conf.set(key, size)

@@ -743,11 +743,13 @@ def test_minhash_sidecar_backfill_gated_on_artifact_evidence(spark, tmp_path):
 
 
 def test_largestar_smallstar_parallel_edges_same_labels(spark):
-    """r14: the large-star frame no longer dedups its (u, v) rows before
-    the small-star fold (one exchange per alternation removed) — the MIN
-    aggregate and the alternation's final distinct absorb duplicates, so
-    a multigraph input (parallel edges, both orientations, self-loops)
-    must label identically to its deduplicated simple graph."""
+    """Multigraph label-invariance: a multigraph input (parallel edges,
+    both orientations, self-loops) must label identically to its
+    deduplicated simple graph. This is what keeps the large-star
+    ``distinct()`` semantically redundant (the MIN aggregate and the
+    alternation's final distinct absorb duplicates). The distinct stays
+    because removing it measured slower (the NOTE in
+    ``operators/dedup.py``); this test guards any future removal."""
     from activecampaign_api_data_pipeline_spark.operators.dedup import (
         largestar_smallstar_components,
     )

@@ -2,9 +2,14 @@
 → medallion store → chatter mart/digest, with incremental + idempotent
 semantics across runs."""
 
+import os
+import time
+import urllib.parse
+
 import pytest
 from pyspark.sql import functions as F
 
+from activecampaign_api_data_pipeline_spark.plans import pipeline as pipeline_mod
 from activecampaign_api_data_pipeline_spark.plans.pipeline import (
     PipelineConfig,
     resolve_seed_ids,
@@ -151,8 +156,30 @@ def test_resolve_seed_ids_candidates(spark):
 
 
 def test_pipeline_end_to_end_golden(spark, mock, cfg):
-    res = run_pipeline(spark, cfg, run_id="r1")
+    m, _ = mock
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("golden", "golden pipeline run")
+    try:
+        res = run_pipeline(spark, cfg, run_id="r1")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # the caller's job group reaches every job, the pool's included (the
+    # status store may evict old jobs meanwhile, so only new ones count)
+    assert sc.statusTracker().getJobIdsForGroup("golden")
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
     assert res["watermark"] == 3
+
+    # the API serves one fan-out at a time: each fan-out's requests form
+    # one contiguous block, in cfg.children order, then deals, then deal
+    # children
+    blocks = []
+    for p in m.request_log:
+        parts = urllib.parse.urlparse(p).path.split("/")
+        if len(parts) == 6 and parts[3] in ("contacts", "deals") and blocks[-1:] != [parts[5]]:
+            blocks.append(parts[5])
+    assert blocks == [*cfg.children, "deals", *cfg.deal_children]
     assert res["children"]["activities"] == 3
     store = TableStore(spark, cfg.lake_root)
 
@@ -242,7 +269,6 @@ def test_pipeline_end_to_end_golden(spark, mock, cfg):
     assert ca_titles == {"ca1": "Automatización: Onboarding", "ca2": "Automatización: Winback"}
 
     # K4: one txt partition per contact with a non-empty digest
-    import os
     txt_dirs = sorted(
         p for p in os.listdir(f"{cfg.lake_root}/mart/contact_digest_txt")
         if p.startswith("contact_id=")
@@ -276,6 +302,94 @@ def test_pipeline_idempotent_and_incremental(spark, mock, cfg):
     assert chatter.filter("contact_id = '4'").count() == 1
     # old contacts' history still present in the rebuilt mart
     assert chatter.filter("contact_id = '1'").count() == 12
+
+
+def _add_contact_4(m: MockAC) -> None:
+    """A new contact (id 4) with one activity and one deal with a note."""
+    m.collections["contacts"].append(
+        {"id": 4, "email": "new@x.com", "first_name": "New", "last_name": "One", "udate": "2020-03-01"}
+    )
+    m.children["activities"]["4"] = [
+        {"id": "a9", "tstamp": "2020-03-02 10:00:00", "reference_type": "open", "description": "first open"}
+    ]
+    m.children["deals"]["4"] = [
+        {"id": "d4", "title": "New Deal", "stage": "open", "group": "g1", "mdate": "2020-03-03 00:00:00"}
+    ]
+    m.children["dealNotes"]["d4"] = [{"id": "dn4", "cdate": "2020-03-04 09:00:00", "note": "first call"}]
+
+
+def test_incremental_fetches_children_of_this_runs_deals_only(spark, mock, cfg):
+    """The deal-children fan-out is driven by the deals this run fetched,
+    not by every deal in gold: an incremental run over one new contact
+    asks only for that contact's deals."""
+    m, _ = mock
+    run_pipeline(spark, cfg, run_id="r1")
+    since = len(m.request_log)
+    _add_contact_4(m)
+    res = run_pipeline(spark, cfg, run_id="r2")
+    assert res["children"]["dealNotes"] == 1
+    deal_paths = [p for p in m.request_log[since:] if p.startswith("/api/3/deals/")]
+    assert deal_paths and {p.split("/")[4] for p in deal_paths} == {"d4"}
+    notes = TableStore(spark, cfg.lake_root).read_best("dealNotes")
+    assert sorted((r["id"], r["contact_id"]) for r in notes.collect()) == [("dn1", "1"), ("dn4", "4")]
+
+
+def _gold(spark, root: str) -> dict[str, list]:
+    """Every gold table's rows, sorted, without the wall-clock stamp."""
+    store = TableStore(spark, root)
+    out = {}
+    for t in sorted(os.listdir(f"{root}/gold")):
+        df = store.read("gold", t).drop("extracted_at")
+        out[t] = sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+    return out
+
+
+def test_failed_fanout_stops_run_cleanly(spark, mock, cfg, tmp_path, monkeypatch):
+    """A child endpoint answers a status the client does not retry: the
+    run raises only once every task it started has finished, keeps the
+    old watermark (T1), and a rerun of the same run_id with the fault
+    cleared converges to the gold of a clean run (same-batch restart)."""
+    m, url = mock
+    clean = PipelineConfig(base_url=url, lake_root=str(tmp_path / "clean"), rate=10000,
+                           fetch_partitions=2)
+    run_pipeline(spark, cfg, run_id="r1")
+    run_pipeline(spark, clean, run_id="r1")
+    _add_contact_4(m)
+    run_pipeline(spark, clean, run_id="r2")
+
+    events: list[tuple[str, str]] = []
+
+    def tracked(fn, label):
+        def run(*args, **kwargs):
+            events.append(("start", label(args)))
+            time.sleep(0.5)  # still running when the fan-out fails
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                events.append(("end", label(args)))
+        return run
+
+    monkeypatch.setattr(TableStore, "persist", tracked(TableStore.persist, lambda a: a[2]))
+    monkeypatch.setattr(pipeline_mod, "load_dim_cached",
+                        tracked(pipeline_mod.load_dim_cached, lambda a: a[2]))
+    m.fail_first["/api/3/contacts/4/contactTags"] = [400]
+    with pytest.raises(Exception, match="400"):
+        run_pipeline(spark, cfg, run_id="r2")
+    at_raise = list(events)
+    started = sorted(t for e, t in at_raise if e == "start")
+    # the fan-outs before contactTags had their persists started
+    assert {"contacts", "activities", "contactNotes"} <= set(started)
+    assert "contactTags" not in started
+    assert started == sorted(t for e, t in at_raise if e == "end")
+    time.sleep(1.0)
+    assert events == at_raise  # nothing was left running
+    assert TableStore(spark, cfg.lake_root).load_state()["max_contact_id"] == 3
+
+    monkeypatch.undo()
+    assert not m.fail_first["/api/3/contacts/4/contactTags"]
+    res = run_pipeline(spark, cfg, run_id="r2")
+    assert res["watermark"] == 4
+    assert _gold(spark, cfg.lake_root) == _gold(spark, clean.lake_root)
 
 
 def test_dim_ttl_cache_not_refetched(spark, mock, cfg):
