@@ -21,16 +21,19 @@ under a GLOBAL rate budget (``cfg.rate`` is divided across fetch
 partitions — the reference's deliberate 4 req/s stays an aggregate cap,
 :42).
 
-Schedule: the API serves one client at a time. Each fan-out runs on the
-calling thread at the full budget, in ``cfg.children`` order, then deals,
-then deal children, and is materialized once (``localCheckpoint``) before
-the next one starts. Everything else that is per table — each persist and
+Schedule: the API serves one client at a time. A sync makes two fan-out
+passes on the calling thread, each at the full budget: one over the
+contacts for every ``cfg.children`` endpoint plus deals, then one over
+this run's deals for every ``cfg.deal_children`` endpoint. Each pass runs
+once, is materialized (``localCheckpoint``), and is split into one frame
+per table. Everything else that is per table — each persist and
 each dim load — is a task on a driver-side thread pool, one task per
-table, so the persists overlap each other and the next fan-out. A dim
-load takes the API only for its fetch. The mart's chatter and digest are
-written side by side once every persist has finished. A failed task stops
-the run before its next fan-out; ``run_pipeline`` raises once every task
-it started has finished, and the watermark stays where it was (T1).
+table, so the persists overlap each other and the deal-level pass. A dim
+load takes the API only for its fetch. The mart's chatter is materialized
+once, and the chatter and digest are written from it side by side once
+every persist has finished. A failed task stops the run before its next
+fan-out; ``run_pipeline`` raises once every task it started has finished,
+and the watermark stays where it was (T1).
 """
 
 from __future__ import annotations
@@ -55,7 +58,7 @@ from activecampaign_api_data_pipeline_spark.functions.scalars import (
 from activecampaign_api_data_pipeline_spark.operators.conform import conform_union
 from activecampaign_api_data_pipeline_spark.operators.rollup import digest_lines, set_rollup
 from activecampaign_api_data_pipeline_spark.operators.snapshots import top_n_per_group
-from activecampaign_api_data_pipeline_spark.sources.fanout import fetch_children
+from activecampaign_api_data_pipeline_spark.sources.fanout import ENDPOINT_COL, fetch_children
 from activecampaign_api_data_pipeline_spark.sources.rest_client import RestClient
 from activecampaign_api_data_pipeline_spark.storage import TableStore, write_digests
 
@@ -140,6 +143,8 @@ CHILD_SPECS: dict[str, dict] = {
 
 #: Two-level deals bundle (reference S5, :793-861): deals are fetched per
 #: contact, then notes/tasks/activities per deal — chained fan-outs.
+#: ``DEAL_FIELDS`` are the deal columns, ``DEAL_CHILD_SPECS`` the second level.
+DEAL_FIELDS = ["id", "title", "stage", "group", "mdate"]
 DEAL_CHILD_SPECS: dict[str, dict] = {
     "dealNotes": {"fields": ["id", "cdate", "note"], "ts": "cdate"},
     "dealTasks": {"fields": ["id", "udate", "title", "duedate"], "ts": "udate"},
@@ -396,22 +401,28 @@ def run_pipeline(
             started.append(pool.submit(inheritable_thread_target(spark)(fn), *args))
             return started[-1]
 
-        def fan_out(ids: DataFrame, template: str, collection: str, fields: list[str],
-                    **kw) -> DataFrame:
-            # cfg.rate is the GLOBAL budget; fetch_children divides it
-            # across its partitions so the aggregate stays under the cap
+        def fan_out(ids: DataFrame, template: str, endpoints: dict[str, list[str]],
+                    parent_col: str = "contact_id", **kw) -> dict[str, DataFrame]:
+            # one job fetches every endpoint of a parent level and is
+            # materialized once; each table is a slice of it. cfg.rate is
+            # the GLOBAL budget; fetch_children divides it across its
+            # partitions so the aggregate stays under the cap
             with _API_TURN:
-                return fetch_children(
+                fetched = fetch_children(
                     ids,
                     base_url=cfg.base_url,
                     endpoint_template=template,
-                    collection=collection,
-                    fields=fields,
+                    endpoints=endpoints,
+                    parent_col=parent_col,
                     rate=cfg.rate,
                     page_limit=cfg.page_limit,
                     n_partitions=cfg.fetch_partitions,
                     **kw,
                 ).localCheckpoint(eager=True)
+            return {
+                name: fetched.filter(F.col(ENDPOINT_COL) == name).select(*fields, parent_col)
+                for name, fields in endpoints.items()
+            }
 
         def persist(df: DataFrame, table: str, keys: list[str], ts: str | None,
                     enrich=None) -> int:
@@ -425,31 +436,37 @@ def run_pipeline(
         for d in cfg.dims:
             dim_tasks[d] = submit(load_dim_cached, spark, cfg, d, DIM_ENDPOINTS[d])
 
-        # --- per-contact child fan-out → persist (S4 → K2, :1605-1664)
+        # --- contact-level pass: every per-contact child (S4, :1605-1664)
+        # plus the deals of the two-level bundle (S5, :793-861) → persists (K2)
+        endpoints = {child: CHILD_SPECS[child]["fields"] for child in cfg.children}
+        if cfg.deal_children:
+            endpoints["deals"] = DEAL_FIELDS
+        fetched = {}
+        if endpoints:
+            fetched = fan_out(universe, "api/3/contacts/{id}/{endpoint}", endpoints)
         for child in cfg.children:
             spec = CHILD_SPECS[child]
-            df = fan_out(universe, f"api/3/contacts/{{id}}/{child}", child, spec["fields"])
             persists[child] = submit(
-                persist, df, child, ["id", "contact_id"], spec["ts"], spec.get("enrich")
+                persist, fetched[child], child, ["id", "contact_id"], spec["ts"], spec.get("enrich")
             )
 
-        # --- two-level deals bundle (S5, :793-861): contacts → deals, then
-        # this run's deal ids drive a SECOND fan-out; contact_id rides along
-        # via a broadcast join back to those deals
+        # --- deal-level pass: this run's deal ids drive a SECOND fan-out;
+        # contact_id rides along via a broadcast join back to those deals
         if cfg.deal_children:
-            deals = fan_out(universe, "api/3/contacts/{id}/deals", "deals",
-                            ["id", "title", "stage", "group", "mdate"])
+            deals = fetched["deals"]
             persists["deals"] = submit(persist, deals, "deals", ["id", "contact_id"], "mdate")
             deal_ids = deals.select(
                 F.col("id").alias("deal_id"), "contact_id"
             ).dropDuplicates(["deal_id"])
+            fetched = fan_out(
+                deal_ids, "api/3/deals/{id}/{endpoint}",
+                {d: DEAL_CHILD_SPECS[d]["fields"] for d in cfg.deal_children},
+                id_col="deal_id", parent_col="deal_id",
+            )
             for dchild in cfg.deal_children:
-                spec = DEAL_CHILD_SPECS[dchild]
-                df = fan_out(deal_ids, f"api/3/deals/{{id}}/{dchild}", dchild, spec["fields"],
-                             id_col="deal_id", parent_col="deal_id")
                 persists[dchild] = submit(
-                    persist, df.join(F.broadcast(deal_ids), "deal_id"), dchild,
-                    ["id", "deal_id"], spec["ts"],
+                    persist, fetched[dchild].join(F.broadcast(deal_ids), "deal_id"), dchild,
+                    ["id", "deal_id"], DEAL_CHILD_SPECS[dchild]["ts"],
                 )
 
         for f in started:
@@ -458,7 +475,8 @@ def run_pipeline(
         dims = {d: f.result() for d, f in dim_tasks.items()}
 
         # --- mart (§3.3) + per-contact txt digests (K4, :1684-1692); the
-        # chatter and the digest are written side by side
+        # chatter and the digest are written side by side, both from the
+        # one chatter that build_ac_chatter materialized
         chatter, digest = build_ac_chatter(
             store, dims, cfg.max_events_per_contact, local_tz=cfg.local_tz
         )
@@ -526,6 +544,10 @@ def build_ac_chatter(
     render chatter lines with the acting user [F1, :1411-1422], order
     deterministically [O1], and roll up the per-contact digest
     [A5/A6/W3, :1427-1506].
+
+    The sorted chatter is computed here, eagerly, and materialized once
+    (``localCheckpoint``); the returned chatter is that copy, and the
+    returned digest is derived from it.
     """
     def best(table: str) -> DataFrame | None:
         try:
@@ -889,11 +911,13 @@ def build_ac_chatter(
             ).otherwise(F.lit("")),  # reference: unparseable ts -> "" (:1407-1409)
         )
 
+    # materialized once: the chatter write and every digest rollup below
+    # read this one copy instead of each recomputing the whole lineage
     chatter = chatter.orderBy(
         F.col("contact_id").asc(),
         F.col("event_ts").asc_nulls_last(),
         F.col("event_id").asc(),
-    )
+    ).localCheckpoint(eager=True)
 
     # digest: tag/list/automation rollups + last-25 lines (A5/A6/W3,
     # :1427-1506; automations use the resolved name, else the raw id)

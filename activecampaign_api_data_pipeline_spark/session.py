@@ -19,6 +19,12 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """``min(24g, half of physical RAM)``, in megabytes."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "acdp-spark",
     cpus: str | int | None = None,
@@ -30,9 +36,11 @@ def get_spark(
     # defaults to 1g — ~20 MB of execution memory per task at N=32, found
     # as a heap OOM in the 10x scale smoke (dedup_ngram_jaccard) and as
     # needless shuffle spill elsewhere. Size the heap like the executor it
-    # is standing in for. Only effective for sessions THIS factory creates
-    # (the external driver owns its own); override via SPARK_GRAFT_DRIVER_MEM.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    # is standing in for, but never above half the host's physical RAM:
+    # the JVM would be killed before it collected. Only effective for
+    # sessions THIS factory creates (the external driver owns its own);
+    # override via SPARK_GRAFT_DRIVER_MEM.
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -5,8 +5,15 @@ The reference fetches 16 child collections per contact in a sequential
 Python loop (run_ac_extraction.py:422-765) and a two-level deals bundle
 (:793-861). Spark-first shape: the parent ids are a DataFrame; fan-out is
 ``mapInPandas`` over id partitions — each partition opens one rate-limited
-client and pages through its ids' child endpoints, yielding child rows with
-the parent id attached (the reference's ``row["contact_id"]=cid``, :434).
+client and, for each of its ids, pages through EVERY requested child
+endpoint, yielding child rows tagged with their endpoint and with the
+parent id attached (the reference's ``row["contact_id"]=cid``, :434).
+
+One pass serves all the endpoints of a parent level: the ids are
+deduplicated and repartitioned once, and one job fetches every table, so
+a caller materializes the result once and splits it per endpoint
+(``endpoint == name``, then that endpoint's fields) instead of running one
+job per table over the same ids.
 
 Scale: ``ids.repartition(n)`` controls fetch concurrency; per-partition
 ``rate`` = global API budget / n. Two-level bundles (deals → deal notes)
@@ -22,37 +29,45 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Column of :func:`fetch_children`'s output naming the endpoint a row
+#: came from.
+ENDPOINT_COL = "endpoint"
+
 
 def fetch_children(
     ids: DataFrame,
     base_url: str,
     endpoint_template: str,
-    collection: str,
-    fields: list[str],
+    endpoints: dict[str, list[str]],
     id_col: str = "contact_id",
     parent_col: str = "contact_id",
     rate: float = 4.0,
     page_limit: int = 100,
     n_partitions: int = 4,
 ) -> DataFrame:
-    """Fetch ``endpoint_template.format(id=...)`` for every parent id.
+    """Fetch ``endpoint_template.format(id=..., endpoint=name)`` for every
+    parent id and every ``name`` in ``endpoints``, in one pass.
+
+    ``endpoints`` maps each endpoint name, which is also the collection
+    key of its JSON payload, to the fields kept from its rows. Per parent
+    id the endpoints are fetched in ``endpoints`` order.
 
     ``rate`` is the GLOBAL request budget in req/s (the reference stays
     under the API's 5 req/s cap with ~4 req/s TOTAL, :42); each of the
     ``n_partitions`` concurrent partition clients gets ``rate /
     n_partitions`` so the aggregate rate respects the budget.
 
-    Returns a DataFrame with ``fields`` (all strings) plus ``parent_col``.
-    404s yield no rows (the reference's tolerance for missing child
-    endpoints, :562-567,590-595).
+    Returns one DataFrame for all endpoints: :data:`ENDPOINT_COL`, every
+    field of every endpoint (all strings, null where a row's endpoint
+    lacks the field) and ``parent_col``. 404s yield no rows (the
+    reference's tolerance for missing child endpoints, :562-567,590-595).
     """
     from pyspark.sql.types import StringType, StructField, StructType
 
-    out_schema = StructType(
-        [StructField(f, StringType()) for f in fields]
-        + [StructField(parent_col, StringType())]
-    )
-    out_fields = fields  # closure-captured
+    all_fields = list(dict.fromkeys(f for fs in endpoints.values() for f in fs))
+    out_cols = [ENDPOINT_COL, *all_fields, parent_col]
+    out_schema = StructType([StructField(c, StringType()) for c in out_cols])
+    plan = list(endpoints.items())  # closure-captured
     per_partition_rate = rate / max(1, n_partitions)
 
     def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -62,19 +77,22 @@ def fetch_children(
         for pdf in batches:
             rows_out: list[dict] = []
             for pid in pdf[id_col].astype(str):
-                rows = client.paged(
-                    endpoint_template.format(id=pid),
-                    collection=collection,
-                    page_limit=page_limit,
-                )
-                for r in rows:
-                    rec = {
-                        f: (None if r.get(f) is None else str(r.get(f)))
-                        for f in out_fields
-                    }
-                    rec[parent_col] = pid
-                    rows_out.append(rec)
-            yield pd.DataFrame(rows_out, columns=out_fields + [parent_col])
+                for name, fields in plan:
+                    rows = client.paged(
+                        endpoint_template.format(id=pid, endpoint=name),
+                        collection=name,
+                        page_limit=page_limit,
+                    )
+                    for r in rows:
+                        rec = dict.fromkeys(out_cols)
+                        rec.update(
+                            (f, None if r.get(f) is None else str(r.get(f)))
+                            for f in fields
+                        )
+                        rec[ENDPOINT_COL] = name
+                        rec[parent_col] = pid
+                        rows_out.append(rec)
+            yield pd.DataFrame(rows_out, columns=out_cols)
 
     src = ids.select(id_col).distinct().repartition(n_partitions)
     return src.mapInPandas(_fetch, out_schema)

@@ -25,14 +25,21 @@ to the buckets the new batch actually touches:
 
 - silver append = ``new LEFT ANTI JOIN silver ON (_kb, _row_hash)`` — the
   probe side reads ONLY affected bucket partitions (partition pruning) and
-  only the ``_row_hash`` column (column pruning).
+  only the ``_row_hash`` column (column pruning), under a pinned schema
+  (``_row_hash string, _kb int``) so no footer job infers it.
 - gold refresh  = latest-per-key over silver restricted to affected buckets,
   written with dynamic partition overwrite — untouched buckets are not read
-  and not rewritten.
+  and not rewritten. The rank runs per ``(_kb, keys)``: the same groups as
+  per key, because ``_kb`` is a function of the keys, so the one shuffle
+  on ``_kb`` serves both the rank and the bucketed write.
 
 So per run, work is O(new batch + touched buckets), not O(master) as in the
 reference. At 100 TB raise ``n_buckets`` so a bucket ≪ executor memory; a
-run touching k buckets rewrites k/n_buckets of gold, nothing else.
+run touching k buckets rewrites k/n_buckets of gold, nothing else. Actions
+are few as well: the bronze and silver writes count their own rows and
+buckets as they run (``DataFrame.observe``), so no count job re-reads a
+batch, and an empty batch stops after bronze — it writes no silver and no
+gold.
 
 Exactly-once under SAME-BATCH restart: every write is either per-run-
 partition idempotent (bronze: dynamic overwrite of ``run_id=<id>``),
@@ -62,7 +69,7 @@ import json
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from activecampaign_api_data_pipeline_spark.functions.hashing import row_hash
@@ -253,6 +260,19 @@ def _key_bucket(key_cols: list[str], n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(*ks), F.lit(n_buckets)).cast("int")
 
 
+def _observed(df: DataFrame, obs: Observation) -> DataFrame:
+    """``df`` reporting its row count and its buckets to ``obs`` when an
+    action (here: a write) runs it."""
+    return df.observe(
+        obs, F.count(F.lit(1)).alias("n"), F.collect_set(BUCKET_COL).alias("buckets")
+    )
+
+
+def _counts(obs: Observation) -> tuple[int, list[int]]:
+    m = obs.get
+    return m["n"], sorted(m["buckets"])
+
+
 class TableStore:
     """Bronze/silver/gold store rooted at a directory (local or DFS URI)."""
 
@@ -325,11 +345,6 @@ class TableStore:
         )
         staged.persist()
         try:
-            # one job yields the batch size AND its buckets
-            per_bucket = staged.groupBy(BUCKET_COL).count().collect()
-            n_delta = sum(r["count"] for r in per_bucket)
-            buckets = [r[BUCKET_COL] for r in per_bucket]
-
             # 1. bronze: per-run partition (never read-modify other runs).
             #    The per-run "delta" drop of the reference (:156-157) IS the
             #    bronze run_id partition — same rows, one write, partition-
@@ -338,61 +353,61 @@ class TableStore:
             #    run_id land on its own partition idempotently: a run killed
             #    anywhere after this write can be re-run with the same run_id
             #    without doubling its bronze rows. Other runs' partitions are
-            #    untouched.
-            staged.drop(BUCKET_COL).withColumn("run_id", F.lit(run_id)).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy("run_id").parquet(
-                self._path("bronze", table)
-            )
+            #    untouched. The write itself counts the batch and collects
+            #    its buckets (no separate count job).
+            batch = Observation()
+            _observed(staged, batch).drop(BUCKET_COL).withColumn(
+                "run_id", F.lit(run_id)
+            ).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("run_id").parquet(self._path("bronze", table))
+            n_delta, buckets = _counts(batch)
+            if not n_delta:
+                # nothing to dedup and no bucket to refresh: silver and
+                # gold stay as they are (a new table gets neither)
+                return PersistResult(table, run_id, 0, 0, [], [])
 
-            # 2. silver: anti-join on (_kb, _row_hash) — bucket-pruned probe
+            # 2. silver: anti-join on (_kb, _row_hash) — bucket-pruned probe.
+            #    The probe reads only the two columns it joins on, under a
+            #    pinned schema: this method writes both with these types
+            #    (md5 hex string, int partition value), so no footer job is
+            #    needed to infer them.
             silver_path = self._path("silver", table)
-            first_batch = not self._exists(silver_path)
-            if first_batch:
-                # no silver yet: the anti-join is vacuous, fresh IS staged —
-                # reuse the per-bucket stats already collected above instead
-                # of paying a second count job over the same rows
-                fresh = staged
-                fresh_per_bucket = per_bucket
-            else:
+            fresh = staged  # no silver yet: the anti-join is vacuous
+            if self._exists(silver_path):
                 old = (
-                    self.read("silver", table)
+                    self.spark.read.schema(f"{HASH_COL} string, {BUCKET_COL} int")
+                    .parquet(silver_path)
                     .filter(F.col(BUCKET_COL).isin(buckets))
-                    .select(BUCKET_COL, HASH_COL)
                 )
                 fresh = staged.join(old, [BUCKET_COL, HASH_COL], "left_anti").repartition(
                     F.col(BUCKET_COL)
                 )
-                fresh.persist()
-                # collect BEFORE the append: writing to silver_path invalidates
-                # any cached plan that reads it (fresh's anti-join does), and a
-                # recompute after the append would anti-join away its own rows.
-                fresh_per_bucket = fresh.groupBy(BUCKET_COL).count().collect()
-            n_new = sum(r["count"] for r in fresh_per_bucket)
-            touched = [r[BUCKET_COL] for r in fresh_per_bucket]
-            if n_new:
-                fresh.write.mode("append").partitionBy(BUCKET_COL).parquet(silver_path)
+            # the append counts its own rows: the anti-join is evaluated
+            # once, by the write, so it never sees the rows it appends
+            new = Observation()
+            _observed(fresh, new).write.mode("append").partitionBy(BUCKET_COL).parquet(
+                silver_path
+            )
+            n_new, touched = _counts(new)
 
-            if n_delta:
-                # 3. gold: recompute ONLY the batch's buckets from silver,
-                #    dynamic partition overwrite leaves the rest untouched.
-                #    Refresh is keyed on the STAGED buckets, not just the
-                #    fresh ones, and runs even when n_new == 0: a run killed
-                #    between the silver append and this refresh replays with
-                #    every row anti-joined away (n_new == 0), and gold must
-                #    still be repaired from silver. The refresh is a pure
-                #    function of silver, so re-running it is idempotent; the
-                #    cost stays O(batch buckets) either way (duplicates hash
-                #    to the same buckets as their originals).
-                self.rebuild_gold(
-                    table, key_cols, updated_col, buckets=buckets,
-                    tombstone_col=tombstone_col,
-                )
-            if not first_batch:
-                fresh.unpersist()
+            # 3. gold: recompute ONLY the batch's buckets from silver,
+            #    dynamic partition overwrite leaves the rest untouched.
+            #    Refresh is keyed on the STAGED buckets, not just the
+            #    fresh ones, and runs even when n_new == 0: a run killed
+            #    between the silver append and this refresh replays with
+            #    every row anti-joined away (n_new == 0), and gold must
+            #    still be repaired from silver. The refresh is a pure
+            #    function of silver, so re-running it is idempotent; the
+            #    cost stays O(batch buckets) either way (duplicates hash
+            #    to the same buckets as their originals).
+            self.rebuild_gold(
+                table, key_cols, updated_col, buckets=buckets,
+                tombstone_col=tombstone_col,
+            )
         finally:
             staged.unpersist()
-        return PersistResult(table, run_id, n_delta, n_new, sorted(buckets), sorted(touched))
+        return PersistResult(table, run_id, n_delta, n_new, buckets, touched)
 
     def rebuild_gold(
         self,
@@ -426,9 +441,15 @@ class TableStore:
         ]
         from pyspark.sql import Window
 
-        w = Window.partitionBy(*key_cols).orderBy(*order)
+        # ``_kb`` is a function of the keys, so ranking per (_kb, keys)
+        # forms the same groups as ranking per keys; and a frame clustered
+        # by ``_kb`` already satisfies that window's distribution. One
+        # shuffle on ``_kb`` then serves both the rank and the bucketed
+        # write below (one file per bucket).
+        w = Window.partitionBy(BUCKET_COL, *key_cols).orderBy(*order)
         latest = (
-            silver.withColumn("_rn", F.row_number().over(w))
+            silver.repartition(F.col(BUCKET_COL))
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
@@ -445,7 +466,6 @@ class TableStore:
             latest = latest.filter(
                 ~F.coalesce(F.col(tombstone_col), F.lit(False))
             )
-        latest = latest.repartition(F.col(BUCKET_COL))
         gold_path = self._path("gold", table)
         if tombstone_col is not None:
             # dynamic overwrite only rewrites partitions PRESENT in the

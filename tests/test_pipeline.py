@@ -171,15 +171,22 @@ def test_pipeline_end_to_end_golden(spark, mock, cfg):
     assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
     assert res["watermark"] == 3
 
-    # the API serves one fan-out at a time: each fan-out's requests form
-    # one contiguous block, in cfg.children order, then deals, then deal
-    # children
-    blocks = []
-    for p in m.request_log:
-        parts = urllib.parse.urlparse(p).path.split("/")
-        if len(parts) == 6 and parts[3] in ("contacts", "deals") and blocks[-1:] != [parts[5]]:
-            blocks.append(parts[5])
-    assert blocks == [*cfg.children, "deals", *cfg.deal_children]
+    # two fan-out passes, one client at a time: every per-contact request
+    # (children and deals) comes before every per-deal request, no dim
+    # fetch falls inside either pass, and every child endpoint is asked
+    # for every parent it was asked for before
+    paths = [urllib.parse.urlparse(p).path for p in m.request_log]
+    contact_at = [i for i, p in enumerate(paths) if p.startswith("/api/3/contacts/")]
+    deal_at = [i for i, p in enumerate(paths) if p.startswith("/api/3/deals/")]
+    assert max(contact_at) < min(deal_at)
+    dim_paths = {f"/api/3/{d}" for d in cfg.dims}
+    dim_at = [i for i, p in enumerate(paths) if p in dim_paths]
+    for first, last in ((contact_at[0], contact_at[-1]), (deal_at[0], deal_at[-1])):
+        assert not [i for i in dim_at if first < i < last]
+    assert {paths[i] for i in contact_at + deal_at} == {
+        *(f"/api/3/contacts/{c}/{e}" for c in "123" for e in [*cfg.children, "deals"]),
+        *(f"/api/3/deals/{d}/{e}" for d in ("d1", "d2") for e in cfg.deal_children),
+    }
     assert res["children"]["activities"] == 3
     store = TableStore(spark, cfg.lake_root)
 
@@ -377,9 +384,9 @@ def test_failed_fanout_stops_run_cleanly(spark, mock, cfg, tmp_path, monkeypatch
         run_pipeline(spark, cfg, run_id="r2")
     at_raise = list(events)
     started = sorted(t for e, t in at_raise if e == "start")
-    # the fan-outs before contactTags had their persists started
-    assert {"contacts", "activities", "contactNotes"} <= set(started)
-    assert "contactTags" not in started
+    # contactTags fails inside the contact-level pass, before any child
+    # table's persist could start
+    assert not set(started) & {*cfg.children, "deals", *cfg.deal_children}
     assert started == sorted(t for e, t in at_raise if e == "end")
     time.sleep(1.0)
     assert events == at_raise  # nothing was left running

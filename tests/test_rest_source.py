@@ -192,9 +192,8 @@ def test_fetch_children_fanout(registered, mock):
     out = fetch_children(
         ids,
         base_url=url,
-        endpoint_template="api/3/contacts/{id}/activities",
-        collection="activities",
-        fields=["id", "tstamp", "reference_type"],
+        endpoint_template="api/3/contacts/{id}/{endpoint}",
+        endpoints={"activities": ["id", "tstamp", "reference_type"]},
         rate=10000,
         n_partitions=3,
     )
@@ -223,9 +222,8 @@ def test_fetch_children_respects_global_rate_budget(registered):
         out = fetch_children(
             ids,
             base_url=url,
-            endpoint_template="api/3/contacts/{id}/activities",
-            collection="activities",
-            fields=["id", "tstamp", "reference_type"],
+            endpoint_template="api/3/contacts/{id}/{endpoint}",
+            endpoints={"activities": ["id", "tstamp", "reference_type"]},
             rate=40.0,  # global budget; 4 partitions -> 10 req/s each
             n_partitions=4,
         )
@@ -265,9 +263,38 @@ def test_fetch_children_404_tolerant(registered, mock):
     out = fetch_children(
         ids,
         base_url=url,
-        endpoint_template="api/3/contacts/{id}/bounceLogs",
-        collection="bounceLogs",
-        fields=["id", "reason"],
+        endpoint_template="api/3/contacts/{id}/{endpoint}",
+        endpoints={"bounceLogs": ["id", "reason"]},
         rate=10000,
     )
     assert out.count() == 0  # 404 -> empty table, no error
+
+
+def test_fetch_children_several_endpoints_one_pass(registered, mock):
+    """One pass over a served endpoint and a 404 one: rows come only from
+    the served endpoint, each tagged with its endpoint and parent id, and
+    every (parent, endpoint) pair is requested once."""
+    m, url = mock
+    since = len(m.request_log)
+    ids = registered.createDataFrame([("1",), ("2",), ("4",)], "contact_id string")
+    out = fetch_children(
+        ids,
+        base_url=url,
+        endpoint_template="api/3/contacts/{id}/{endpoint}",
+        endpoints={"bounceLogs": ["id", "reason"], "activities": ["id", "tstamp"]},
+        rate=10000,
+        n_partitions=2,
+    )
+    assert out.columns == ["endpoint", "id", "reason", "tstamp", "contact_id"]
+    rows = sorted(tuple(r) for r in out.collect())
+    # contact i has i%3 activities (ids "<i>00<j>"); bounceLogs answers 404
+    assert rows == [
+        ("activities", "1000", None, "2020-02-01", "1"),
+        ("activities", "2000", None, "2020-02-01", "2"),
+        ("activities", "2001", None, "2020-02-02", "2"),
+        ("activities", "4000", None, "2020-02-01", "4"),
+    ]
+    paths = sorted(p.split("?")[0] for p in m.request_log[since:])
+    assert paths == sorted(
+        f"/api/3/contacts/{i}/{e}" for i in (1, 2, 4) for e in ("bounceLogs", "activities")
+    )

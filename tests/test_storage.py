@@ -8,6 +8,8 @@ The invariants the reference guarantees via full-master rewrites
 3. gold keeps exactly the newest row per key with deterministic ties.
 """
 
+import os
+
 import pytest
 
 from activecampaign_api_data_pipeline_spark.storage import TableStore, max_id_watermark
@@ -85,6 +87,65 @@ def test_split_equals_single_batch(spark, tmp_path):
     assert _silver_set(s_one, "t") == _silver_set(s_two, "t")
     assert _gold_map(s_one, "t") == _gold_map(s_two, "t")
     assert _gold_map(s_two, "t")["1"] == ("a2@x", "2020-02-01")
+
+
+def _files(root):
+    """Every file under ``root`` with its size and mtime."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            st = os.stat(os.path.join(d, n))
+            out[os.path.relpath(os.path.join(d, n), root)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_persist_empty_batch_writes_no_silver_or_gold(spark, store):
+    """An empty batch has nothing to dedup and no bucket to refresh: into
+    a new table it writes no silver and no gold; into an existing table it
+    leaves both untouched."""
+    empty = spark.createDataFrame([], SCHEMA)
+    res = store.persist(empty, "fresh", ["cid"], run_id="r1")
+    assert (res.n_delta, res.n_new_silver, res.touched_buckets) == (0, 0, [])
+    assert not os.path.exists(f"{store.root}/silver/fresh")
+    assert not os.path.exists(f"{store.root}/gold/fresh")
+
+    df = spark.createDataFrame(
+        _rows(("1", "a@x", "2020-01-01"), ("2", "b@x", "2020-01-02")), SCHEMA
+    )
+    store.persist(df, "contacts", ["cid"], run_id="r1", extracted_at="2020-06-01 00:00:00")
+    before = {layer: _files(f"{store.root}/{layer}/contacts") for layer in ("silver", "gold")}
+    silver, gold = _silver_set(store, "contacts"), _gold_map(store, "contacts")
+    res = store.persist(empty, "contacts", ["cid"], run_id="r2")
+    assert res.n_delta == 0 and res.n_new_silver == 0
+    after = {layer: _files(f"{store.root}/{layer}/contacts") for layer in ("silver", "gold")}
+    assert after == before
+    assert _silver_set(store, "contacts") == silver
+    assert _gold_map(store, "contacts") == gold
+
+
+def test_persist_onto_existing_table_job_budget(spark, store):
+    """A persist onto an existing table takes at most 8 Spark jobs: the
+    bronze and silver writes count their own rows and buckets (no count
+    actions), and the silver probe reads under a fixed schema (no footer
+    job)."""
+    sc = spark.sparkContext
+    first = spark.createDataFrame(
+        [(str(i), f"{i}@x", "2020-01-01") for i in range(50)], SCHEMA
+    )
+    store.persist(first, "t", ["cid"], run_id="r1", updated_col="udate")
+    batch = spark.createDataFrame(
+        [(str(i), f"{i}@y", "2020-01-02") for i in range(25, 80)], SCHEMA
+    )
+    sc.setJobGroup("persist-job-budget", "persist onto an existing table")
+    try:
+        res = store.persist(batch, "t", ["cid"], run_id="r2", updated_col="udate")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert (res.n_delta, res.n_new_silver) == (55, 55)
+    assert store.read("gold", "t").count() == 80
+    jobs = sc.statusTracker().getJobIdsForGroup("persist-job-budget")
+    assert 0 < len(jobs) <= 8, sorted(jobs)
 
 
 def test_gold_latest_per_key_with_updates_across_runs(spark, store):
