@@ -39,7 +39,14 @@ run touching k buckets rewrites k/n_buckets of gold, nothing else. Actions
 are few as well: the bronze and silver writes count their own rows and
 buckets as they run (``DataFrame.observe``), so no count job re-reads a
 batch, and an empty batch stops after bronze — it writes no silver and no
-gold.
+gold. A persist onto an existing table runs at most 8 Spark jobs. With
+``compact=True`` (the streaming sink's cadence), the gold refresh also
+compacts the batch's silver buckets from its own read: one ``_kb``
+exchange ranks them, one materialized copy feeds both the silver rewrite
+and the gold write, and the persist runs 10 jobs where a persist followed
+by :meth:`TableStore.compact_silver` ran 12. :meth:`TableStore.
+maybe_compact` measures fragmentation with an FS listing, so a healthy
+table costs no Spark job.
 
 Exactly-once under SAME-BATCH restart: every write is either per-run-
 partition idempotent (bronze: dynamic overwrite of ``run_id=<id>``),
@@ -125,13 +132,18 @@ def write_text_sidecar(spark: SparkSession, path: str, payload: str) -> None:
         out.close()
     if fs.exists(target):
         fs.delete(target, True)  # recursive: legacy layout is a directory
-    # Hadoop FileSystem.rename reports some failures by RETURNING false
-    # (not raising) — e.g. a missing parent on some implementations. At
-    # this point the old sidecar is already deleted, so a swallowed false
-    # would silently degrade the store to "incomplete" (forcing a
-    # rebuild) with no error surfaced. Make it loud.
-    if not fs.rename(tmp, target):
-        raise IOError(f"sidecar rename failed: {tmp} -> {target}")
+    # the old sidecar is already deleted: a swallowed rename failure would
+    # silently degrade the store to "incomplete" (forcing a rebuild)
+    _rename(fs, tmp, target)
+
+
+def _rename(fs, src, dst) -> None:
+    """``fs.rename`` that raises. Hadoop FileSystem.rename reports some
+    failures by RETURNING false (not raising) — e.g. a missing parent on
+    some implementations — and every caller here has already moved or
+    deleted something the rename was meant to replace."""
+    if not fs.rename(src, dst):
+        raise IOError(f"rename failed: {src} -> {dst}")
 
 
 def read_text_sidecar(spark: SparkSession, path: str) -> str | None:
@@ -230,7 +242,7 @@ def compact_artifact(
     # ---- heal prior crash ----
     if not fs.exists(P(path)):
         if fs.exists(P(staging)):  # crashed between the two renames
-            fs.rename(P(staging), P(path))
+            _rename(fs, P(staging), P(path))
         else:
             return False  # artifact genuinely absent
     if fs.exists(P(old)):
@@ -249,8 +261,8 @@ def compact_artifact(
     n_out = max(1, -(-total_bytes // target_bytes_per_file))  # ceil div
     # ---- rewrite + swap ----
     spark.read.parquet(path).coalesce(int(n_out)).write.mode("overwrite").parquet(staging)
-    fs.rename(P(path), P(old))
-    fs.rename(P(staging), P(path))
+    _rename(fs, P(path), P(old))
+    _rename(fs, P(staging), P(path))
     fs.delete(P(old), True)
     return True
 
@@ -300,6 +312,7 @@ class TableStore:
         updated_col: str | None = None,
         extracted_at: str | None = None,
         tombstone_col: str | None = None,
+        compact: bool = False,
     ) -> PersistResult:
         """Tri-destination persist (reference :134-188), incremental form.
 
@@ -313,6 +326,9 @@ class TableStore:
         a tombstone is excluded from gold — and a later upsert resurrects
         it. This is Delta/Hudi MERGE delete semantics at O(batch buckets)
         cost, since tombstones hash to the same buckets as their keys.
+        ``compact=True`` rewrites the batch's silver buckets as one file
+        each inside the gold refresh (:meth:`rebuild_gold`); an empty
+        batch compacts nothing.
         """
         content_cols = [c for c in df.columns if c not in LINEAGE_COLS]
         stamp = (
@@ -403,7 +419,7 @@ class TableStore:
             #    to the same buckets as their originals).
             self.rebuild_gold(
                 table, key_cols, updated_col, buckets=buckets,
-                tombstone_col=tombstone_col,
+                tombstone_col=tombstone_col, compact=compact,
             )
         finally:
             staged.unpersist()
@@ -416,6 +432,7 @@ class TableStore:
         updated_col: str | None = None,
         buckets: list[int] | None = None,
         tombstone_col: str | None = None,
+        compact: bool = False,
     ) -> None:
         """Recompute gold from silver for ``buckets`` (default: ALL).
 
@@ -427,10 +444,15 @@ class TableStore:
         can orphan bucket partitions; rebuild with ``buckets=None`` to
         restore the invariant). Cost is O(selected buckets), never
         O(store).
+
+        ``compact=True`` also compacts the selected silver buckets from the
+        same read: :meth:`compact_silver`'s rewrite clusters them by
+        ``_kb`` once, ranks them on that exchange and materializes them;
+        silver is overwritten from that copy as one file per bucket, and
+        gold is its rank-1 rows, with no second exchange. The silver
+        overwrite comes first; a crash before the gold write leaves
+        silver's rows unchanged, and re-running the refresh repairs gold.
         """
-        silver = self.read("silver", table)
-        if buckets is not None:
-            silver = silver.filter(F.col(BUCKET_COL).isin(buckets))
         order = []
         if updated_col is not None:
             order.append(F.col(updated_col).desc_nulls_last())
@@ -446,13 +468,15 @@ class TableStore:
         # by ``_kb`` already satisfies that window's distribution. One
         # shuffle on ``_kb`` then serves both the rank and the bucketed
         # write below (one file per bucket).
-        w = Window.partitionBy(BUCKET_COL, *key_cols).orderBy(*order)
-        latest = (
-            silver.repartition(F.col(BUCKET_COL))
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        rank = F.row_number().over(Window.partitionBy(BUCKET_COL, *key_cols).orderBy(*order))
+        if compact:
+            silver = self._compact(table, buckets, rank)
+        else:
+            silver = self.read("silver", table)
+            if buckets is not None:
+                silver = silver.filter(F.col(BUCKET_COL).isin(buckets))
+            silver = silver.repartition(F.col(BUCKET_COL)).withColumn("_rn", rank)
+        latest = silver.filter(F.col("_rn") == 1).drop("_rn")
         rebuilt = None
         if tombstone_col is not None:
             # drop keys whose LATEST row is a delete marker (after the
@@ -706,15 +730,31 @@ class TableStore:
         repaired by :meth:`rebuild_silver` from immutable bronze.
 
         Single-writer assumption: do not compact concurrently with a
-        ``persist`` to the same table.
+        ``persist`` to the same table. ``persist(compact=True)`` runs this
+        same rewrite inside its gold refresh (:meth:`rebuild_gold`).
         """
+        self._compact(table, buckets)
+
+    def _compact(
+        self, table: str, buckets: list[int] | None, rank: Column | None = None
+    ) -> DataFrame:
+        """The compaction write of :meth:`compact_silver`; returns the
+        materialized copy of the selected buckets it wrote. ``rank`` (a
+        window per ``(_kb, ...)``) is computed into ``_rn`` on the ``_kb``
+        exchange, before the copy: under adaptive execution the copy
+        reports no partitioning, so a window over it would shuffle
+        again."""
         silver = self.read("silver", table)
         if buckets is not None:
             silver = silver.filter(F.col(BUCKET_COL).isin(buckets))
-        snap = silver.repartition(F.col(BUCKET_COL)).localCheckpoint(eager=True)
-        snap.write.mode("overwrite").option(
+        snap = silver.repartition(F.col(BUCKET_COL))
+        if rank is not None:
+            snap = snap.withColumn("_rn", rank)
+        snap = snap.localCheckpoint(eager=True)
+        snap.drop("_rn").write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(BUCKET_COL).parquet(self._path("silver", table))
+        return snap
 
     def cluster_silver(
         self, table: str, sort_cols: list[str], buckets: list[int] | None = None
@@ -785,27 +825,39 @@ class TableStore:
         crosses the threshold (avg files per touched bucket >
         ``max_files_per_bucket``). Returns whether a rewrite ran.
 
-        The policy knob a scheduler calls after every ingest: cheap
-        metadata check (one count job over file names) when healthy, the
-        full :meth:`compact_silver` only when the small-file tax is real —
-        so continuous ingest amortizes rewrite cost against actual
+        The policy knob a scheduler calls after every ingest: a Hadoop FS
+        listing of the selected bucket directories when healthy (no Spark
+        job, as in :func:`compact_artifact`), the full
+        :meth:`compact_silver` only when the small-file tax is real — so
+        continuous ingest amortizes rewrite cost against actual
         fragmentation instead of a blind cadence.
         """
         path = self._path("silver", table)
         if not self._exists(path):
             return False
-        df = self.read("silver", table)
-        if buckets is not None:
-            df = df.filter(F.col(BUCKET_COL).isin(buckets))
-        row = (
-            df.select(F.col(BUCKET_COL), F.input_file_name().alias("_f"))
-            .agg(
-                F.countDistinct("_f").alias("files"),
-                F.countDistinct(F.col(BUCKET_COL)).alias("parts"),
-            )
-            .collect()[0]
+        P = self.spark._jvm.org.apache.hadoop.fs.Path
+        fs = P(path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        names = (
+            None if buckets is None else {f"{BUCKET_COL}={b}" for b in buckets}
         )
-        if row["parts"] == 0 or row["files"] <= max_files_per_bucket * row["parts"]:
+        dirs = [
+            st.getPath()
+            for st in fs.listStatus(P(path))
+            if st.isDirectory()
+            and st.getPath().getName().startswith(f"{BUCKET_COL}=")
+            and (names is None or st.getPath().getName() in names)
+        ]
+        # data files only: Spark's own listing skips "_" and "." names
+        per_bucket = [
+            sum(
+                1
+                for st in fs.listStatus(d)
+                if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+            )
+            for d in dirs
+        ]
+        parts = sum(1 for n in per_bucket if n)
+        if parts == 0 or sum(per_bucket) <= max_files_per_bucket * parts:
             return False
         self.compact_silver(table, buckets=buckets)
         return True
@@ -949,6 +1001,10 @@ class TableStore:
         once regardless of arrival order. Swap is write-tmp-then-rename —
         a reader never sees a half-written sketch; single writer is the
         caller's contract (holds inside foreachBatch by construction).
+
+        The prior sketch is read under the batch state's schema (the group
+        columns plus ``kmv array<bigint>``), which is the schema this
+        method wrote it with, so no footer job infers it.
         """
         from activecampaign_api_data_pipeline_spark.operators.curation import (
             kmv_merge,
@@ -958,7 +1014,7 @@ class TableStore:
         path = self._kmv_path(table, value_col)
         new = kmv_state(batch_df, value_col, group_cols, k)
         if self._exists(path):
-            old = self.spark.read.parquet(path)
+            old = self.spark.read.schema(new.schema).parquet(path)
             merged = kmv_merge(old, new, group_cols, k)
         else:
             merged = new
@@ -971,7 +1027,7 @@ class TableStore:
         fs = dst.getFileSystem(hconf)
         if fs.exists(dst):
             fs.delete(dst, True)
-        fs.rename(src, dst)
+        _rename(fs, src, dst)
 
     def kmv_stats(self, table: str, value_col: str, k: int = 32) -> DataFrame:
         """Distinct-count estimates from the persisted sketch."""

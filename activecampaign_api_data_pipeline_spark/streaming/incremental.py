@@ -25,10 +25,12 @@ backends (RocksDB at scale) are a config, not a code change.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from activecampaign_api_data_pipeline_spark.functions.hashing import hash60
 from activecampaign_api_data_pipeline_spark.storage import (
@@ -275,10 +277,15 @@ def stream_into_store(
     same idempotency argument as the reference's re-runs, continuously.
 
     ``compact_every=N`` folds silver small-file maintenance into the
-    ingest loop: after every Nth batch, the buckets THAT BATCH touched are
-    compacted (``TableStore.compact_silver``) — each micro-batch otherwise
-    appends one file per touched bucket forever. Compaction runs inside
-    foreachBatch, so the single-writer assumption holds by construction.
+    ingest loop: every Nth batch compacts the buckets THAT BATCH touched
+    — each micro-batch otherwise appends one file per touched bucket
+    forever. The compaction runs inside the batch's gold refresh
+    (``TableStore.persist(compact=True)``), on the same read of those
+    buckets, and inside foreachBatch, so the single-writer assumption
+    holds by construction. ``auto_compact_files=F`` is the stats-driven
+    alternative: after a batch that is not due, a Hadoop FS listing of
+    its buckets (no Spark job) triggers ``TableStore.maybe_compact`` only
+    when they hold more than F files each on average.
 
     ``kmv=(value_col, group_cols)`` additionally folds every batch into
     the store's persisted KMV distinct sketch
@@ -287,27 +294,42 @@ def stream_into_store(
     sketch observes RAW batches (bronze semantics); a batch replayed
     after a crash re-merges the same hashes, which the KMV union absorbs
     (idempotent by construction).
+
+    One trigger is one pass over the store. There is no emptiness probe:
+    ``persist`` counts the batch as its bronze write runs, and an empty
+    batch stops there (no silver, gold or compaction; its KMV fold leaves
+    the sketch's contents as they were). The KMV fold runs
+    on a driver-side thread beside ``persist``, carrying the query's job
+    group; the sink joins it before returning, so the batch commits only
+    after both writes, and an error in either fails the batch. With
+    ``compact_every=1`` and ``kmv``, a batch onto an existing table runs
+    14 Spark jobs: 10 for the persist with its compacting gold refresh
+    and 4 for the KMV fold (``tests/test_streaming.py`` pins the budget).
     """
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = store.persist(
-            batch_df,
-            table,
-            key_cols,
-            run_id=f"batch_{batch_id:08d}",
-            updated_col=updated_col,
-            tombstone_col=tombstone_col,
-        )
-        if kmv is not None:
-            store.update_kmv(table, batch_df, kmv[0], kmv[1])
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            store.compact_silver(table, buckets=res.touched_buckets)
-        elif auto_compact_files:
-            # stats-driven alternative to the blind cadence: a cheap
-            # metadata check per batch, rewrite only when the touched
-            # buckets actually fragmented past the threshold
+        due = bool(compact_every) and batch_id > 0 and batch_id % compact_every == 0
+        with ThreadPoolExecutor(max_workers=1, thread_name_prefix="stream_kmv") as pool:
+            folded = None
+            if kmv is not None:
+                folded = pool.submit(
+                    inheritable_thread_target(store.spark)(store.update_kmv),
+                    table, batch_df, kmv[0], kmv[1],
+                )
+            try:
+                res = store.persist(
+                    batch_df,
+                    table,
+                    key_cols,
+                    run_id=f"batch_{batch_id:08d}",
+                    updated_col=updated_col,
+                    tombstone_col=tombstone_col,
+                    compact=due,
+                )
+            finally:
+                if folded is not None:
+                    folded.result()
+        if auto_compact_files and not due and res.touched_buckets:
             store.maybe_compact(
                 table, auto_compact_files, buckets=res.touched_buckets
             )

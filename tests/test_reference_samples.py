@@ -1,8 +1,12 @@
 """Golden parity against the reference's OWN published demo fixtures.
 
-``/root/reference/samples/sample_contacts.csv`` and
-``sample_fact_activities.csv`` are the reference repo's checked-in demo
-of its AC-shaped surface (contacts + fact activities). This test runs
+``tests/fixtures/sample_contacts.csv`` and
+``sample_fact_activities.csv`` are copies of the reference repo's
+checked-in demo of its AC-shaped surface (contacts + fact activities),
+with the columns of FIXTURES.md §B1. Four values are reconstructed, not
+copied: Bob's email, row 1002's subject (empty) and both
+``event_time_local`` strings. No assert pins their text; Bob's email
+only has to agree between the two files. This test runs
 the rebuilt pipeline surface — all-string CSV source [S7], medallion
 persist [K2], conform union + dim enrichment + chatter/digest assembly
 (``plans.pipeline.build_ac_chatter``, reference
@@ -34,7 +38,7 @@ import pytest
 from activecampaign_api_data_pipeline_spark.plans.pipeline import build_ac_chatter
 from activecampaign_api_data_pipeline_spark.storage import TableStore
 
-SAMPLES = "/root/reference/samples"
+SAMPLES = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
 def _csv(spark, name):

@@ -561,6 +561,39 @@ def test_maybe_compact_stats_driven(spark, tmp_path):
     assert store.maybe_compact("t", max_files_per_bucket=2) is False
 
 
+def test_maybe_compact_healthy_table_runs_no_spark_job(spark, tmp_path):
+    """The fragmentation check is an FS listing: on a healthy table,
+    whole or bucket-selected, it starts no Spark job."""
+    from pyspark.sql import Row
+
+    store = TableStore(spark, str(tmp_path / "lake"), n_buckets=2)
+    store.persist(spark.createDataFrame([Row(id=i, v=i) for i in range(20)]), "t", ["id"], run_id="r1")
+    sc = spark.sparkContext
+    sc.setJobGroup("maybe-compact-healthy", "fragmentation check on a healthy table")
+    try:
+        assert store.maybe_compact("t", max_files_per_bucket=2) is False
+        assert store.maybe_compact("t", max_files_per_bucket=2, buckets=[0, 1]) is False
+        assert store.maybe_compact("missing", max_files_per_bucket=2) is False
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("maybe-compact-healthy")) == []
+
+
+def test_failed_rename_raises():
+    """Hadoop's FileSystem.rename can report failure by returning false;
+    the store's swaps (sidecars, KMV sketch, artifact compaction) raise."""
+    from activecampaign_api_data_pipeline_spark.storage import _rename
+
+    class RefusingFS:
+        def rename(self, src, dst):
+            return False
+
+    with pytest.raises(IOError, match="rename failed: a -> b"):
+        _rename(RefusingFS(), "a", "b")
+
+
 def test_vacuum_bronze_retention(spark, tmp_path):
     from pyspark.sql import Row
 

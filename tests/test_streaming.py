@@ -533,6 +533,123 @@ def test_stream_into_store_auto_compact(spark, stream_dir, tmp_path):
     assert store.read("silver", "ev").count() == 12
 
 
+def _upsert_batches(spark, stream_dir, n=3):
+    """``n`` files, one micro-batch each: batch b re-versions keys 1-6
+    (newer ts) and adds keys 10b+7, 10b+8, so every batch touches every
+    bucket of a 2-bucket store and gold has updates to resolve."""
+    for b in range(n):
+        rows = [(k, f"2020-01-0{b + 1} 00:00:00", k % 3, f"v{b}", float(b)) for k in range(1, 7)]
+        rows += [(10 * b + k, "2020-01-01 00:00:00", 9, "n", 0.0) for k in (7, 8)]
+        _write_batch(_rows(spark, *rows), stream_dir, b)
+
+
+def _ingest(spark, stream_dir, store, checkpoint, **kw):
+    q = stream_into_store(
+        _start_stream(spark, stream_dir), store, "ev", key_cols=["id"],
+        checkpoint=checkpoint, updated_col="ts", **kw,
+    )
+    assert q.awaitTermination(180)
+    return q
+
+
+def _layers(spark, store):
+    """Every layer's rows without ``extracted_at`` (the ingest time, which
+    differs between two runs of the same batches), plus the KMV sketch.
+    Columns are selected by name: a merged-schema read takes their order
+    from the files it reads, which can differ between two stores."""
+    def rows(layer):
+        df = store.read(layer, "ev").drop("extracted_at")
+        return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+    kmv = spark.read.parquet(store._kmv_path("ev", "kind")).collect()
+    return {
+        "bronze": rows("bronze"),
+        "silver": rows("silver"),
+        "gold": rows("gold"),
+        "kmv": sorted((r["user_id"], tuple(r["kmv"])) for r in kmv),
+    }
+
+
+def _silver_files_per_bucket(store):
+    import glob
+    import os
+
+    return {
+        os.path.basename(d): len(glob.glob(f"{d}/part-*.parquet"))
+        for d in glob.glob(f"{store.root}/silver/ev/_kb=*")
+    }
+
+
+def test_stream_into_store_job_budget_per_batch(spark, stream_dir, tmp_path):
+    """With ``compact_every=1`` and ``kmv``, a micro-batch onto an existing
+    table runs at most 14 Spark jobs under the query's job group: no
+    emptiness probe, the compaction shares the gold refresh's read and
+    exchange, and the KMV fold (on a thread that inherits the job group)
+    reads its prior sketch under a fixed schema."""
+    import collections
+
+    _upsert_batches(spark, stream_dir)
+    store = TableStore(spark, str(tmp_path / "lake"), n_buckets=2)
+    q = _ingest(spark, stream_dir, store, str(tmp_path / "ckpt"),
+                compact_every=1, kmv=("kind", ["user_id"]))
+    assert q.exception() is None
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    status = sc._jsc.sc().statusStore()
+    per_batch = collections.Counter()
+    for jid in sc.statusTracker().getJobIdsForGroup(str(q.runId)):
+        desc = status.job(jid).description()
+        # the stream sets "... batch = <id>" as every batch job's description
+        per_batch[desc.get().rsplit("batch = ", 1)[-1] if desc.isDefined() else None] += 1
+    assert set(per_batch) == {"0", "1", "2"}, per_batch
+    assert max(per_batch["1"], per_batch["2"]) <= 14, per_batch
+
+
+def test_stream_into_store_compacting_batch_one_file_per_bucket(spark, stream_dir, tmp_path):
+    """A compacting micro-batch leaves one silver file per bucket it
+    touched, and the store's rows equal those of an uncompacted ingest."""
+    _upsert_batches(spark, stream_dir)
+    plain = TableStore(spark, str(tmp_path / "plain"), n_buckets=2)
+    _ingest(spark, stream_dir, plain, str(tmp_path / "ck_plain"), kmv=("kind", ["user_id"]))
+    compacted = TableStore(spark, str(tmp_path / "compacted"), n_buckets=2)
+    _ingest(spark, stream_dir, compacted, str(tmp_path / "ck_comp"),
+            compact_every=1, kmv=("kind", ["user_id"]))
+    assert set(_silver_files_per_bucket(plain).values()) == {3}  # one file per batch
+    assert _silver_files_per_bucket(compacted) == {"_kb=0": 1, "_kb=1": 1}
+    assert _layers(spark, compacted) == _layers(spark, plain)
+
+
+def test_stream_into_store_crash_between_compaction_and_gold(
+    spark, stream_dir, tmp_path, monkeypatch
+):
+    """A crash after the compacting refresh has overwritten silver, before
+    it writes gold, fails the batch; the restarted query replays it and
+    the store ends equal to a run without the crash."""
+    from pyspark.errors import StreamingQueryException
+
+    _upsert_batches(spark, stream_dir)
+    kw = dict(compact_every=1, kmv=("kind", ["user_id"]))
+    clean = TableStore(spark, str(tmp_path / "clean"), n_buckets=2)
+    _ingest(spark, stream_dir, clean, str(tmp_path / "ck_clean"), **kw)
+
+    compact = TableStore._compact
+
+    def crash_after_silver_overwrite(self, *args, **kwargs):
+        compact(self, *args, **kwargs)
+        raise RuntimeError("injected crash between silver overwrite and gold write")
+
+    store = TableStore(spark, str(tmp_path / "crashed"), n_buckets=2)
+    monkeypatch.setattr(TableStore, "_compact", crash_after_silver_overwrite)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        _ingest(spark, stream_dir, store, str(tmp_path / "ck"), **kw)
+    monkeypatch.undo()
+    # batch 1 compacted silver, then died before gold and before its commit
+    assert _silver_files_per_bucket(store) == {"_kb=0": 1, "_kb=1": 1}
+    q = _ingest(spark, stream_dir, store, str(tmp_path / "ck"), **kw)
+    assert q.exception() is None
+    assert _layers(spark, store) == _layers(spark, clean)
+
+
 def test_stream_into_minhash_store(spark, tmp_path):
     """Streamed corpus dedup: near-dups of earlier batches are reported
     as later batches arrive; the store grows replay-safely."""
