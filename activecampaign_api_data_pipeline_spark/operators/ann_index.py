@@ -46,6 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from activecampaign_api_data_pipeline_spark.storage import (
+    _heal,
+    _swap,
     read_text_sidecar,
     write_text_sidecar,
 )
@@ -385,13 +387,12 @@ def vacuum_ann_index(spark: SparkSession, path: str) -> None:
     clear the ledger — the LSM-style reclaim that bounds the per-search
     anti-join cost after many deletes.
 
-    Crash-safe via the staging/rename discipline shared with every
-    compaction in this repo (recovery branch BEFORE any delete: live
-    missing + staging present → staging renames back in). The ledger is
-    removed LAST, so every intermediate crash state still reads
-    correctly: until both artifact swaps complete, the surviving
-    tombstones keep hiding the ids (the anti-join is simply vacuous for
-    an already-vacuumed artifact), and a re-run completes the job."""
+    Each artifact is staged at ``<artifact>__compacting`` and committed
+    under ``storage``'s "Commit protocol". The ledger is removed LAST, so
+    every intermediate crash state still reads correctly: until both
+    artifact swaps complete, the surviving tombstones keep hiding the ids
+    (the anti-join is simply vacuous for an already-vacuumed artifact),
+    and a re-run completes the job."""
     p = load_ann_params(spark, path)
     _vacuum_artifacts(spark, path, p.id_col, ("cells", "codes"))
 
@@ -406,34 +407,19 @@ def _vacuum_artifacts(
     tomb = F.broadcast(
         spark.read.parquet(f"{path}/tombstones").select(id_col).distinct()
     )
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-
     for art in arts:
         live = f"{path}/{art}"
-        staging, old = f"{live}__compacting", f"{live}__old"
-        if not fs.exists(P(live)):
-            if fs.exists(P(staging)):  # crashed between the two renames
-                fs.rename(P(staging), P(live))
-                # Fall through and re-vacuum against the CURRENT ledger
-                # (vacuous if already applied): the restored staging was
-                # built from the ledger AS OF the crashed run, so any
-                # tombstones appended since must still be absorbed before
-                # the ledger delete below — `continue` here would erase
-                # them unapplied, silently resurrecting deleted vectors.
-            else:
-                raise FileNotFoundError(f"vacuum: no artifact at {live}")
-        if fs.exists(P(old)):
-            fs.delete(P(old), True)
-        if fs.exists(P(staging)):
-            fs.delete(P(staging), True)
+        staging = f"{live}__compacting"
+        # A copy rolled forward by _heal was built from the ledger AS OF
+        # the crashed run: re-vacuum it against the CURRENT ledger (vacuous
+        # if already applied) before the ledger delete below, or tombstones
+        # appended since would be erased unapplied, resurrecting vectors.
+        if not _heal(spark, live, staging):
+            raise FileNotFoundError(f"vacuum: no artifact at {live}")
         kept = spark.read.parquet(live).join(tomb, id_col, "left_anti")
         kept.write.mode("overwrite").parquet(staging)
-        fs.rename(P(live), P(old))
-        fs.rename(P(staging), P(live))
-        fs.delete(P(old), True)
-    fs.delete(P(f"{path}/tombstones"), True)
+        _swap(spark, live, staging)
+    _clear_tombstones(spark, path)
 
 
 def delete_sq8_index(spark: SparkSession, path: str, ids) -> None:

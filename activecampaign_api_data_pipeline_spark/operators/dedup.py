@@ -19,6 +19,8 @@ Design for scale:
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -931,31 +933,6 @@ def _legacy_backfill_guard(spark, path: str, num_perm: int, bands: int) -> None:
             )
 
 
-def _write_minhash_params(spark, path: str, spec: dict) -> None:
-    """Atomic sidecar write: Hadoop tmp-file create + rename (the
-    matview ``_write_params`` pattern — r11 advice: the old
-    coalesce(1).write.text left a partial directory on crash). The
-    recursive delete also replaces a legacy DIRECTORY-shaped sidecar
-    (pre-r12 text-dir layout) with the single-file layout;
-    ``spark.read.text`` reads both."""
-    import json as _json
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(hconf)
-    tmp, final = P(f"{path}/_building_params.json"), P(f"{path}/params.json")
-    out = fs.create(tmp, True)
-    out.write(bytearray(_json.dumps(spec, sort_keys=True).encode()))
-    out.close()
-    if fs.exists(final):
-        fs.delete(final, True)
-    # rename failures can be reported by RETURNING false; the old
-    # sidecar is already deleted, so surface them (storage.write_text_sidecar)
-    if not fs.rename(tmp, final):
-        raise IOError(f"params rename failed: {tmp} -> {final}")
-
-
 def minhash_store_append(
     docs: DataFrame,
     path: str,
@@ -1004,7 +981,10 @@ def minhash_store_append(
         # (r11 verdict: a later mismatched-banding probe must raise, not
         # silently find no candidates). Written AFTER the sigs append
         # succeeds (sidecar-last), atomically.
-        _write_minhash_params(spark, path, _minhash_spec(num_perm, bands, ngram))
+        write_text_sidecar(
+            spark, f"{path}/params.json",
+            json.dumps(_minhash_spec(num_perm, bands, ngram), sort_keys=True),
+        )
 
 
 def incremental_minhash_pairs(
@@ -1055,7 +1035,10 @@ def incremental_minhash_pairs(
         # later mismatched probe raises instead of silently missing —
         # gated on the stored artifacts actually matching this spec
         _legacy_backfill_guard(spark, path, num_perm, bands)
-        _write_minhash_params(spark, path, _minhash_spec(num_perm, bands, ngram))
+        write_text_sidecar(
+            spark, f"{path}/params.json",
+            json.dumps(_minhash_spec(num_perm, bands, ngram), sort_keys=True),
+        )
     sh = _shingle_sets(new_docs, id_col, text_col, ngram)
     new_sigs = minhash_signatures(sh, num_perm)
     new_bands = _banded(new_sigs, num_perm, bands)

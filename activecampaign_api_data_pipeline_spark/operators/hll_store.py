@@ -49,15 +49,17 @@ the maintained-view family for 100 TB distinct-count dashboards.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from activecampaign_api_data_pipeline_spark.operators.matview import (
-    _write_params,
     applied_batches_full,
     compact_with_fold,
     load_matview_params,
 )
+from activecampaign_api_data_pipeline_spark.storage import write_text_sidecar
 
 
 def _sketch_partials(
@@ -89,8 +91,9 @@ def build_hll_view(
     spark = facts.sparkSession
     partials = _sketch_partials(key_cols, col, lg_k, batch_key)(facts)
     partials.write.mode("overwrite").parquet(f"{path}/partials")
-    _write_params(
-        spark, path, {"key_cols": list(key_cols), "col": col, "lg_k": lg_k}
+    write_text_sidecar(
+        spark, f"{path}/params.json",
+        json.dumps({"key_cols": list(key_cols), "col": col, "lg_k": lg_k}, sort_keys=True),
     )
 
 
@@ -136,8 +139,8 @@ def read_hll_view(spark: SparkSession, path: str) -> DataFrame:
 
 def compact_hll_view(spark: SparkSession, path: str) -> None:
     """Fold all partials into one sketch per key (tag ``__compacted__``)
-    through :func:`matview.compact_with_fold` — the shared crash-safe
-    swap (mid-swap recovery branch, ledger-before-swap) with the HLL
+    through :func:`matview.compact_with_fold` — the shared compaction
+    (ledger-before-swap, ``storage``'s "Commit protocol") with the HLL
     union as the fold. The stored binary is the union result itself, so
     reads are bit-identical before/after (measured: estimate(folded) ==
     estimate(union of originals))."""

@@ -33,6 +33,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from activecampaign_api_data_pipeline_spark.storage import _heal, _swap
+
 MANIFEST = "_manifest"
 
 
@@ -169,41 +171,16 @@ def optimize_zorder(
 ) -> None:
     """Re-cluster a table that has taken unclustered appends — the
     ``OPTIMIZE ZORDER`` maintenance step: read the live files (clustered
-    base + appended stragglers), rewrite the whole set Morton-ordered
-    through the crash-safe staging/rename swap (the
-    ``compact_text_index`` discipline), then rebuild the manifest so
-    every file is skippable again. Single-writer contract; a reader
-    racing the swap can observe a brief path-not-found and should
-    retry — never duplicate or partial rows.
-
-    Crash recovery (the ``compact_text_index`` branch, checked BEFORE any
-    delete): a crash between ``rename(path→old)`` and
-    ``rename(staging→path)`` leaves the live path missing with a
-    COMPLETE staging copy (staging is only ever renamed in after its
-    write finished) — rename it back in and rebuild its manifest (the
-    crashed run died before writing one), then clear the stale ``__old``.
-    Without this branch a re-run would delete both surviving copies and
-    destroy the table."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-
-    def P(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    fs = P(path).getFileSystem(hconf)
-    staging, old = f"{path}__optimizing", f"{path}__old"
-    if not fs.exists(P(path)):
-        if fs.exists(P(staging)):
-            fs.rename(P(staging), P(path))
-            _write_manifest(spark, path, col_a, col_b)
-        else:
-            raise FileNotFoundError(
-                f"optimize_zorder: no live table at {path} and no staging copy"
-            )
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    if fs.exists(P(staging)):
-        fs.delete(P(staging), True)
+    base + appended stragglers), rewrite the whole set Morton-ordered to
+    ``{path}__optimizing``, commit it under ``storage``'s "Commit
+    protocol", then rebuild the manifest so every file is skippable
+    again. A copy rolled forward after a crash between the renames has
+    no manifest; the full run that follows rewrites it and builds one."""
+    staging = f"{path}__optimizing"
+    if not _heal(spark, path, staging):
+        raise FileNotFoundError(
+            f"optimize_zorder: no live table at {path} and no staging copy"
+        )
     zv = morton_value(F.col(col_a), F.col(col_b), bits)
     (
         spark.read.parquet(path)
@@ -214,9 +191,7 @@ def optimize_zorder(
         .write.mode("overwrite")
         .parquet(staging)
     )
-    fs.rename(P(path), P(old))
-    fs.rename(P(staging), P(path))
-    fs.delete(P(old), True)
+    _swap(spark, path, staging)
     _write_manifest(spark, path, col_a, col_b)
 
 

@@ -15,7 +15,6 @@ Layout (the ``text_index``/``ann_index`` sidecar discipline):
       partials/                parquet: key cols + partial agg cols
                                + ``_batch`` (ingest provenance)
       params.json              frozen spec: key cols + measure col
-      _building_params.json    mid-build marker (never false-matches)
 
 Contracts:
 
@@ -54,6 +53,13 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from activecampaign_api_data_pipeline_spark.storage import (
+    _heal,
+    _swap,
+    read_text_sidecar,
+    write_text_sidecar,
+)
 
 COMPACTED = "__compacted__"
 
@@ -242,43 +248,17 @@ def build_matview_multi(
         "_batch", F.lit(batch_key)
     )
     partials.write.mode("overwrite").parquet(f"{path}/partials")
-    _write_params(
-        spark, path, {"key_cols": list(key_cols), "spec": list(spec)}
+    write_text_sidecar(
+        spark, f"{path}/params.json",
+        json.dumps({"key_cols": list(key_cols), "spec": list(spec)}, sort_keys=True),
     )
 
 
-def _write_params(spark: SparkSession, path: str, params: dict) -> None:
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(hconf)
-    tmp, final = P(f"{path}/_building_params.json"), P(f"{path}/params.json")
-    out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps(params, sort_keys=True).encode()))
-    out.close()
-    if fs.exists(final):
-        fs.delete(final, False)
-    # rename failures can be reported by RETURNING false; the old
-    # sidecar is already deleted, so surface them (storage.write_text_sidecar)
-    if not fs.rename(tmp, final):
-        raise IOError(f"params rename failed: {tmp} -> {final}")
-
-
 def load_matview_params(spark: SparkSession, path: str) -> dict:
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(hconf)
-    stream = fs.open(P(f"{path}/params.json"))
-    try:
-        data = bytes(
-            stream.readAllBytes()
-            if hasattr(stream, "readAllBytes")
-            else jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
-    finally:
-        stream.close()
-    return json.loads(data.decode())
+    raw = read_text_sidecar(spark, f"{path}/params.json")
+    if raw is None:
+        raise FileNotFoundError(f"no params sidecar at {path}/params.json")
+    return json.loads(raw)
 
 
 def build_matview(
@@ -303,7 +283,7 @@ def build_matview(
             raise ValueError(f"extra_params may not shadow {sorted(clash)}")
         params.update(extra_params)
     partials.write.mode("overwrite").parquet(f"{path}/partials")
-    _write_params(spark, path, params)
+    write_text_sidecar(spark, f"{path}/params.json", json.dumps(params, sort_keys=True))
 
 
 def applied_batches(spark: SparkSession, path: str) -> set[str]:
@@ -387,33 +367,20 @@ def read_matview(spark: SparkSession, path: str) -> DataFrame:
 
 
 def compact_with_fold(spark: SparkSession, path: str, fold, op: str) -> None:
-    """The crash-safe compaction swap SHARED by every matview-layout
-    store (scalar partials here, HLL sketch partials in
-    ``hll_store``): recovery branch BEFORE any delete (live missing +
-    staging present → staging renames back in — staging is only ever
-    renamed after its write completed), stale-dir cleanup, fold to
-    staging via the caller's ``fold(partials_df, params) -> folded_df``
-    (``_batch`` tag appended here), applied-ledger write BEFORE the
-    swap (if the crash lands between the renames, the recovery branch
-    restores the folded copy whose only live tag is ``__compacted__`` —
-    the replay guard must already know the folded keys; recording them
-    early is harmless on a pre-swap crash since the same keys are still
-    live tags and the union is idempotent), then the double rename."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
+    """The compaction SHARED by every matview-layout store (scalar
+    partials here, HLL sketch partials in ``hll_store``): fold to
+    ``partials__compacting`` via the caller's ``fold(partials_df, params)
+    -> folded_df`` (``_batch`` tag appended here) and commit it under
+    ``storage``'s "Commit protocol". The applied ledger is written BEFORE
+    the swap: if the crash lands between the renames, the rolled-forward
+    copy's only live tag is ``__compacted__``, so the replay guard must
+    already know the folded keys; recording them early is harmless on a
+    pre-swap crash since the same keys are still live tags and the union
+    is idempotent."""
     live = f"{path}/partials"
-    staging, old = f"{live}__compacting", f"{live}__old"
-    fs = P(live).getFileSystem(hconf)
-    if not fs.exists(P(live)):
-        if fs.exists(P(staging)):  # crashed between the two renames
-            fs.rename(P(staging), P(live))
-        else:
-            raise FileNotFoundError(f"{op}: no partials at {path}")
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    if fs.exists(P(staging)):
-        fs.delete(P(staging), True)
+    staging = f"{live}__compacting"
+    if not _heal(spark, live, staging):
+        raise FileNotFoundError(f"{op}: no partials at {path}")
     p = load_matview_params(spark, path)
     seen = sorted(applied_batches(spark, path))
     folded = fold(spark.read.parquet(live), p).withColumn(
@@ -421,19 +388,15 @@ def compact_with_fold(spark: SparkSession, path: str, fold, op: str) -> None:
     )
     folded.coalesce(1).write.mode("overwrite").parquet(staging)
     p["applied"] = sorted((set(p.get("applied", [])) | set(seen)) - {COMPACTED})
-    _write_params(spark, path, p)
-    fs.rename(P(live), P(old))
-    fs.rename(P(staging), P(live))
-    fs.delete(P(old), True)
+    write_text_sidecar(spark, f"{path}/params.json", json.dumps(p, sort_keys=True))
+    _swap(spark, live, staging)
 
 
 def compact_matview(spark: SparkSession, path: str) -> None:
     """Fold all partials into one row per key (batch tag
-    ``__compacted__``) through the crash-safe staging/rename swap
-    (:func:`compact_with_fold` — the ``compact_text_index`` discipline,
-    including the mid-swap recovery branch). Merge associativity makes
-    the read bit-identical before/after; only partials-row and file
-    counts drop. Batch keys folded into ``__compacted__`` stay
+    ``__compacted__``) through :func:`compact_with_fold`. Merge
+    associativity makes the read bit-identical before/after; only
+    partials-row and file counts drop. Batch keys folded into ``__compacted__`` stay
     replay-guarded via the ``applied`` ledger in ``params.json``."""
 
     def fold(partials: DataFrame, p: dict) -> DataFrame:

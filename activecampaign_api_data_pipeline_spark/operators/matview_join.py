@@ -55,39 +55,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from activecampaign_api_data_pipeline_spark.operators import matview as MV
-
-
-def _write_params(spark: SparkSession, path: str, params: dict) -> None:
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(P(path))
-    tmp, final = P(f"{path}/_building_params.json"), P(f"{path}/params.json")
-    out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps(params, sort_keys=True).encode()))
-    out.close()
-    if fs.exists(final):
-        fs.delete(final, False)
-    # rename failures can be reported by RETURNING false; the old
-    # sidecar is already deleted, so surface them (storage.write_text_sidecar)
-    if not fs.rename(tmp, final):
-        raise IOError(f"params rename failed: {tmp} -> {final}")
+from activecampaign_api_data_pipeline_spark.storage import (
+    _heal,
+    _swap,
+    read_text_sidecar,
+    write_text_sidecar,
+)
 
 
 def load_join_params(spark: SparkSession, path: str) -> dict:
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(P(f"{path}/params.json"))
-    try:
-        data = bytes(
-            stream.readAllBytes()
-            if hasattr(stream, "readAllBytes")
-            else jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
-    finally:
-        stream.close()
-    return json.loads(data.decode())
+    raw = read_text_sidecar(spark, f"{path}/params.json")
+    if raw is None:
+        raise FileNotFoundError(f"no params sidecar at {path}/params.json")
+    return json.loads(raw)
 
 
 def _spec_source_cols(spec: list[dict]) -> list[str]:
@@ -133,7 +113,7 @@ def create_join_view(
         params["spec"] = list(spec)
     else:
         params["measure"] = measure
-    _write_params(spark, path, params)
+    write_text_sidecar(spark, f"{path}/params.json", json.dumps(params, sort_keys=True))
 
 
 def _applied(spark: SparkSession, path: str, p: dict) -> set[str]:
@@ -199,7 +179,7 @@ def append_join_side(
         # directory has no parquet footers and would break every later
         # history read with UNABLE_TO_INFER_SCHEMA (hypothesis-caught)
         p["applied"] = sorted(set(p.get("applied", [])) | {key})
-        _write_params(spark, path, p)
+        write_text_sidecar(spark, f"{path}/params.json", json.dumps(p, sort_keys=True))
         return True
     (
         # exactly one task per bucket: file sets align 1:1 with the hive
@@ -253,7 +233,7 @@ def append_join_side(
         # no partials row carries this key — ledger it here so a replay
         # against grown opposite history cannot double-count
         p["applied"] = sorted(set(p.get("applied", [])) | {key})
-        _write_params(spark, path, p)
+        write_text_sidecar(spark, f"{path}/params.json", json.dumps(p, sort_keys=True))
     return True
 
 
@@ -278,27 +258,13 @@ def compact_join_history(spark: SparkSession, path: str, side: str) -> None:
     a join), so every future delta is bit-identical; bucket partitioning
     and the in-bucket join-key sort are preserved, and the replay guard
     is untouched because it never consults history dirs (view tags +
-    params ledger only). Crash-safe via the staging/rename discipline,
-    including the mid-swap recovery branch (live missing + staging
-    present → staging renames back in before any delete)."""
+    params ledger only). Staged at ``<side>__compacting`` and committed
+    under ``storage``'s "Commit protocol"."""
     assert side in ("a", "b")
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    hconf = spark._jsc.hadoopConfiguration()
     live = f"{path}/{side}"
-    fs = P(live).getFileSystem(hconf)
-    staging, old = f"{live}__compacting", f"{live}__old"
-    if not fs.exists(P(live)):
-        if fs.exists(P(staging)):  # crashed between the two renames
-            fs.rename(P(staging), P(live))
-            if fs.exists(P(old)):
-                fs.delete(P(old), True)
-            return
+    staging = f"{live}__compacting"
+    if not _heal(spark, live, staging):
         raise FileNotFoundError(f"compact_join_history: no history at {live}")
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    if fs.exists(P(staging)):
-        fs.delete(P(staging), True)
     p = load_join_params(spark, path)
     hist = spark.read.option("basePath", live).parquet(live).drop("batch")
     (
@@ -308,6 +274,4 @@ def compact_join_history(spark: SparkSession, path: str, side: str) -> None:
         .partitionBy("bucket")
         .parquet(f"{staging}/batch=__compacted__")
     )
-    fs.rename(P(live), P(old))
-    fs.rename(P(staging), P(live))
-    fs.delete(P(old), True)
+    _swap(spark, live, staging)

@@ -58,6 +58,8 @@ from pyspark.sql import functions as F
 from activecampaign_api_data_pipeline_spark.functions.text import tokens
 from activecampaign_api_data_pipeline_spark.operators.ann_index import _write
 from activecampaign_api_data_pipeline_spark.storage import (
+    _heal,
+    _swap,
     read_text_sidecar,
     write_text_sidecar,
 )
@@ -313,32 +315,17 @@ def compact_text_index(
     only file count and clustering change. ``stats`` stays untouched
     (the frozen-normalization contract).
 
-    Crash-safe via the same staging/rename discipline as
-    ``storage.compact_artifact`` (write ``__compacting``, rename live
-    aside, rename staging in, drop the old copy — single-writer
-    contract); that helper is not reused directly because it coalesces
-    blindly, and an index wants term-clustered output.
+    Each artifact is staged at ``<artifact>__compacting`` and committed
+    under ``storage``'s "Commit protocol" (not ``storage.compact_artifact``
+    itself: that coalesces blindly, and an index wants term-clustered
+    output).
     """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-
-    def P(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
     params = load_text_params(spark, path)
     for artifact, key in (("postings", "tok"), ("doclen", "doc_id")):
         live = f"{path}/{artifact}"
-        staging, old = f"{live}__compacting", f"{live}__old"
-        fs = P(live).getFileSystem(hconf)
-        if not fs.exists(P(live)):
-            if fs.exists(P(staging)):  # crashed between the two renames
-                fs.rename(P(staging), P(live))
-            else:
-                continue
-        if fs.exists(P(old)):
-            fs.delete(P(old), True)
-        if fs.exists(P(staging)):
-            fs.delete(P(staging), True)
+        staging = f"{live}__compacting"
+        if not _heal(spark, live, staging):
+            continue
         if artifact == "postings":
             _write_postings_bucketed(
                 spark.read.parquet(live).select("tok", "doc_id", "tf"),
@@ -354,9 +341,7 @@ def compact_text_index(
                 .write.mode("overwrite")
                 .parquet(staging)
             )
-        fs.rename(P(live), P(old))
-        fs.rename(P(staging), P(live))
-        fs.delete(P(old), True)
+        _swap(spark, live, staging)
     if params.tok_buckets != tok_buckets:
         # layout upgrade (or re-bucket): record the new bucket count LAST,
         # after the postings swap — every intermediate crash state reads

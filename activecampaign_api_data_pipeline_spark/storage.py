@@ -68,6 +68,25 @@ Determinism: gold ordering is an explicit total order
 (updated_col DESC, extracted_at DESC, run_id DESC, _row_hash DESC) — the
 reference leans on pandas' stable mergesort file order (:186), which has no
 distributed equivalent (SURVEY.md §7.3).
+
+Commit protocol: every artifact that is replaced whole — a compacted or
+vacuumed directory, a Z-ordered table, a KMV sketch, a text sidecar — is
+committed by :func:`_swap`: write the complete new copy to a staging
+name, rename the live copy to ``<live>__old``, rename staging in, delete
+``__old``. Every rename is checked (:func:`_rename`) and nothing is
+deleted before its replacement is in place, so a crash leaves one of
+three states, each healed by :func:`_heal` on the writer's next call:
+staging beside a live copy (pre-commit: staging is dropped); live
+missing with staging present (between the renames: staging rolls
+forward); ``__old`` beside a live copy (post-commit: ``__old`` is
+dropped). Live is renamed aside only after the staging write finished,
+so a rolled-forward copy is complete — except after a crash inside the FIRST
+write of a sidecar or KMV sketch, whose writer then replaces that copy
+(a sidecar) or folds the replayed batch into it (a sketch: the fold is
+idempotent). Contract: a single writer per artifact (the contract the
+appending sinks already require); a reader racing the two renames can
+see a brief path-not-found and should retry — never partial or
+duplicated rows.
 """
 
 from __future__ import annotations
@@ -101,6 +120,50 @@ class PersistResult:
     new_silver_buckets: list[int]
 
 
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem holding ``path``, Hadoop ``Path`` constructor)."""
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
+
+
+def _rename(fs, src, dst) -> None:
+    """``fs.rename`` that raises. Hadoop FileSystem.rename reports some
+    failures by RETURNING false (not raising) — e.g. a missing parent on
+    some implementations. The only rename in the package: every commit
+    goes through :func:`_heal` / :func:`_swap`."""
+    if not fs.rename(src, dst):
+        raise IOError(f"rename failed: {src} -> {dst}")
+
+
+def _heal(spark: SparkSession, live: str, staging: str) -> bool:
+    """Finish or undo a crashed commit of ``live`` (a directory or a
+    file; module docstring, "Commit protocol"). Returns whether ``live``
+    exists afterwards; the caller decides what an absent artifact
+    means."""
+    fs, P = _fs(spark, live)
+    if not fs.exists(P(live)):
+        if not fs.exists(P(staging)):
+            return False
+        _rename(fs, P(staging), P(live))
+    for leftover in (f"{live}__old", staging):
+        if fs.exists(P(leftover)):
+            fs.delete(P(leftover), True)
+    return True
+
+
+def _swap(spark: SparkSession, live: str, staging: str) -> None:
+    """Commit the complete copy at ``staging`` as ``live`` (module
+    docstring, "Commit protocol"). The caller heals first."""
+    fs, P = _fs(spark, live)
+    old = f"{live}__old"
+    had_live = fs.exists(P(live))
+    if had_live:
+        _rename(fs, P(live), P(old))
+    _rename(fs, P(staging), P(live))
+    if had_live:
+        fs.delete(P(old), True)
+
+
 def write_text_sidecar(spark: SparkSession, path: str, payload: str) -> None:
     """One-file text sidecar via direct FileSystem ops — NO Spark job.
 
@@ -108,42 +171,23 @@ def write_text_sidecar(spark: SparkSession, path: str, payload: str) -> None:
     pattern for params.json markers: that shape schedules a full Spark job
     (driver→executor round-trip, task launch, commit protocol) to move
     ~100 bytes — locally a fixed ~0.2-0.4 s per call, at 100 TB a
-    cluster-wide barrier per sidecar. The store protocols are unchanged:
-    callers still write a ``_building_`` marker first and finalize last;
-    this writes ``<path>.__tmp__`` and renames over the target, so the
-    crash window (missing/partial sidecar ⇒ store reads as incomplete) is
-    no worse than the old overwrite-commit window. The target may be a
-    legacy DIRECTORY layout (old text-writer output) — deleted before the
-    rename. Same mechanism as the matview/minhash param writers this
-    generalizes; works on any Hadoop FileSystem.
+    cluster-wide barrier per sidecar. Writes ``<path>.__tmp__`` and
+    commits it under the module's commit protocol; the target may be a
+    legacy DIRECTORY layout (old text-writer output), swapped out whole.
+    Works on any Hadoop FileSystem.
     """
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    target = P(path)
-    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
-    parent = target.getParent()
+    staging = path + ".__tmp__"
+    _heal(spark, path, staging)
+    fs, P = _fs(spark, path)
+    parent = P(path).getParent()
     if parent is not None:
         fs.mkdirs(parent)
-    tmp = P(path + ".__tmp__")
-    out = fs.create(tmp, True)
+    out = fs.create(P(staging), True)
     try:
         out.write(bytearray(payload.encode("utf-8")))
     finally:
         out.close()
-    if fs.exists(target):
-        fs.delete(target, True)  # recursive: legacy layout is a directory
-    # the old sidecar is already deleted: a swallowed rename failure would
-    # silently degrade the store to "incomplete" (forcing a rebuild)
-    _rename(fs, tmp, target)
-
-
-def _rename(fs, src, dst) -> None:
-    """``fs.rename`` that raises. Hadoop FileSystem.rename reports some
-    failures by RETURNING false (not raising) — e.g. a missing parent on
-    some implementations — and every caller here has already moved or
-    deleted something the rename was meant to replace."""
-    if not fs.rename(src, dst):
-        raise IOError(f"rename failed: {src} -> {dst}")
+    _swap(spark, path, staging)
 
 
 def read_text_sidecar(spark: SparkSession, path: str) -> str | None:
@@ -218,38 +262,13 @@ def compact_artifact(
     ``ceil(bytes / target_bytes_per_file)`` files — sized for row-group
     locality at scale, not a blind ``coalesce(1)``.
 
-    Crash-safe swap (no reader ever sees duplicated or partial DATA):
-    write the compacted copy to ``{path}__compacting``, rename the live
-    dir to ``{path}__old``, rename staging into place, delete ``__old``.
-    Every invocation heals a previous crash first: a dangling staging dir
-    is discarded (its data is still fully present in the live dir), a
-    missing live dir with staging present is the between-renames window
-    (complete the swap), a leftover ``__old`` beside a live dir is
-    post-swap garbage (delete). Contract: single WRITER (the same
-    contract the appending sinks already require); an external reader
-    racing the two renames can observe a brief path-not-found and should
-    retry — it can never observe duplicate or partial rows.
+    The rewrite is staged at ``{path}__compacting`` and committed under
+    the module's "Commit protocol"; a missing artifact is a no-op.
     """
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hconf = jsc.hadoopConfiguration()
-
-    def P(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    fs = P(path).getFileSystem(hconf)
-    staging, old = f"{path}__compacting", f"{path}__old"
-    # ---- heal prior crash ----
-    if not fs.exists(P(path)):
-        if fs.exists(P(staging)):  # crashed between the two renames
-            _rename(fs, P(staging), P(path))
-        else:
-            return False  # artifact genuinely absent
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    if fs.exists(P(staging)):
-        fs.delete(P(staging), True)
-    # ---- stats probe ----
+    staging = f"{path}__compacting"
+    if not _heal(spark, path, staging):
+        return False
+    fs, P = _fs(spark, path)
     parts = [
         f
         for f in fs.listStatus(P(path))
@@ -259,11 +278,8 @@ def compact_artifact(
         return False
     total_bytes = sum(f.getLen() for f in parts)
     n_out = max(1, -(-total_bytes // target_bytes_per_file))  # ceil div
-    # ---- rewrite + swap ----
     spark.read.parquet(path).coalesce(int(n_out)).write.mode("overwrite").parquet(staging)
-    _rename(fs, P(path), P(old))
-    _rename(fs, P(staging), P(path))
-    fs.delete(P(old), True)
+    _swap(spark, path, staging)
     return True
 
 
@@ -998,9 +1014,10 @@ class TableStore:
         each update is O(batch) + a tiny merge; the union-then-re-minimize
         merge is exact (:func:`operators.curation.kmv_merge`), so the
         resulting sketch is identical to one built over all batches at
-        once regardless of arrival order. Swap is write-tmp-then-rename —
-        a reader never sees a half-written sketch; single writer is the
-        caller's contract (holds inside foreachBatch by construction).
+        once regardless of arrival order. The new sketch is staged at
+        ``<sketch>__tmp`` and committed under the module's "Commit
+        protocol", so a replayed batch folds into the last committed
+        sketch, never into an empty one.
 
         The prior sketch is read under the batch state's schema (the group
         columns plus ``kmv array<bigint>``), which is the schema this
@@ -1012,22 +1029,15 @@ class TableStore:
         )
 
         path = self._kmv_path(table, value_col)
+        staging = path + "__tmp"
         new = kmv_state(batch_df, value_col, group_cols, k)
-        if self._exists(path):
+        if _heal(self.spark, path, staging):
             old = self.spark.read.schema(new.schema).parquet(path)
             merged = kmv_merge(old, new, group_cols, k)
         else:
             merged = new
-        tmp = path + "__tmp"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        src = jvm.org.apache.hadoop.fs.Path(tmp)
-        dst = jvm.org.apache.hadoop.fs.Path(path)
-        fs = dst.getFileSystem(hconf)
-        if fs.exists(dst):
-            fs.delete(dst, True)
-        _rename(fs, src, dst)
+        merged.coalesce(1).write.mode("overwrite").parquet(staging)
+        _swap(self.spark, path, staging)
 
     def kmv_stats(self, table: str, value_col: str, k: int = 32) -> DataFrame:
         """Distinct-count estimates from the persisted sketch."""

@@ -968,7 +968,7 @@ def stream_into_matview(
             try:
                 MV.load_matview_params(spark, path)
                 complete = True
-            except (TypeError, ValueError, KeyError, IndexError):
+            except (FileNotFoundError, TypeError, ValueError, KeyError, IndexError):
                 complete = False
         if not complete:
             # `measure` may be a single column name (legacy layout) or a
@@ -1035,7 +1035,7 @@ def stream_into_hll_view(
             try:
                 MV.load_matview_params(spark, path)
                 complete = True
-            except (TypeError, ValueError, KeyError, IndexError):
+            except (FileNotFoundError, TypeError, ValueError, KeyError, IndexError):
                 complete = False
         if not complete:
             HS.build_hll_view(

@@ -437,8 +437,9 @@ def test_stats_and_auto_compact_in_stream(spark, store, tmp_path):
 
 # ------------------------------------------------- persisted KMV sketch
 
-def test_update_kmv_incremental_equals_whole(spark, tmp_path):
+def test_update_kmv_incremental_equals_whole(spark, tmp_path, monkeypatch):
     from pyspark.sql import Row
+    from activecampaign_api_data_pipeline_spark import storage
     from activecampaign_api_data_pipeline_spark.operators.curation import kmv_state
 
     store = TableStore(spark, str(tmp_path / "lake"))
@@ -454,6 +455,25 @@ def test_update_kmv_incremental_equals_whole(spark, tmp_path):
     est = {r["g"]: r["distinct_est"] for r in store.kmv_stats("docs", "v", k=16).collect()}
     assert est["b"] == 1.0
     assert 300 * 0.5 < est["a"] < 300 * 1.7
+
+    # a crash at a rename of the sketch during the second fold, then the
+    # replay: the prior sketch must survive, so the replay folds into it
+    store = TableStore(spark, str(tmp_path / "lake_crash"))
+    store.update_kmv("docs", b1, "v", ["g"], k=16)
+    sketch, real = store._kmv_path("docs", "v"), storage._rename
+
+    def rename_once(fs, src, dst):
+        if sketch in (str(src), str(dst)):
+            monkeypatch.setattr(storage, "_rename", real)
+            raise IOError("injected crash")
+        real(fs, src, dst)
+
+    monkeypatch.setattr(storage, "_rename", rename_once)
+    with pytest.raises(IOError, match="injected crash"):
+        store.update_kmv("docs", b2, "v", ["g"], k=16)
+    store.update_kmv("docs", b2, "v", ["g"], k=16)
+    got = {r["g"]: r["kmv"] for r in spark.read.parquet(sketch).collect()}
+    assert got == want
 
 
 def test_update_kmv_replay_idempotent(spark, tmp_path):
@@ -815,3 +835,276 @@ def test_tombstone_all_keys_reads_empty_gold(spark, store):
     assert {r["cid"]: r["email"] for r in store.read("gold", "t").collect()} == {
         "1": "back@x"
     }
+
+
+# ---- commit protocol: fault injection at every commit step --------------
+#
+# Every artifact that is replaced whole commits through storage._heal /
+# storage._swap. Each case builds the artifact, crashes the verb at one
+# commit step by raising from storage._rename, calls the verb again, and
+# requires the artifact to read as after a crash-free run, with no
+# staging / __old copy left behind.
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_at(monkeypatch, live: str, point: str) -> None:
+    """Raise once at ``point`` of the next commit of a path ending in
+    ``live``: "staged" (new copy written, nothing renamed), "aside" (live
+    renamed to ``__old``, staging not yet in) or "in" (staging renamed
+    in, ``__old`` not yet dropped). A first write has no rename aside, so
+    its "staged" crash is also its "aside" crash."""
+    from activecampaign_api_data_pipeline_spark import storage
+
+    real = storage._rename
+
+    def rename(fs, src, dst):
+        if str(dst).endswith(live) or (point == "staged" and str(src).endswith(live)):
+            monkeypatch.setattr(storage, "_rename", real)
+            if point == "in":
+                real(fs, src, dst)
+            raise _Crash(point)
+        real(fs, src, dst)
+
+    monkeypatch.setattr(storage, "_rename", rename)
+
+
+def _sorted_rows(df):
+    return sorted(map(str, df.collect()))
+
+
+def _emb(spark):
+    import random
+
+    rng = random.Random(3)
+    return spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def _kmv_batches(spark):
+    b1 = spark.createDataFrame([(f"g{i % 2}", f"t{i}") for i in range(60)], "g string, v string")
+    b2 = spark.createDataFrame([(f"g{i % 3}", f"t{i}") for i in range(30, 90)], "g string, v string")
+    return b1, b2
+
+
+def _commit_verbs():
+    """verb -> (setup(spark, root), run(spark, root), read(spark, root),
+    suffix of the live path whose commit the harness crashes)."""
+    from activecampaign_api_data_pipeline_spark.operators import ann_index as AIX
+    from activecampaign_api_data_pipeline_spark.operators import hll_store as HLL
+    from activecampaign_api_data_pipeline_spark.operators import layout as LAY
+    from activecampaign_api_data_pipeline_spark.operators import matview as MV
+    from activecampaign_api_data_pipeline_spark.operators import matview_join as MVJ
+    from activecampaign_api_data_pipeline_spark.operators import text_index as TIX
+    from activecampaign_api_data_pipeline_spark.storage import (
+        compact_artifact,
+        read_text_sidecar,
+        write_text_sidecar,
+    )
+
+    def none(spark, root):
+        pass
+
+    def artifact(spark, root):
+        for i in range(6):
+            spark.range(i * 5, i * 5 + 5, numPartitions=1).write.mode("append").parquet(
+                f"{root}/art"
+            )
+
+    def ann(spark, root):
+        AIX.build_ann_index(_emb(spark), f"{root}/ix", n_centroids=2, m=2, ksub=4, n_iters=1)
+        AIX.delete_ann_index(spark, f"{root}/ix", [1, 2, 3])
+
+    def sq8(spark, root):
+        AIX.build_sq8_index(_emb(spark), f"{root}/ix")
+        AIX.delete_sq8_index(spark, f"{root}/ix", [1, 2, 3])
+
+    def ix_read(spark, root):
+        return (
+            [_sorted_rows(spark.read.parquet(f"{root}/ix/{a}")) for a in ("cells", "codes")
+             if os.path.exists(f"{root}/ix/{a}")],
+            os.path.exists(f"{root}/ix/tombstones"),
+        )
+
+    def zorder(spark, root):
+        df = spark.range(64).selectExpr("id % 8 as a", "id div 8 as b", "id")
+        LAY.write_zordered(df, f"{root}/zt", "a", "b", n_files=2, bits=4)
+        df.limit(5).write.mode("append").parquet(f"{root}/zt")
+
+    def matview(spark, root):
+        f = spark.createDataFrame([(1, 10, 100), (1, 11, 50), (2, 12, 30)], "k long, oid long, cents long")
+        MV.build_matview(f, root, ["k"], "cents", batch_key="b0")
+        MV.append_matview(f.where("k = 2"), root, "b1")
+
+    def hll(spark, root):
+        df = spark.createDataFrame([("g1", i % 7) for i in range(40)], "grp string, uid long")
+        HLL.build_hll_view(df, root, ["grp"], "uid", batch_key="b0")
+        HLL.append_hll_view(df.filter("uid < 5"), root, "b1")
+
+    def join(spark, root):
+        MVJ.create_join_view(spark, root, join_key="ok", group_cols=["g"], measure="m", n_buckets=4)
+        MVJ.append_join_side(spark.createDataFrame([(1, 10)], "ok long, g long"), root, "a", "k0")
+        MVJ.append_join_side(spark.createDataFrame([(2, 20)], "ok long, g long"), root, "a", "k1")
+        MVJ.append_join_side(spark.createDataFrame([(1, 5), (2, 7)], "ok long, m long"), root, "b", "k2")
+
+    def join_read(spark, root):
+        hist = spark.read.option("basePath", f"{root}/a").parquet(f"{root}/a").drop("batch")
+        return _sorted_rows(MVJ.read_join_view(spark, root)), _sorted_rows(hist)
+
+    def text(spark, root):
+        docs = spark.createDataFrame(
+            [(1, "spark query plan"), (2, "query the lake"), (3, "spark lake house")],
+            "doc_id long, text string",
+        )
+        TIX.build_text_index(docs, root, tok_buckets=4)
+        TIX.append_text_index(spark.createDataFrame([(4, "plan the query")], "doc_id long, text string"), root)
+
+    def kmv_fold(i):
+        return lambda spark, root: TableStore(spark, root).update_kmv(
+            "docs", _kmv_batches(spark)[i], "v", ["g"], k=8
+        )
+
+    def kmv_read(spark, root):
+        return _sorted_rows(spark.read.parquet(TableStore(spark, root)._kmv_path("docs", "v")))
+
+    def sidecar(v):
+        return lambda spark, root: write_text_sidecar(spark, f"{root}/side/params.json", v)
+
+    def sidecar_read(spark, root):
+        return read_text_sidecar(spark, f"{root}/side/params.json")
+    return {
+        "compact_artifact": (
+            artifact,
+            lambda spark, root: compact_artifact(spark, f"{root}/art", max_files=2),
+            lambda spark, root: _sorted_rows(spark.read.parquet(f"{root}/art")),
+            "/art",
+        ),
+        "vacuum_ann_index": (
+            ann, lambda spark, root: AIX.vacuum_ann_index(spark, f"{root}/ix"), ix_read, "/cells"
+        ),
+        "vacuum_sq8_index": (
+            sq8, lambda spark, root: AIX.vacuum_sq8_index(spark, f"{root}/ix"), ix_read, "/codes"
+        ),
+        "optimize_zorder": (
+            zorder,
+            lambda spark, root: LAY.optimize_zorder(spark, f"{root}/zt", "a", "b", n_files=2, bits=4),
+            lambda spark, root: _sorted_rows(spark.read.parquet(f"{root}/zt")),
+            "/zt",
+        ),
+        "compact_matview": (
+            matview,
+            MV.compact_matview,
+            lambda spark, root: (
+                _sorted_rows(MV.read_matview(spark, root)), sorted(MV.applied_batches_full(spark, root))
+            ),
+            "/partials",
+        ),
+        "compact_hll_view": (
+            hll, HLL.compact_hll_view, lambda spark, root: _sorted_rows(HLL.read_hll_view(spark, root)),
+            "/partials",
+        ),
+        "compact_join_history": (
+            join, lambda spark, root: MVJ.compact_join_history(spark, root, "a"), join_read, "/a"
+        ),
+        "compact_text_index": (
+            text,
+            lambda spark, root: TIX.compact_text_index(spark, root, files_per_artifact=2, tok_buckets=4),
+            lambda spark, root: [_sorted_rows(spark.read.parquet(f"{root}/{a}")) for a in ("postings", "doclen")],
+            "/postings",
+        ),
+        "update_kmv": (kmv_fold(0), kmv_fold(1), kmv_read, "docs_kmv_v"),
+        "update_kmv_first": (none, kmv_fold(0), kmv_read, "docs_kmv_v"),
+        "write_text_sidecar": (sidecar('{"v": 1}'), sidecar('{"v": 2}'), sidecar_read, "/params.json"),
+        "write_text_sidecar_first": (none, sidecar('{"v": 2}'), sidecar_read, "/params.json"),
+    }
+
+
+_FIRST_WRITES = ("update_kmv_first", "write_text_sidecar_first")
+_COMMIT_CASES = [
+    (verb, point)
+    for verb in (
+        "compact_artifact", "vacuum_ann_index", "vacuum_sq8_index", "optimize_zorder",
+        "compact_matview", "compact_hll_view", "compact_join_history",
+        "compact_text_index", "update_kmv", "write_text_sidecar",
+    )
+    for point in ("staged", "aside", "in")
+] + [(verb, point) for verb in _FIRST_WRITES for point in ("staged", "in")]
+
+
+@pytest.fixture(scope="module")
+def commit_templates(spark, tmp_path_factory):
+    """verb -> (directory holding the built pre-state, what a crash-free
+    run of the verb over a copy of it reads), built once per verb."""
+    import shutil
+
+    verbs, cache = _commit_verbs(), {}
+
+    def get(verb):
+        if verb not in cache:
+            setup, run, read, _ = verbs[verb]
+            template = str(tmp_path_factory.mktemp(verb))
+            setup(spark, template)
+            clean = str(tmp_path_factory.mktemp(f"{verb}_clean"))
+            shutil.copytree(template, clean, dirs_exist_ok=True)
+            run(spark, clean)
+            cache[verb] = (template, read(spark, clean))
+        return verbs[verb], cache[verb]
+
+    return get
+
+
+@pytest.mark.parametrize("verb,point", _COMMIT_CASES)
+def test_commit_crash_heals_to_crash_free_state(
+    spark, tmp_path, monkeypatch, commit_templates, verb, point
+):
+    import re
+    import shutil
+
+    (_, run, read, live), (template, want) = commit_templates(verb)
+    root = str(tmp_path / "store")
+    shutil.copytree(template, root)
+    _crash_at(monkeypatch, live, point)
+    with pytest.raises(_Crash):
+        run(spark, root)
+    run(spark, root)
+    assert read(spark, root) == want
+    left = [
+        os.path.join(d, n)
+        for d, dirs, files in os.walk(root)
+        for n in dirs + files
+        if re.search(r"__(compacting|optimizing|old|tmp)", n)
+    ]
+    assert not left, left
+
+
+def test_only_storage_rename_renames():
+    """Every rename in the package is the checked one in
+    ``storage._rename``: a bare ``fs.rename`` can return false unseen."""
+    import ast
+    import pathlib
+
+    from activecampaign_api_data_pipeline_spark import storage
+
+    pkg = pathlib.Path(storage.__file__).parent
+    offenders = []
+    for f in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(f.read_text())
+        allowed = set()
+        if f == pathlib.Path(storage.__file__):
+            helper = next(
+                n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "_rename"
+            )
+            allowed = {id(n) for n in ast.walk(helper)}
+        offenders += [
+            f"{f.relative_to(pkg)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "rename"
+            and id(n) not in allowed
+        ]
+    assert not offenders, offenders
