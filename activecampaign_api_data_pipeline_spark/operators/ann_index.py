@@ -46,6 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from activecampaign_api_data_pipeline_spark.storage import (
+    SIDECAR_INCOMPLETE,
+    _fs,
     _heal,
     _swap,
     read_text_sidecar,
@@ -90,9 +92,7 @@ def _clear_tombstones(spark: SparkSession, path: str) -> None:
     encodes the CURRENT corpus, so a stale ledger from un-vacuumed deletes
     against the OLD index would silently hide live, never-deleted vectors
     from the new one."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, P = _fs(spark, path)
     if fs.exists(P(f"{path}/tombstones")):
         fs.delete(P(f"{path}/tombstones"), True)
 
@@ -527,8 +527,8 @@ def ensure_ann_index(
         existing.pop("dim")
         if existing == requested:
             return path
-    except Exception:
-        pass  # absent, unreadable, or mid-rebuild marker -> build
+    except SIDECAR_INCOMPLETE:
+        pass  # absent, mid-rebuild marker or junk -> build; IO errors raise
     build_ann_index(emb, path, **params)
     return path
 

@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from activecampaign_api_data_pipeline_spark.functions.hashing import hash60
+from activecampaign_api_data_pipeline_spark.streaming.incremental import (
+    write_batch_partition,
+)
 
 
 def pack_sequences(
@@ -492,19 +495,12 @@ def importance_state_fold(
     artifact stays tiny (128 longs x batches, compacted) no matter how
     many exabytes of corpus flowed through it.
 
-    Exactly-once: the batch's partial counts are a ``batch_id``
-    partition written with dynamic overwrite — a replayed batch replaces
-    its own partition, never double-counts.
+    Exactly-once: the batch's partial counts are its ``batch_id``
+    partition (``streaming.incremental.write_batch_partition``) — a
+    replayed batch replaces its own partition, never double-counts.
     """
     bucketed = _token_buckets(docs, target_pred, id_col, text_col, n_buckets, salt)
-    (
-        _bucket_counts(bucketed)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{path}/partials")
-    )
+    write_batch_partition(_bucket_counts(bucketed), batch_id, f"{path}/partials")
 
 
 def importance_weights_from_state(

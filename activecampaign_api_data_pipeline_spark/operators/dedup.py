@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from activecampaign_api_data_pipeline_spark.functions.hashing import hash60, with_row_hash
 from activecampaign_api_data_pipeline_spark.functions.text import word_ngrams
 from activecampaign_api_data_pipeline_spark.storage import (
+    SIDECAR_INCOMPLETE,
     path_exists,
     read_text_sidecar,
     write_text_sidecar,
@@ -790,10 +791,10 @@ def ensure_decontam_store(
     spark = test_docs.sparkSession
     try:
         existing = _json.loads(read_text_sidecar(spark, f"{path}/params.json"))
-        if existing.get("ngram") == ngram and existing.get("max_df") == max_df:
+        if existing == {"ngram": ngram, "max_df": max_df}:
             return path
-    except Exception:
-        pass  # absent or unreadable -> build
+    except SIDECAR_INCOMPLETE:
+        pass  # absent, mid-rebuild marker or junk -> build; IO errors raise
     decontam_store_build(test_docs, path, ngram=ngram, max_df=max_df, **build_kw)
     return path
 

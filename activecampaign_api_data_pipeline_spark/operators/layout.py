@@ -33,7 +33,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from activecampaign_api_data_pipeline_spark.storage import _heal, _swap
+from activecampaign_api_data_pipeline_spark.storage import _fs, _heal, _swap
 
 MANIFEST = "_manifest"
 
@@ -107,14 +107,19 @@ def _norm(uri: str) -> str:
 def _data_files(spark: SparkSession, path: str) -> list[str]:
     """The live part files of ``path`` (one listStatus; hidden ``_``
     entries like the manifest are excluded, matching Spark's reader)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, P = _fs(spark, path)
     return [
         st.getPath().toString()
-        for st in fs.listStatus(hpath)
+        for st in fs.listStatus(P(path))
         if st.isFile() and st.getPath().getName().startswith("part-")
     ]
+
+
+def _read_index(spark: SparkSession, path: str) -> list:
+    """Rows of a per-file index table (``_manifest``, ``_bloom``), read by
+    its part files: Spark's reader ignores a path whose own name starts
+    with ``_`` and logs "All paths were ignored" on every read."""
+    return spark.read.parquet(*_data_files(spark, path)).collect()
 
 
 def pruned_read(
@@ -136,7 +141,7 @@ def pruned_read(
     returns an empty-but-typed frame."""
     stats = {
         _norm(r["file"]): r
-        for r in spark.read.parquet(f"{path}/{MANIFEST}").collect()
+        for r in _read_index(spark, f"{path}/{MANIFEST}")
     }
     files = _data_files(spark, path)
     total = len(files)
@@ -277,7 +282,7 @@ def bloom_pruned_read(
     ]
     blooms = {
         _norm(r["file"]): set(r["bits"])
-        for r in spark.read.parquet(f"{path}/{BLOOM_MANIFEST}").collect()
+        for r in _read_index(spark, f"{path}/{BLOOM_MANIFEST}")
     }
     files = _data_files(spark, path)
     keep = [

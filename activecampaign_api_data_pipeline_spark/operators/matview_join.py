@@ -58,6 +58,7 @@ from activecampaign_api_data_pipeline_spark.operators import matview as MV
 from activecampaign_api_data_pipeline_spark.storage import (
     _heal,
     _swap,
+    path_exists,
     read_text_sidecar,
     write_text_sidecar,
 )
@@ -120,7 +121,7 @@ def _applied(spark: SparkSession, path: str, p: dict) -> set[str]:
     """Replay guard: the view's live tags + its compaction ledger + this
     store's empty-delta ledger."""
     got = set(p.get("applied", []))
-    if _exists(spark, f"{path}/view/params.json"):
+    if path_exists(spark, f"{path}/view/params.json"):
         got |= MV.applied_batches_full(spark, f"{path}/view")
     return got
 
@@ -130,13 +131,6 @@ def applied_keys(spark: SparkSession, path: str) -> set[str]:
     lets a single-writer caller — the streaming sink — seed the guard
     ONCE per run and skip the per-append tag scan thereafter."""
     return _applied(spark, path, load_join_params(spark, path))
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.exists(P(path))
 
 
 def append_join_side(
@@ -193,7 +187,7 @@ def append_join_side(
     )
     other = "b" if side == "a" else "a"
     view = f"{path}/view"
-    if _exists(spark, f"{path}/{other}"):
+    if path_exists(spark, f"{path}/{other}"):
         hist = spark.read.option("basePath", f"{path}/{other}").parquet(
             f"{path}/{other}"
         )
@@ -210,7 +204,7 @@ def append_join_side(
         # history) rows, exactly the bound the append already pays
         delta = delta.localCheckpoint(eager=True)
         empty = delta.isEmpty()
-        if not _exists(spark, f"{view}/params.json"):
+        if not path_exists(spark, f"{view}/params.json"):
             if spec:
                 MV.build_matview_multi(
                     delta, view, p["group_cols"], spec, batch_key=key
@@ -242,7 +236,7 @@ def read_join_view(spark: SparkSession, path: str) -> DataFrame:
     partials (``matview.read_matview``); neither history is scanned."""
     p = load_join_params(spark, path)
     view = f"{path}/view"
-    if not _exists(spark, f"{view}/params.json"):
+    if not path_exists(spark, f"{view}/params.json"):
         # no pair has ever materialized: an empty-but-typed frame would
         # need a schema no history may exist to derive — callers that
         # read before any join delta get an explicit error, not a guess

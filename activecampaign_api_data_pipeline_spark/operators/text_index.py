@@ -58,6 +58,8 @@ from pyspark.sql import functions as F
 from activecampaign_api_data_pipeline_spark.functions.text import tokens
 from activecampaign_api_data_pipeline_spark.operators.ann_index import _write
 from activecampaign_api_data_pipeline_spark.storage import (
+    SIDECAR_INCOMPLETE,
+    _fs,
     _heal,
     _swap,
     read_text_sidecar,
@@ -114,9 +116,7 @@ def postings_file_count(spark: SparkSession, path: str) -> int:
     """Recursive part-file count under the postings dir (one RemoteIterator
     metadata sweep — the ``compact_artifact`` probe generalized to the
     bucketed hive layout, whose files live one level down)."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, P = _fs(spark, path)
     if not fs.exists(P(f"{path}/postings")):
         return 0
     it = fs.listFiles(P(f"{path}/postings"), True)
@@ -199,9 +199,7 @@ def build_text_index(
 def load_text_params(spark: SparkSession, path: str) -> TextIndexParams:
     raw = read_text_sidecar(spark, f"{path}/params.json")
     if raw is None:
-        # absent or crashed-empty sidecar: same "incomplete store" class
-        # the callers already handle (ensure_* rebuilds, streams self-heal)
-        raise ValueError(f"no params sidecar at {path}/params.json")
+        raise FileNotFoundError(f"no params sidecar at {path}/params.json")
     parsed = json.loads(raw)
     # legacy (pre-r13) sidecars predate the bucketed layout: their
     # postings are flat files, so the absent field means 0 (flat scan),
@@ -285,8 +283,8 @@ def ensure_text_index(docs: DataFrame, path: str, **params) -> str:
         existing = load_text_params(spark, path).to_dict()
         if existing == requested:
             return path
-    except Exception:
-        pass
+    except SIDECAR_INCOMPLETE:
+        pass  # absent, mid-rebuild marker or junk -> build; IO errors raise
     build_text_index(docs, path, **params)
     return path
 

@@ -190,16 +190,21 @@ def write_text_sidecar(spark: SparkSession, path: str, payload: str) -> None:
     _swap(spark, path, staging)
 
 
+# What a params loader raises on a sidecar that marks no finished build:
+# absent or empty (FileNotFoundError), the ``_building_`` marker a build
+# writes first (TypeError: not a params field), or junk (ValueError,
+# KeyError, IndexError). Anything else, e.g. an IO error, is not "absent".
+SIDECAR_INCOMPLETE = (FileNotFoundError, TypeError, ValueError, KeyError, IndexError)
+
+
 def read_text_sidecar(spark: SparkSession, path: str) -> str | None:
     """First non-empty line of a text sidecar — single-file OR legacy
     directory layout (part-* files from the old Spark text writer) — via
     direct FileSystem ops, no Spark job. Returns ``None`` when the sidecar
     is absent or empty (the crashed-legacy-dir-write case); genuine IO
     errors propagate."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
+    fs, P = _fs(spark, path)
     target = P(path)
-    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(target):
         return None
     paths = (
@@ -217,7 +222,7 @@ def read_text_sidecar(spark: SparkSession, path: str) -> str | None:
             data = bytes(
                 stream.readAllBytes()
                 if hasattr(stream, "readAllBytes")
-                else jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+                else spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
             )
         finally:
             stream.close()
@@ -237,11 +242,8 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     With an explicit probe, only genuine absence takes the first-batch
     path; real read errors propagate.
     """
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+    fs, P = _fs(spark, path)
+    return bool(fs.exists(P(path)))
 
 
 def compact_artifact(
@@ -524,14 +526,9 @@ class TableStore:
         ).partitionBy(BUCKET_COL).parquet(gold_path)
         if tombstone_col is not None:
             latest.unpersist()
-            jvm = self.spark._jvm
-            hconf = self.spark._jsc.hadoopConfiguration()
-            fs = jvm.org.apache.hadoop.fs.Path(gold_path).getFileSystem(hconf)
+            fs, P = _fs(self.spark, gold_path)
             for b in set(rebuilt) - survivors:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{gold_path}/{BUCKET_COL}={b}"),
-                    True,
-                )
+                fs.delete(P(f"{gold_path}/{BUCKET_COL}={b}"), True)
             if not survivors:
                 # every key of the selected buckets tombstoned away. If NO
                 # bucket dir remains anywhere in gold, the directory has
@@ -540,7 +537,7 @@ class TableStore:
                 # schema-bearing part file instead (BUCKET_COL stays as a
                 # regular int column, same name/type the partitioned read
                 # surfaces), so an emptied table reads as 0 typed rows.
-                gp = jvm.org.apache.hadoop.fs.Path(gold_path)
+                gp = P(gold_path)
                 has_bucket_dirs = fs.exists(gp) and any(
                     st.getPath().getName().startswith(f"{BUCKET_COL}=")
                     for st in fs.listStatus(gp)
@@ -696,12 +693,10 @@ class TableStore:
         path = f"{self.root}/ckpt/{table}"
         if not self._exists(path):
             return []
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, P = _fs(self.spark, path)
         return sorted(
             f.getPath().getName().split("=", 1)[1]
-            for f in fs.listStatus(hpath)
+            for f in fs.listStatus(P(path))
             if f.isDirectory() and f.getPath().getName().startswith("asof_run=")
         )
 
@@ -820,18 +815,15 @@ class TableStore:
         path = self._path("bronze", table)
         if not self._exists(path):
             return []
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(hconf)
+        fs, P = _fs(self.spark, path)
         runs = sorted(
             f.getPath().getName().split("=", 1)[1]
-            for f in fs.listStatus(hpath)
+            for f in fs.listStatus(P(path))
             if f.isDirectory() and f.getPath().getName().startswith("run_id=")
         )
         drop = runs[: max(len(runs) - keep_runs, 0)]
         for rid in drop:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/run_id={rid}"), True)
+            fs.delete(P(f"{path}/run_id={rid}"), True)
         return drop
 
     def maybe_compact(
@@ -851,8 +843,7 @@ class TableStore:
         path = self._path("silver", table)
         if not self._exists(path):
             return False
-        P = self.spark._jvm.org.apache.hadoop.fs.Path
-        fs = P(path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, P = _fs(self.spark, path)
         names = (
             None if buckets is None else {f"{BUCKET_COL}={b}" for b in buckets}
         )

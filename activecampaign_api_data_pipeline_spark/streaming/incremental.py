@@ -21,11 +21,38 @@ Scale notes: windowed aggregates shuffle on (window, key) and keep only
 watermark-bounded state; ``foreachBatch`` reuses the store's bucket-pruned
 maintenance, so a micro-batch costs O(batch + touched buckets). State-store
 backends (RocksDB at scale) are a config, not a code change.
+
+Sink frame. Every ``foreachBatch`` sink of this package (here and in
+``streaming/stateful.py``) is built from the same pieces, so that a
+replayed micro-batch — Structured Streaming re-runs a batch whose commit
+did not land, under the same ``batch_id`` — leaves the outputs as one
+run would:
+
+- **Start.** :func:`_start` is the one ``writeStream`` start: the sink,
+  its checkpoint, and the ``availableNow`` trigger (drain what is there,
+  then stop). Only :func:`stream_into_store` lets a caller turn that
+  trigger off.
+- **Batch-partition replay.** :func:`write_batch_partition` writes a
+  batch's output as the ``batch_id=`` partition of its directory with
+  dynamic overwrite: a replay replaces its own partition instead of
+  appending duplicates.
+- **Built probe.** A sink whose first batch builds an artifact asks
+  :func:`_built` whether that build finished. Builds write the params
+  sidecar last (a ``_building_`` marker first), so an absent, empty,
+  marker or junk sidecar means "build again"; any other error, e.g. an
+  IO failure, propagates instead of rebuilding over an existing
+  artifact (``storage.path_exists`` rationale).
+- **Replay guard.** A sink that appends to a built artifact skips what
+  the artifact already holds: the index sinks anti-join the batch
+  against the stored ids (:func:`_append_unseen`); the view sinks skip a
+  batch key the view has applied (:func:`_guarded_view_sink`), reading
+  the applied set once per run.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, Window
@@ -34,6 +61,7 @@ from pyspark.util import inheritable_thread_target
 
 from activecampaign_api_data_pipeline_spark.functions.hashing import hash60
 from activecampaign_api_data_pipeline_spark.storage import (
+    SIDECAR_INCOMPLETE,
     TableStore,
     compact_artifact,
     max_id_watermark,
@@ -249,6 +277,93 @@ def stream_top_n_per_key(
     )
 
 
+def _start(stream: DataFrame, sink, checkpoint: str, available_now: bool = True):
+    """Start ``stream`` into the ``foreachBatch`` ``sink`` (module
+    docstring, "Sink frame")."""
+    writer = stream.writeStream.foreachBatch(sink).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def write_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write ``df`` as the ``batch_id`` partition of ``path``, replacing
+    that partition only: a replayed batch overwrites its own output
+    (module docstring, "Sink frame")."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
+def _built(spark, path: str, load_params) -> bool:
+    """Whether the artifact at ``path`` finished its build: False for an
+    absent, empty, ``_building_`` or junk params sidecar; any other error
+    propagates (module docstring, "Sink frame")."""
+    try:
+        load_params(spark, path)
+    except SIDECAR_INCOMPLETE:
+        return False
+    return True
+
+
+def _append_unseen(
+    batch_df: DataFrame, path: str, stored: str, stored_col: str, id_col: str, append
+) -> None:
+    """``append(fresh, path)`` for the batch rows whose ``id_col`` is not
+    in ``stored_col`` of ``{path}/{stored}`` yet; a replayed batch appends
+    nothing."""
+    seen = (
+        batch_df.sparkSession.read.parquet(f"{path}/{stored}")
+        .select(F.col(stored_col).alias(id_col))
+        .distinct()
+    )
+    fresh = batch_df.join(seen, id_col, "left_anti")
+    if not fresh.isEmpty():
+        append(fresh, path)
+
+
+def _guarded_view_sink(path: str, build, append):
+    """The ``foreachBatch`` body of a view guarded by batch key: the first
+    batch builds the view (``build(batch_df, batch_key)``); a later one
+    appends (``append(batch_df, path, batch_key, skip_replay_check=True)``)
+    unless the view has applied its key already.
+
+    The applied set is read from the store once per stream run (on the
+    first append, or known exactly when this run built the view); later
+    batches consult and extend it with no Spark job. This is sound because
+    the sink is the view's single writer: the only writes between two of
+    this run's batches are its own. A crash-replay restarts the stream,
+    which reads the set again and finds the replayed key."""
+    from activecampaign_api_data_pipeline_spark.operators import matview as MV
+
+    applied: set[str] | None = None
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal applied
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        batch_key = f"batch_{batch_id:08d}"
+        if not _built(spark, path, MV.load_matview_params):
+            build(batch_df, batch_key)
+            applied = {batch_key}
+            return
+        if applied is None:
+            applied = MV.applied_batches_full(spark, path)
+        if batch_key in applied:
+            return
+        append(batch_df, path, batch_key, skip_replay_check=True)
+        applied.add(batch_key)
+
+    return _sink
+
+
 def stream_into_store(
     stream: DataFrame,
     store: TableStore,
@@ -264,6 +379,8 @@ def stream_into_store(
 ):
     """Continuous medallion ingest: each micro-batch persists through the
     store (delta/bronze/silver/gold), giving exactly-once-observable output.
+    ``trigger_available_now=False`` runs the default processing-time
+    trigger instead of draining what is there and stopping.
 
     ``tombstone_col`` forwards the store's CDC delete semantics: a batch
     may carry I/U/D ops, delete markers flow into history and a key whose
@@ -334,12 +451,7 @@ def stream_into_store(
                 table, auto_compact_files, buckets=res.touched_buckets
             )
 
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _sink, checkpoint, trigger_available_now)
 
 
 def stream_into_ann_index(
@@ -348,7 +460,6 @@ def stream_into_ann_index(
     checkpoint: str,
     build_params: dict | None = None,
     id_col: str = "vec_id",
-    trigger_available_now: bool = True,
 ):
     """Continuous embedding ingest into the persisted IVF-PQ index: the
     first micro-batch TRAINS and builds the index at ``path``; every later
@@ -356,13 +467,11 @@ def stream_into_ann_index(
     (:func:`~...operators.ann_index.append_ann_index` — FAISS
     train-then-add, run continuously).
 
-    Exactly-once: ``append_ann_index`` appends code files, so a replayed
-    micro-batch (crash between append and checkpoint commit) would
-    double-encode its vectors. Each batch is therefore anti-joined against
-    the ids already in ``codes`` before encoding — replays become no-ops.
-    The id probe scans only the codes artifact (integers, ~3 % of raw
-    bytes), so per-batch cost stays O(batch + codes-scan), with no shuffle
-    of the existing corpus.
+    Exactly-once: the built probe and the id anti-join of the sink frame
+    (module docstring), against the ids in ``codes``. That probe scans
+    only the codes artifact (integers, ~3 % of raw bytes), so per-batch
+    cost stays O(batch + codes-scan), with no shuffle of the existing
+    corpus.
 
     Quality caveat inherited from train-then-add: codebooks reflect the
     FIRST batch's distribution; retrain by rebuilding at a new path when
@@ -374,42 +483,16 @@ def stream_into_ann_index(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        # explicit probe, not bare try/except: a transient read failure
-        # must not masquerade as "no index" and trigger a rebuild over an
-        # existing path (storage.path_exists rationale). But existence
-        # alone conflates "complete index" with "crashed first-batch
-        # build": build_* writes a '_building_' params.json FIRST, so a
-        # crash mid-build leaves a sidecar that parses as garbage and
-        # would wedge every replay on the append path. Mirror
-        # ensure_ann_index: rebuild on an unparsable sidecar, let genuine
-        # IO errors (read.text/collect failures) propagate.
-        complete = False
-        if path_exists(spark, f"{path}/params.json"):
-            try:
-                AIX.load_ann_params(spark, path)
-                complete = True
-            except (TypeError, ValueError, KeyError, IndexError):
-                complete = False  # '_building_' marker or junk sidecar
-        if not complete:
+        if not _built(spark, path, AIX.load_ann_params):
             AIX.build_ann_index(batch_df, path, **(build_params or {}))
             return
-        seen = spark.read.parquet(f"{path}/codes").select(
-            F.col(id_col)
-        ).distinct()
-        fresh = batch_df.join(seen, id_col, "left_anti")
-        if not fresh.isEmpty():
-            AIX.append_ann_index(fresh, path)
+        _append_unseen(batch_df, path, "codes", id_col, id_col, AIX.append_ann_index)
         # small-file maintenance: one file set lands per batch forever;
         # stats-probe is a cheap listStatus when healthy
         for artifact in ("cells", "codes"):
             compact_artifact(spark, f"{path}/{artifact}")
 
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _sink, checkpoint)
 
 
 def packed_shards_sink_batch(
@@ -434,7 +517,8 @@ def packed_shards_sink_batch(
     shard's latest row — so a replayed batch (its own partition possibly
     half-written by a crashed attempt) reconstructs exactly the pre-batch
     state, and both its output partition and its state partition are
-    dynamically overwritten: exactly-once end to end. State size is
+    batch partitions (module docstring, "Sink frame"): exactly-once end
+    to end. State size is
     O(shards × batches) longs; output cost per batch is one shard
     shuffle of (id, n_tokens) — text never moves, the corpus is never
     re-read.
@@ -459,13 +543,7 @@ def packed_shards_sink_batch(
         docs, budget=budget, n_shards=n_shards, id_col=id_col,
         token_count_col=tokens_col, salt=salt, base_offsets=base,
     )
-    (
-        packed.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(out_path)
-    )
+    write_batch_partition(packed, batch_id, out_path)
     shard = F.pmod(
         hash60(F.concat_ws("||", F.lit(salt), F.col(id_col).cast("string"))),
         F.lit(n_shards),
@@ -479,13 +557,10 @@ def packed_shards_sink_batch(
         totals = totals.join(F.broadcast(base), "shard", "left").withColumn(
             "_batch_tokens", F.col("_batch_tokens") + F.coalesce(F.col("base"), F.lit(0))
         ).drop("base")
-    (
-        totals.select("shard", F.col("_batch_tokens").alias("next_off"))
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(state_path)
+    write_batch_partition(
+        totals.select("shard", F.col("_batch_tokens").alias("next_off")),
+        batch_id,
+        state_path,
     )
 
 
@@ -495,7 +570,6 @@ def stream_into_packed_shards(
     checkpoint: str,
     budget: int = 256,
     n_shards: int = 8,
-    trigger_available_now: bool = True,
     **pack_kw,
 ):
     """Continuous training-sequence packing under foreachBatch: each
@@ -505,18 +579,10 @@ def stream_into_packed_shards(
     transformations on the stream); packing is the one stateful step and
     its state is a parquet artifact, not engine state — replayable,
     inspectable, compactable."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        packed_shards_sink_batch(
-            batch_df, batch_id, path, budget=budget, n_shards=n_shards, **pack_kw
-        )
-
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    sink = partial(
+        packed_shards_sink_batch, path=path, budget=budget, n_shards=n_shards, **pack_kw
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint)
 
 
 def stream_decontaminate(
@@ -525,15 +591,14 @@ def stream_decontaminate(
     checkpoint: str,
     flags_out: str,
     threshold: float = 0.5,
-    trigger_available_now: bool = True,
 ):
     """Continuous decontamination gate: every micro-batch of training
     documents is checked against the persisted eval-set store
     (:func:`~...operators.dedup.incremental_decontaminate` — build it
     once with ``decontam_store_build``) and flagged pairs land under
-    ``flags_out`` partitioned by batch_id (dynamic overwrite →
-    exactly-once under replay; the check itself is read-only against the
-    store). Per (train, test) pair the containment depends only on that
+    ``flags_out`` as batch partitions (module docstring, "Sink frame");
+    the check itself is read-only against the
+    store. Per (train, test) pair the containment depends only on that
     train doc and the frozen store, so the union of per-batch flags
     equals the one-shot batch check — arrival order never matters."""
     from activecampaign_api_data_pipeline_spark.operators.dedup import (
@@ -544,20 +609,9 @@ def stream_decontaminate(
         if batch_df.isEmpty():
             return
         flags = incremental_decontaminate(batch_df, path, threshold=threshold)
-        (
-            flags.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(flags_out)
-        )
+        write_batch_partition(flags, batch_id, flags_out)
 
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _sink, checkpoint)
 
 
 def minhash_sink_batch(
@@ -573,9 +627,8 @@ def minhash_sink_batch(
     (batch_df, batch_id) twice must leave store and pairs_out exactly as
     one run would.
 
-    Exactly-once mechanics: the pairs output is partitioned by batch_id
-    and dynamically overwritten, so a replayed batch replaces its OWN
-    partition instead of appending duplicates; the store append is
+    Exactly-once mechanics: the pairs output is a batch partition (module
+    docstring, "Sink frame"); the store append is
     replay-safe by its id anti-join; the pair computation itself is
     deterministic given (batch, store) and the store only gains the
     batch's own docs between the two runs — which the anti-join excludes
@@ -589,13 +642,7 @@ def minhash_sink_batch(
     if batch_df.isEmpty():
         return
     pairs = incremental_minhash_pairs(batch_df, path, threshold=threshold, **minhash_kw)
-    (
-        pairs.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(pairs_out)
-    )
+    write_batch_partition(pairs, batch_id, pairs_out)
     minhash_store_append(batch_df, path, **minhash_kw)
     # small-file maintenance (cheap listStatus probe when healthy).
     # pairs_out is batch_id-partitioned for idempotent replay, so only
@@ -611,7 +658,6 @@ def stream_into_minhash_store(
     checkpoint: str,
     pairs_out: str,
     threshold: float = 0.5,
-    trigger_available_now: bool = True,
     **minhash_kw,
 ):
     """Continuous corpus dedup: each micro-batch of documents is
@@ -623,17 +669,11 @@ def stream_into_minhash_store(
     text is never rescanned. Completes the persisted-artifact streaming
     set: medallion store, KMV sketches, ANN index, signature store.
     """
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        minhash_sink_batch(
-            batch_df, batch_id, path, pairs_out, threshold=threshold, **minhash_kw
-        )
-
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    sink = partial(
+        minhash_sink_batch, path=path, pairs_out=pairs_out, threshold=threshold,
+        **minhash_kw,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint)
 
 
 def block_sink_batch(
@@ -646,8 +686,8 @@ def block_sink_batch(
     """One micro-batch of continuous passage-level dedup, module-level so
     the replay contract is directly testable (same shape as
     :func:`minhash_sink_batch`): cleaned documents land under
-    ``clean_out`` partitioned by batch_id with dynamic overwrite
-    (exactly-once — a replayed batch replaces its own partition), then
+    ``clean_out`` as a batch partition (module docstring, "Sink frame"),
+    then
     the batch's surviving block hashes fold into the store. The clean
     step is deterministic given (batch, store-minus-batch-ids), and the
     store append is replay-safe by its doc-id anti-join, so replays are
@@ -669,13 +709,7 @@ def block_sink_batch(
     cleaned = incremental_block_dedup(
         batch_df, path, block_words=block_words, firsts=firsts
     )
-    (
-        cleaned.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(clean_out)
-    )
+    write_batch_partition(cleaned, batch_id, clean_out)
     block_store_append(batch_df, path, block_words=block_words, firsts=firsts)
     spark = batch_df.sparkSession
     for artifact in ("blocks", "docs"):
@@ -688,7 +722,6 @@ def stream_into_block_store(
     checkpoint: str,
     clean_out: str,
     block_words: int = 3,
-    trigger_available_now: bool = True,
 ):
     """Continuous CCNet-style passage dedup: every micro-batch of
     documents is cleaned against the persisted block-hash store
@@ -696,16 +729,8 @@ def stream_into_block_store(
     written exactly-once, and folded into the store. The corpus text is
     never rescanned; the store grows by DISTINCT corpus blocks only.
     """
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        block_sink_batch(batch_df, batch_id, path, clean_out, block_words=block_words)
-
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    sink = partial(block_sink_batch, path=path, clean_out=clean_out, block_words=block_words)
+    return _start(stream, sink, checkpoint)
 
 
 def importance_sink_batch(
@@ -718,8 +743,8 @@ def importance_sink_batch(
     salt: str = "dsir",
 ) -> None:
     """One micro-batch of continuous DSIR importance scoring: FOLD the
-    batch's bucket counts into the persisted state first (batch_id
-    partition, dynamic overwrite — idempotent), then score the batch's
+    batch's bucket counts into the persisted state first (a batch
+    partition, module docstring "Sink frame"), then score the batch's
     raw docs against the ACCUMULATED state including itself. Fold-first
     makes replay deterministic: the replayed fold rewrites the same
     partition, so the replayed scoring sees the identical state. Weights
@@ -740,13 +765,7 @@ def importance_sink_batch(
     scored = importance_weights_from_state(
         batch_df, path, target_pred, n_buckets=n_buckets, salt=salt
     )
-    (
-        scored.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(scored_out)
-    )
+    write_batch_partition(scored, batch_id, scored_out)
     # No compaction here: the state under {path}/partials is PARTITIONED
     # by batch_id, and that layout IS the replay contract — a replayed
     # fold dynamically overwrites its own partition. Flattening it would
@@ -762,7 +781,6 @@ def stream_importance_state(
     target_pred,
     n_buckets: int = 128,
     salt: str = "dsir",
-    trigger_available_now: bool = True,
 ):
     """Continuous DSIR state accumulation + per-batch scoring: the
     persisted state is <= ``n_buckets`` rows per batch_id partition (one
@@ -770,19 +788,11 @@ def stream_importance_state(
     deliberately NOT compacted), keeping the streaming side at KILOBYTES
     of state regardless of corpus size — the extreme end of the repo's
     persisted-artifact set (medallion, KMV, ANN, MinHash, blocks)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        importance_sink_batch(
-            batch_df, batch_id, path, scored_out, target_pred,
-            n_buckets=n_buckets, salt=salt,
-        )
-
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    sink = partial(
+        importance_sink_batch, path=path, scored_out=scored_out,
+        target_pred=target_pred, n_buckets=n_buckets, salt=salt,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint)
 
 
 def stream_into_sq8_index(
@@ -790,7 +800,6 @@ def stream_into_sq8_index(
     path: str,
     checkpoint: str,
     id_col: str = "vec_id",
-    trigger_available_now: bool = True,
 ):
     """Continuous embedding ingest into the persisted SQ8 index — the
     :func:`stream_into_ann_index` contract applied to the scalar-
@@ -800,11 +809,11 @@ def stream_into_sq8_index(
     (:func:`append_sq8_index` — O(batch), out-of-range components clamp
     to the [0,255] edges, never a recalibration).
 
-    Exactly-once: appends are guarded by an anti-join against the ids
-    already in ``codes`` — a replayed batch (crash between append and
-    checkpoint commit) is a no-op. The probe scans only the code arrays
-    (~4x smaller than raw floats). ``compact_artifact`` bounds the
-    one-file-set-per-batch growth exactly as for the IVF-PQ artifacts.
+    Exactly-once: the built probe and the id anti-join of the sink frame
+    (module docstring), against the ids in ``codes``. The probe scans
+    only the code arrays (~4x smaller than raw floats).
+    ``compact_artifact`` bounds the one-file-set-per-batch growth exactly
+    as for the IVF-PQ artifacts.
 
     Calibration caveat (the SQ8 analogue of train-then-add): stats
     reflect the FIRST batch's ranges; sustained drift outside them
@@ -816,32 +825,13 @@ def stream_into_sq8_index(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        # same crashed-build self-heal as stream_into_ann_index: rebuild
-        # when the sidecar is absent OR fails to parse as valid params
-        # (the '_building_' marker build_sq8_index writes first); only
-        # genuine IO errors propagate.
-        complete = False
-        if path_exists(spark, f"{path}/params.json"):
-            try:
-                AIX.load_sq8_params(spark, path)
-                complete = True
-            except (TypeError, ValueError, KeyError, IndexError):
-                complete = False
-        if not complete:
+        if not _built(spark, path, AIX.load_sq8_params):
             AIX.build_sq8_index(batch_df, path)
             return
-        seen = spark.read.parquet(f"{path}/codes").select(F.col(id_col)).distinct()
-        fresh = batch_df.join(seen, id_col, "left_anti")
-        if not fresh.isEmpty():
-            AIX.append_sq8_index(fresh, path)
+        _append_unseen(batch_df, path, "codes", id_col, id_col, AIX.append_sq8_index)
         compact_artifact(spark, f"{path}/codes")
 
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _sink, checkpoint)
 
 
 def stream_into_text_index(
@@ -849,7 +839,6 @@ def stream_into_text_index(
     path: str,
     checkpoint: str,
     id_col: str = "doc_id",
-    trigger_available_now: bool = True,
 ):
     """Continuous document ingest into the persisted inverted text index
     — the :func:`stream_into_sq8_index` contract applied to the text
@@ -860,12 +849,11 @@ def stream_into_text_index(
     (:func:`append_text_index` — O(batch), never a corpus rescan or a
     silent re-score).
 
-    Exactly-once: appends are guarded by an anti-join against the ids
-    already in ``doclen`` (EVERY indexed doc has a doclen row, including
-    empty ones — postings would miss token-less docs), so a replayed
-    batch after a crash between append and checkpoint commit is a no-op.
-    ``compact_artifact`` bounds the one-file-set-per-batch growth on
-    both per-doc artifacts.
+    Exactly-once: the built probe and the id anti-join of the sink frame
+    (module docstring), against the ids in ``doclen`` (EVERY indexed doc
+    has a doclen row, including empty ones — postings would miss
+    token-less docs). ``compact_artifact`` bounds the
+    one-file-set-per-batch growth on both per-doc artifacts.
 
     Normalization caveat (the text analogue of calibrate-then-add):
     avgdl reflects the FIRST batch's length distribution; sustained
@@ -878,25 +866,10 @@ def stream_into_text_index(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        # crashed-build self-heal: rebuild when the sidecar is absent OR
-        # fails to parse as valid params (the '_building_' marker
-        # build_text_index writes first); genuine IO errors propagate.
-        complete = False
-        if path_exists(spark, f"{path}/params.json"):
-            try:
-                TIX.load_text_params(spark, path)
-                complete = True
-            except (TypeError, ValueError, KeyError, IndexError):
-                complete = False
-        if not complete:
+        if not _built(spark, path, TIX.load_text_params):
             TIX.build_text_index(batch_df, path)
             return
-        seen = spark.read.parquet(f"{path}/doclen").select(
-            F.col("doc_id").alias(id_col)
-        ).distinct()
-        fresh = batch_df.join(seen, id_col, "left_anti")
-        if not fresh.isEmpty():
-            TIX.append_text_index(fresh, path)
+        _append_unseen(batch_df, path, "doclen", "doc_id", id_col, TIX.append_text_index)
         # postings are term-hash-bucketed hive partitions (r13): the blind
         # coalescer would flatten the tokb layout, so maintenance goes
         # through the layout-aware compactor, gated on the same cheap
@@ -910,12 +883,7 @@ def stream_into_text_index(
         else:
             compact_artifact(spark, f"{path}/doclen")
 
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _sink, checkpoint)
 
 
 def stream_into_matview(
@@ -924,7 +892,6 @@ def stream_into_matview(
     checkpoint: str,
     key_cols: list[str],
     measure: str,
-    trigger_available_now: bool = True,
 ):
     """Continuously maintained materialized aggregate — the
     :func:`stream_into_text_index` contract applied to QUERY RESULTS
@@ -932,71 +899,22 @@ def stream_into_matview(
     BUILDS the view from its own partial aggregates; every later batch
     folds in O(batch) partials, never rescanning history.
 
-    Exactly-once: the view's replay guard is the BATCH KEY — Structured
-    Streaming replays a failed micro-batch under the same ``batch_id``,
-    ``append_matview`` sees the key in its applied set (live ``_batch``
-    tags ∪ the compaction ledger) and no-ops. This is the guard additive
-    state needs: content-hash dedup cannot save a double-applied SUM.
-
-    Crashed-build self-heal mirrors the text-index sink: a build that
-    died before the params sidecar landed leaves no parseable
-    ``params.json`` and the next batch rebuilds.
+    Exactly-once: the view's replay guard is the BATCH KEY
+    (:func:`_guarded_view_sink`, module docstring "Sink frame"). This is
+    the guard additive state needs: content-hash dedup cannot save a
+    double-applied SUM. ``measure`` may be a single column name (legacy
+    layout) or a measure-SPEC list (multi-measure / avg / HLL view); the
+    append path dispatches on the frozen params either way.
     """
     from activecampaign_api_data_pipeline_spark.operators import matview as MV
 
-    # Replay guard, paid ONCE per stream run instead of once per batch
-    # (r13 change 5's proven-superset pattern extended to the stream
-    # sink): the applied set is seeded from the store on the first append
-    # this run — or known exactly when this run BUILT the store — and
-    # later batches consult/extend the closure set with zero Spark jobs.
-    # This is sound because the sink is the store's single writer (the
-    # foreachBatch contract all these stores document): the only writes
-    # that can land between two of this run's batches are its own, which
-    # the closure records. A crash-replay restarts the stream, which
-    # builds a FRESH closure and re-seeds from the store — the replayed
-    # batch key is found in the seeded set and no-ops, exactly as before.
-    applied: set[str] | None = None
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal applied
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        batch_key = f"batch_{batch_id:08d}"
-        complete = False
-        if path_exists(spark, f"{path}/params.json"):
-            try:
-                MV.load_matview_params(spark, path)
-                complete = True
-            except (FileNotFoundError, TypeError, ValueError, KeyError, IndexError):
-                complete = False
-        if not complete:
-            # `measure` may be a single column name (legacy layout) or a
-            # measure-SPEC list (multi-measure / avg / HLL view) — the
-            # append path dispatches on the frozen params either way
-            if isinstance(measure, str):
-                MV.build_matview(
-                    batch_df, path, key_cols, measure, batch_key=batch_key
-                )
-            else:
-                MV.build_matview_multi(
-                    batch_df, path, key_cols, measure, batch_key=batch_key
-                )
-            applied = {batch_key}
-            return
-        if applied is None:
-            applied = MV.applied_batches_full(spark, path)
-        if batch_key in applied:
-            return
-        MV.append_matview(batch_df, path, batch_key, skip_replay_check=True)
-        applied.add(batch_key)
-
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    build = MV.build_matview if isinstance(measure, str) else MV.build_matview_multi
+    sink = _guarded_view_sink(
+        path,
+        lambda df, key: build(df, path, key_cols, measure, batch_key=key),
+        MV.append_matview,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint)
 
 
 def stream_into_hll_view(
@@ -1006,7 +924,6 @@ def stream_into_hll_view(
     key_cols: list[str],
     col: str,
     lg_k: int = 12,
-    trigger_available_now: bool = True,
 ):
     """Continuously maintained approximate-distinct view — the
     :func:`stream_into_matview` contract with HLL sketch partials
@@ -1014,48 +931,19 @@ def stream_into_hll_view(
     later batch folds an O(batch) per-key sketch in; register-max merge
     makes the folded state exactly the sketch of the union.
 
-    Exactly-once: the ``batch_id`` replay guard, same as the matview
-    sink — max-merge registers are idempotent anyway, but the guard
-    keeps the ``applied`` ledger truthful for compaction. Crashed-build
-    self-heal: no parseable params.json == next batch rebuilds."""
+    Exactly-once: the batch-key replay guard of the matview sink —
+    max-merge registers are idempotent anyway, but the guard keeps the
+    ``applied`` ledger truthful for compaction."""
     from activecampaign_api_data_pipeline_spark.operators import hll_store as HS
-    from activecampaign_api_data_pipeline_spark.operators import matview as MV
 
-    # once-per-run seeded replay guard — see stream_into_matview
-    applied: set[str] | None = None
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal applied
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        batch_key = f"batch_{batch_id:08d}"
-        complete = False
-        if path_exists(spark, f"{path}/params.json"):
-            try:
-                MV.load_matview_params(spark, path)
-                complete = True
-            except (FileNotFoundError, TypeError, ValueError, KeyError, IndexError):
-                complete = False
-        if not complete:
-            HS.build_hll_view(
-                batch_df, path, key_cols, col, lg_k=lg_k, batch_key=batch_key
-            )
-            applied = {batch_key}
-            return
-        if applied is None:
-            applied = MV.applied_batches_full(spark, path)
-        if batch_key in applied:
-            return
-        HS.append_hll_view(batch_df, path, batch_key, skip_replay_check=True)
-        applied.add(batch_key)
-
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    sink = _guarded_view_sink(
+        path,
+        lambda df, key: HS.build_hll_view(
+            df, path, key_cols, col, lg_k=lg_k, batch_key=key
+        ),
+        HS.append_hll_view,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint)
 
 
 def stream_into_join_view(
@@ -1065,7 +953,6 @@ def stream_into_join_view(
     a_cols: list[str],
     b_cols: list[str],
     side_col: str = "side",
-    trigger_available_now: bool = True,
 ):
     """Continuously maintained JOIN view from ONE interleaved changelog
     stream (``operators/matview_join.py``): each micro-batch may carry
@@ -1077,7 +964,8 @@ def stream_into_join_view(
 
     Exactly-once: side-qualified batch keys (``a:batch_N``/``b:batch_N``)
     ride the join-view's replay guard — a replayed micro-batch rewrites
-    its idempotent history partitions and skips the fold. The view must
+    its idempotent history partitions and skips the fold. The guard is
+    read once per run, as in :func:`_guarded_view_sink`. The view must
     be declared (``create_join_view``) before the stream starts; the
     schema contract is the declared params, not batch inference.
     """
@@ -1086,9 +974,6 @@ def stream_into_join_view(
         applied_keys,
     )
 
-    # once-per-run seeded replay guard — see stream_into_matview; keys
-    # here are side-qualified ("a:batch_N"/"b:batch_N") and the sink is
-    # the store's single writer, so the closure stays authoritative
     applied: set[str] | None = None
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -1109,12 +994,7 @@ def stream_into_join_view(
             )
             applied.add(key)
 
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _sink, checkpoint)
 
 
 def stream_running_totals(
@@ -1123,7 +1003,6 @@ def stream_running_totals(
     checkpoint: str,
     key_col: str = "user_id",
     cents_col: str = "cents",
-    trigger_available_now: bool = True,
 ):
     """Custom ARBITRARY-STATEFUL operator via ``applyInPandasWithState``
     — the escape hatch for semantics Spark's built-in stateful ops can't
@@ -1141,8 +1020,8 @@ def stream_running_totals(
     would make emissions depend on fold order.
 
     At 100 TB: state is two longs per key sharded across executors by the
-    group key; each batch shuffles only its own rows. The sink partitions
-    by batch for exactly-once replay (a replayed batch overwrites itself).
+    group key; each batch shuffles only its own rows. The sink writes
+    batch partitions (module docstring, "Sink frame").
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -1163,17 +1042,4 @@ def stream_running_totals(
     folded = stream.groupBy(key_col).applyInPandasWithState(
         _fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "batch_id"
-        ).parquet(sink)
-
-    writer = folded.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(folded, partial(write_batch_partition, path=sink), checkpoint)

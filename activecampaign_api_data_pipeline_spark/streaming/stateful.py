@@ -16,10 +16,16 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 from contextlib import contextmanager
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from activecampaign_api_data_pipeline_spark.streaming.incremental import (
+    _start,
+    write_batch_partition,
+)
 
 
 @contextmanager
@@ -186,12 +192,10 @@ def _update_trailing_anomaly(
 
 def stream_trailing_anomaly(stream: DataFrame, sink: str, checkpoint: str):
     """Continuous trailing-z anomaly monitor: bounded per-key state (10
-    observations), Arrow-batched scoring, batch_id-partitioned
-    exactly-once sink (a replayed batch overwrites its own partition).
+    observations), Arrow-batched scoring, batch-partition sink
+    (``streaming.incremental`` module docstring, "Sink frame").
     At 100 TB state is ~30 longs per key in the state store; each batch
     shuffles only its own rows on the key."""
-    from pyspark.sql import functions as F
-
     scored = stream.groupBy("user_id").applyInPandasWithState(
         _update_trailing_anomaly,
         ANOM_OUT_SCHEMA,
@@ -199,20 +203,7 @@ def stream_trailing_anomaly(stream: DataFrame, sink: str, checkpoint: str):
         "append",
         GroupStateTimeout.NoTimeout,
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "batch_id"
-        ).parquet(sink)
-
-    return (
-        scored.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(scored, partial(write_batch_partition, path=sink), checkpoint)
 
 
 PAT_OUT_SCHEMA = "user_id long, n_matches long, first_match_event long"
@@ -273,12 +264,10 @@ def _update_pattern_match(
 
 def stream_pattern_match(stream: DataFrame, sink: str, checkpoint: str):
     """Continuous event-sequence CEP: bounded per-key state (2 rows of
-    lookahead in the state store), Arrow-batched scanning, batch_id-
-    partitioned exactly-once sink. At 100 TB the state is 3 scalars x 2
+    lookahead in the state store), Arrow-batched scanning, batch-
+    partition sink ("Sink frame"). At 100 TB the state is 3 scalars x 2
     per key and each batch shuffles only its own rows on the key — the
     Flink-CEP shape on Structured Streaming."""
-    from pyspark.sql import functions as F
-
     scored = stream.groupBy("user_id").applyInPandasWithState(
         _update_pattern_match,
         PAT_OUT_SCHEMA,
@@ -286,20 +275,7 @@ def stream_pattern_match(stream: DataFrame, sink: str, checkpoint: str):
         "append",
         GroupStateTimeout.NoTimeout,
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "batch_id"
-        ).parquet(sink)
-
-    return (
-        scored.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(scored, partial(write_batch_partition, path=sink), checkpoint)
 
 
 DEB_OUT_SCHEMA = "user_id long, n_new long, n_kept long"
@@ -347,12 +323,10 @@ def _make_debounce_update(gap_s: int):
 
 def stream_debounce(stream: DataFrame, sink: str, checkpoint: str, gap_s: int = 3600):
     """Continuous telemetry debounce: 1-row per-key state (last raw
-    (es, type)), Arrow-batched comparison, batch_id-partitioned
-    exactly-once sink. At 100 TB the state store holds one long and one
+    (es, type)), Arrow-batched comparison, batch-partition sink
+    ("Sink frame"). At 100 TB the state store holds one long and one
     short string per key and each batch shuffles only its own rows on
     the key — the cheapest stateful cleaner there is."""
-    from pyspark.sql import functions as F
-
     scored = stream.groupBy("user_id").applyInPandasWithState(
         _make_debounce_update(gap_s),
         DEB_OUT_SCHEMA,
@@ -360,17 +334,4 @@ def stream_debounce(stream: DataFrame, sink: str, checkpoint: str, gap_s: int = 
         "append",
         GroupStateTimeout.NoTimeout,
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "batch_id"
-        ).parquet(sink)
-
-    return (
-        scored.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(scored, partial(write_batch_partition, path=sink), checkpoint)

@@ -1,5 +1,6 @@
 """Unit tests for window/dedup/rollup/conform operators."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from activecampaign_api_data_pipeline_spark.operators.conform import conform_union, union_by_name
@@ -840,3 +841,56 @@ def test_scoped_advisory_partition_restores_conf(spark):
         with scoped_advisory_partition(spark, "2m"):
             raise RuntimeError("boom")
     assert spark.conf.get(key) == old
+
+
+def _ensure_case(spark, kind):
+    """(operator module, ensure(path) call) for one persisted artifact."""
+    import random
+
+    from pyspark.sql import Row
+
+    from activecampaign_api_data_pipeline_spark.operators import ann_index, dedup, text_index
+
+    if kind == "ann":
+        rng = random.Random(3)
+        emb = spark.createDataFrame(
+            [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(30)],
+            "vec_id long, embedding array<double>",
+        )
+        params = dict(n_centroids=4, m=4, ksub=8, n_iters=2)
+        return ann_index, lambda p: ann_index.ensure_ann_index(emb, p, **params)
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text="a b c d e f g h"), Row(doc_id=2, text="b c d x y")]
+    )
+    if kind == "text":
+        return text_index, lambda p: text_index.ensure_text_index(docs, p)
+    return dedup, lambda p: dedup.ensure_decontam_store(docs, p, ngram=3, max_df=100)
+
+
+@pytest.mark.parametrize("kind", ["ann", "text", "decontam"])
+def test_ensure_propagates_sidecar_io_error(spark, tmp_path, monkeypatch, kind):
+    """An IO error reading the params sidecar of a built artifact is not
+    "absent": ``ensure_*`` raises it and leaves every file in place
+    instead of rebuilding over the artifact."""
+    import os
+
+    module, ensure = _ensure_case(spark, kind)
+    path = str(tmp_path / "artifact")
+    ensure(path)
+
+    def files():
+        return {
+            os.path.relpath(os.path.join(d, f), path): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, names in os.walk(path)
+            for f in names
+        }
+
+    before = files()
+
+    def unreadable(spark, p):
+        raise PermissionError(p)
+
+    monkeypatch.setattr(module, "read_text_sidecar", unreadable)
+    with pytest.raises(PermissionError):
+        ensure(path)
+    assert files() == before

@@ -1108,3 +1108,43 @@ def test_only_storage_rename_renames():
             and id(n) not in allowed
         ]
     assert not offenders, offenders
+
+
+def test_sinks_share_start_and_batch_partition_write():
+    """Every ``foreachBatch`` start in ``streaming/`` is the one in
+    ``incremental._start``, and every ``partitionBy("batch_id")`` in
+    ``streaming/`` and ``operators/curation.py`` is the one in
+    ``incremental.write_batch_partition``: a copied start or replay write
+    can drift from the sink frame unseen."""
+    import ast
+    import pathlib
+
+    from activecampaign_api_data_pipeline_spark import storage
+
+    pkg = pathlib.Path(storage.__file__).parent
+    helpers = {"foreachBatch": "_start", "partitionBy": "write_batch_partition"}
+    files = sorted((pkg / "streaming").rglob("*.py")) + [pkg / "operators" / "curation.py"]
+    offenders = []
+    for f in files:
+        tree = ast.parse(f.read_text())
+        inside = {
+            id(n): fn.name
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name in helpers.values()
+            for n in ast.walk(fn)
+        }
+        for n in ast.walk(tree):
+            if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                continue
+            name = n.func.attr
+            if name == "foreachBatch" and f.parent.name != "streaming":
+                continue
+            if name == "partitionBy" and not (
+                len(n.args) == 1
+                and isinstance(n.args[0], ast.Constant)
+                and n.args[0].value == "batch_id"
+            ):
+                continue
+            if name in helpers and inside.get(id(n)) != helpers[name]:
+                offenders.append(f"{f.relative_to(pkg)}:{n.lineno} {name}")
+    assert not offenders, offenders

@@ -1324,3 +1324,39 @@ def test_stream_into_matview_second_run_replays_noop(spark, tmp_path):
     again = sorted(map(tuple, MV.read_matview(spark, view).collect()))
     assert again == once
     assert MV.applied_batches_full(spark, view) == applied_once
+
+
+@pytest.mark.parametrize("codec", ["ann", "sq8"])
+def test_index_sink_builds_over_empty_legacy_sidecar(spark, tmp_path, codec):
+    """A present-but-empty ``params.json`` directory (a crashed legacy
+    directory write) marks an unfinished build: the first batch builds
+    the index instead of failing the stream."""
+    import os
+    import random
+
+    from activecampaign_api_data_pipeline_spark.operators import ann_index as AIX
+    from activecampaign_api_data_pipeline_spark.streaming import incremental as INC
+
+    rng = random.Random(5)
+    schema = "vec_id long, embedding array<double>"
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
+    src = tmp_path / "emb_stream"
+    src.mkdir()
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src / "b0"))
+    idx = str(tmp_path / "idx")
+    os.makedirs(f"{idx}/params.json")
+
+    stream = spark.readStream.schema(schema).parquet(str(src) + "/b*")
+    ckpt = str(tmp_path / "ckpt")
+    if codec == "ann":
+        params = dict(n_centroids=4, m=4, ksub=8, n_iters=2)
+        q = INC.stream_into_ann_index(stream, idx, ckpt, build_params=params)
+        load = AIX.load_ann_params
+    else:
+        q = INC.stream_into_sq8_index(stream, idx, ckpt)
+        load = AIX.load_sq8_params
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert load(spark, idx).dim == 8
+    coded = spark.read.parquet(f"{idx}/codes").select("vec_id").distinct()
+    assert coded.count() == len(rows)
