@@ -34,17 +34,43 @@ to the buckets the new batch actually touches:
   on ``_kb`` serves both the rank and the bucketed write.
 
 So per run, work is O(new batch + touched buckets), not O(master) as in the
-reference. At 100 TB raise ``n_buckets`` so a bucket ≪ executor memory; a
-run touching k buckets rewrites k/n_buckets of gold, nothing else. Actions
-are few as well: the bronze and silver writes count their own rows and
-buckets as they run (``DataFrame.observe``), so no count job re-reads a
-batch, and an empty batch stops after bronze — it writes no silver and no
-gold. A persist onto an existing table runs at most 8 Spark jobs. With
-``compact=True`` (the streaming sink's cadence), the gold refresh also
-compacts the batch's silver buckets from its own read: one ``_kb``
-exchange ranks them, one materialized copy feeds both the silver rewrite
-and the gold write, and the persist runs 10 jobs where a persist followed
-by :meth:`TableStore.compact_silver` ran 12. :meth:`TableStore.
+reference; a run touching k buckets rewrites k/n_buckets of gold, nothing
+else.
+
+Table metadata: each table records, in ``<root>/_meta/<table>/_table.json``
+(written by :func:`write_text_sidecar`), its key columns, its updated
+column, its read schema and its bucket count:
+
+- **Pinned schema.** Every read takes the recorded schema
+  (``.schema(...)``), so no footer job infers it and the column order does
+  not depend on the files a read touches. ``persist`` unions additive
+  column drift into the sidecar on the driver, before it writes.
+- **Per-table bucket count.** A new table gets the fewest buckets (a power
+  of two) that keep its first batch's bronze bytes under
+  :data:`BUCKET_BYTES` each, measured by an FS listing; a small table is
+  one bucket, one file per write. ``TableStore(n_buckets=k)`` fixes a new
+  table's count instead. A table keeps its recorded count, whatever count
+  a later store is opened with.
+- **Split.** When a touched gold bucket outgrows :data:`BUCKET_BYTES`
+  (an FS listing after the gold write), the table splits from ``n`` to
+  ``n·2^k`` buckets: bucket ``b`` becomes ``b, b+n, …``, because
+  ``pmod(h, m·n) mod n == pmod(h, n)``. At 100 TB every bucket therefore
+  stays ≪ executor memory without a store-wide setting. The split commits
+  through the sidecar (:meth:`TableStore._split`).
+- **Old lakes.** A table written before the sidecar existed reads under a
+  schema inferred from its part-file footers on the driver, with the
+  count it was written with (the explicit one, else
+  :data:`LEGACY_BUCKETS`), and records both on its first write.
+
+Actions are few as well: the bronze and silver writes count their own
+rows and buckets as they run (``DataFrame.observe``), so no count job
+re-reads a batch, and an empty batch stops after bronze — it writes no
+silver and no gold. A persist onto an existing table runs at most 7 Spark
+jobs. With ``compact=True`` (the streaming sink's cadence), the gold
+refresh also compacts the batch's silver buckets from its own read: one
+``_kb`` exchange ranks them, one materialized copy feeds both the silver
+rewrite and the gold write, and the persist runs 9 jobs where a persist
+followed by :meth:`TableStore.compact_silver` ran 12. :meth:`TableStore.
 maybe_compact` measures fragmentation with an FS listing, so a healthy
 table costs no Spark job.
 
@@ -86,23 +112,35 @@ write of a sidecar or KMV sketch, whose writer then replaces that copy
 idempotent). Contract: a single writer per artifact (the contract the
 appending sinks already require); a reader racing the two renames can
 see a brief path-not-found and should retry — never partial or
-duplicated rows.
+duplicated rows. A split swaps two directories and the sidecar: both
+new layouts are staged first, the sidecar marked ``splitting`` is the
+commit point, and a writer that finds the mark rolls the directory swaps
+forward (:meth:`TableStore._split`).
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from activecampaign_api_data_pipeline_spark.functions.hashing import row_hash
 
 LINEAGE_COLS = ("run_id", "extracted_at")
 BUCKET_COL = "_kb"
 HASH_COL = "_row_hash"
+#: Bytes one bucket of a table may hold: a new table gets the fewest
+#: buckets (a power of two) that keep its first batch under this, and a
+#: table splits when a gold bucket outgrows it. One bucket is one file per
+#: write, so this is also the target file size of the bucketed layers.
+BUCKET_BYTES = 128 * 1024 * 1024
+#: The bucket count of a table written before ``_table.json`` existed,
+#: when the store is opened without an explicit count.
+LEGACY_BUCKETS = 16
 
 
 @dataclass
@@ -118,6 +156,8 @@ class PersistResult:
     touched_buckets: list[int]
     # the narrower set: buckets that actually gained new silver rows
     new_silver_buckets: list[int]
+    # both lists name buckets of the count the persist started with; a
+    # persist that splits the table (TableStore._split) rewrote them all
 
 
 def _fs(spark: SparkSession, path: str):
@@ -286,27 +326,146 @@ def compact_artifact(
 
 
 def _key_bucket(key_cols: list[str], n_buckets: int) -> Column:
+    """The bucket of each row: ``pmod(xxhash64(keys), n_buckets)``. Every
+    caller in this module passes a :class:`TableMeta`'s keys and count,
+    so a table's rows are bucketed by the count it records."""
     ks = [F.coalesce(F.col(k).cast("string"), F.lit("\x00null")) for k in key_cols]
     return F.pmod(F.xxhash64(*ks), F.lit(n_buckets)).cast("int")
 
 
 def _observed(df: DataFrame, obs: Observation) -> DataFrame:
-    """``df`` reporting its row count and its buckets to ``obs`` when an
-    action (here: a write) runs it."""
-    return df.observe(
-        obs, F.count(F.lit(1)).alias("n"), F.collect_set(BUCKET_COL).alias("buckets")
-    )
+    """``df`` reporting its row count, and its buckets when it has them,
+    to ``obs`` when an action (here: a write) runs it."""
+    metrics = [F.count(F.lit(1)).alias("n")]
+    if BUCKET_COL in df.columns:
+        metrics.append(F.collect_set(BUCKET_COL).alias("buckets"))
+    return df.observe(obs, *metrics)
 
 
 def _counts(obs: Observation) -> tuple[int, list[int]]:
     m = obs.get
-    return m["n"], sorted(m["buckets"])
+    return m["n"], sorted(m.get("buckets", []))
+
+
+def _data_files(spark: SparkSession, path: str) -> list:
+    """Hadoop ``FileStatus`` of every data file under ``path`` (Spark's
+    listing rule: no ``_`` or ``.`` file names), oldest first; empty when
+    ``path`` is absent. One recursive listing, no Spark job."""
+    fs, P = _fs(spark, path)
+    if not fs.exists(P(path)):
+        return []
+    out, it = [], fs.listFiles(P(path), True)
+    while it.hasNext():
+        st = it.next()
+        p = st.getPath()
+        if not p.getName().startswith(("_", ".")) and "/_temporary/" not in p.toString():
+            out.append(st)
+    return sorted(out, key=lambda st: (st.getModificationTime(), st.getPath().toString()))
+
+
+def _footer_schema(spark: SparkSession, path) -> StructType:
+    """The Spark schema a parquet part file was written with, read from
+    its footer on the driver (no Spark job)."""
+    jvm = spark._jvm
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            path, spark._jsc.hadoopConfiguration()
+        )
+    )
+    try:
+        raw = reader.getFooter().getFileMetaData().getKeyValueMetaData().get(
+            "org.apache.spark.sql.parquet.row.metadata"
+        )
+    finally:
+        reader.close()
+    return StructType.fromJson(json.loads(raw))
+
+
+_SYSTEM_COLS = (*LINEAGE_COLS, HASH_COL, BUCKET_COL)
+
+
+def _widened(schema: StructType | None, content: StructType) -> StructType:
+    """A table's read schema (``None``: a new table's) grown by the columns
+    of ``content`` it lacks. A new table reads its first batch's columns in
+    their order, then ``run_id``, ``extracted_at``, ``_row_hash`` and
+    ``_kb``. Columns added later (payload drift) follow ``_row_hash`` in
+    name order, so two tables that gained the same columns in different
+    batch orders read the same column order. A column whose type changed
+    raises, as a merged-schema read of its files would."""
+    fields = [StructField(f.name, f.dataType) for f in content if f.name not in _SYSTEM_COLS]
+    if schema is None:
+        lineage = [StructField(c, StringType()) for c in (*LINEAGE_COLS, HASH_COL)]
+        return StructType(fields + lineage + [StructField(BUCKET_COL, IntegerType())])
+    have = {f.name: f.dataType for f in schema.fields}
+    for f in fields:
+        if f.name in have and have[f.name].simpleString() != f.dataType.simpleString():
+            raise ValueError(
+                f"column {f.name} changed type: {have[f.name].simpleString()} -> "
+                f"{f.dataType.simpleString()}"
+            )
+    new = [f for f in fields if f.name not in have]
+    if not new:
+        return schema
+    cols = schema.fields[:-1]  # _kb stays last
+    cut = [f.name for f in cols].index(HASH_COL) + 1
+    drift = sorted(cols[cut:] + new, key=lambda f: f.name)
+    return StructType(cols[:cut] + drift + schema.fields[-1:])
+
+
+@dataclass(frozen=True)
+class TableMeta:
+    """What ``<root>/_meta/<table>/_table.json`` records for one table:
+    its key columns, its updated column, its silver/gold read schema and
+    its bucket count. ``splitting`` marks a committed split whose layer
+    swaps may not have finished (:meth:`TableStore._split`)."""
+
+    key_cols: list[str] | None
+    updated_col: str | None
+    schema: StructType
+    n_buckets: int
+    splitting: bool = False
+
+    def to_json(self) -> str:
+        return json.dumps(
+            {
+                "key_cols": self.key_cols,
+                "updated_col": self.updated_col,
+                "n_buckets": self.n_buckets,
+                "splitting": self.splitting,
+                "schema": self.schema.jsonValue(),
+            }
+        )
+
+    @classmethod
+    def from_json(cls, raw: str) -> "TableMeta":
+        d = json.loads(raw)
+        return cls(
+            d["key_cols"], d["updated_col"], StructType.fromJson(d["schema"]),
+            int(d["n_buckets"]), bool(d.get("splitting", False)),
+        )
+
+    def keyed(self, key_cols: list[str] | None, updated_col: str | None = None) -> "TableMeta":
+        """This metadata with a caller's keys and updated column: a table
+        keeps the keys it was bucketed by (another set raises), and its
+        updated column is the last one a caller named."""
+        if key_cols is not None and self.key_cols is not None and list(key_cols) != self.key_cols:
+            raise ValueError(f"table is keyed by {self.key_cols}, not {list(key_cols)}")
+        return replace(
+            self,
+            key_cols=self.key_cols or (list(key_cols) if key_cols is not None else None),
+            updated_col=updated_col or self.updated_col,
+        )
 
 
 class TableStore:
-    """Bronze/silver/gold store rooted at a directory (local or DFS URI)."""
+    """Bronze/silver/gold store rooted at a directory (local or DFS URI).
 
-    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16):
+    ``n_buckets=None`` sizes each new table's bucket count from its first
+    batch (:data:`BUCKET_BYTES`); an explicit count fixes it. Either way a
+    table keeps the count its ``_table.json`` records, whatever count a
+    later store is opened with."""
+
+    def __init__(self, spark: SparkSession, root: str, n_buckets: int | None = None):
         self.spark = spark
         self.root = root.rstrip("/")
         self.n_buckets = n_buckets
@@ -318,6 +477,132 @@ class TableStore:
 
     def _exists(self, path: str) -> bool:
         return path_exists(self.spark, path)
+
+    # ------------------------------------------------------ table metadata
+
+    def _meta_path(self, table: str) -> str:
+        return f"{self.root}/_meta/{table}/_table.json"
+
+    def _write_meta(self, table: str, meta: TableMeta) -> None:
+        write_text_sidecar(self.spark, self._meta_path(table), meta.to_json())
+
+    def _load(self, table: str) -> TableMeta | None:
+        """The table's recorded metadata. A table without a sidecar (written
+        before it existed) gets metadata inferred from its part-file
+        footers on the driver, with no keys and the count it was written
+        with (the explicit count, else :data:`LEGACY_BUCKETS`); ``None``
+        when it has no files. Reads only: heals and writes nothing."""
+        raw = read_text_sidecar(self.spark, self._meta_path(table))
+        if raw is not None:
+            return TableMeta.from_json(raw)
+        schema = None
+        for layer in ("silver", "gold", "bronze"):
+            for st in _data_files(self.spark, self._path(layer, table)):
+                schema = _widened(schema, _footer_schema(self.spark, st.getPath()))
+            if schema is not None:
+                return TableMeta(None, None, schema, self.n_buckets or LEGACY_BUCKETS)
+        return None
+
+    def _open(
+        self, table: str, key_cols: list[str] | None = None, updated_col: str | None = None
+    ) -> TableMeta | None:
+        """A writer's entry: heal a crashed sidecar write or split, then
+        return the table's metadata, keyed by ``key_cols``. A table written
+        before the sidecar existed gets its sidecar here once its keys are
+        known. ``None``: a new table (no sidecar and no silver)."""
+        path = self._meta_path(table)
+        _heal(self.spark, path, path + ".__tmp__")
+        raw = read_text_sidecar(self.spark, path)
+        meta = TableMeta.from_json(raw) if raw is not None else None
+        if meta is not None and meta.splitting:
+            meta = self._finish_split(table, meta)
+        for layer in ("silver", "gold"):
+            # a split that crashed before its commit point left only staging
+            staging = self._path(layer, table) + "__splitting"
+            if self._exists(staging):
+                fs, P = _fs(self.spark, staging)
+                fs.delete(P(staging), True)
+        if meta is None and self._exists(self._path("silver", table)):
+            meta = self._load(table)
+        if meta is None:
+            return None
+        keyed = meta.keyed(key_cols, updated_col)
+        if keyed.key_cols is not None and (raw is None or keyed != meta):
+            self._write_meta(table, keyed)
+        return keyed
+
+    def _split(self, table: str, n_buckets: int) -> None:
+        """Re-bucket the table's silver and gold to ``n_buckets``, a
+        power-of-two multiple of its count ``n``. Bucket ``b`` splits into
+        ``b, b + n, …``, since ``pmod(h, m·n) mod n == pmod(h, n)``; the
+        rows and the gold ranks are unchanged.
+
+        Crash-safe across the three artifacts: both new layouts are written
+        beside the live ones (``<layer>/<table>__splitting``), then the
+        sidecar recording the new count with ``splitting`` set is the
+        commit point. The layer swaps (:func:`_swap`) follow, and the mark
+        is cleared. A writer that finds the mark set rolls the swaps
+        forward (:meth:`_finish_split`); one that finds staging without it
+        drops the staging (:meth:`_open`)."""
+        meta = self._open(table)
+        if meta is None or n_buckets <= meta.n_buckets:
+            return
+        new = replace(meta, n_buckets=n_buckets, splitting=True)
+        for layer in ("silver", "gold"):
+            if self._exists(self._path(layer, table)):
+                self._read(meta, layer, table).withColumn(
+                    BUCKET_COL, _key_bucket(new.key_cols, new.n_buckets)
+                ).repartition(F.col(BUCKET_COL)).write.mode("overwrite").partitionBy(
+                    BUCKET_COL
+                ).parquet(self._path(layer, table) + "__splitting")
+        self._write_meta(table, new)
+        self._finish_split(table, new)
+
+    def _finish_split(self, table: str, meta: TableMeta) -> TableMeta:
+        """Swap in every staged layer of a committed split, then clear the
+        ``splitting`` mark."""
+        for layer in ("silver", "gold"):
+            live = self._path(layer, table)
+            staging = live + "__splitting"
+            if self._exists(staging) and self._exists(live):
+                _swap(self.spark, live, staging)
+            _heal(self.spark, live, staging)
+        done = replace(meta, splitting=False)
+        self._write_meta(table, done)
+        return done
+
+    def _sized(self, table: str, run_id: str) -> int:
+        """A new table's bucket count: the explicit one, else the fewest
+        buckets (a power of two) that keep the bytes of its first bronze
+        run partition under :data:`BUCKET_BYTES` each."""
+        if self.n_buckets is not None:
+            return self.n_buckets
+        size = sum(
+            st.getLen()
+            for st in _data_files(self.spark, f"{self._path('bronze', table)}/run_id={run_id}")
+        )
+        n = 1
+        while size > n * BUCKET_BYTES:
+            n *= 2
+        return n
+
+    def _grow(self, table: str, meta: TableMeta, buckets: list[int]) -> None:
+        """Split the table when a bucket of ``buckets`` outgrew
+        :data:`BUCKET_BYTES` in gold, into enough buckets that the largest
+        one's bytes, evenly spread, fit. An FS listing, no Spark job."""
+        gold = self._path("gold", table)
+        biggest = max(
+            (
+                sum(st.getLen() for st in _data_files(self.spark, f"{gold}/{BUCKET_COL}={b}"))
+                for b in buckets
+            ),
+            default=0,
+        )
+        factor = 1
+        while biggest > factor * BUCKET_BYTES:
+            factor *= 2
+        if factor > 1:
+            self._split(table, meta.n_buckets * factor)
 
     # ------------------------------------------------------------- persist
 
@@ -349,34 +634,52 @@ class TableStore:
         batch compacts nothing.
         """
         content_cols = [c for c in df.columns if c not in LINEAGE_COLS]
+        content = df.select(*content_cols).schema
+        meta = self._open(table, key_cols, updated_col)
+        created = meta is None
+        if not created:
+            # record drift BEFORE any write: a crash then leaves a schema
+            # wider than the files, whose extra columns read as NULL
+            widened = replace(meta, schema=_widened(meta.schema, content))
+            if widened != meta:
+                self._write_meta(table, widened)
+                meta = widened
         stamp = (
             F.lit(extracted_at)
             if extracted_at is not None
             else F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss")
         )
-        # P1 lineage + P2 content hash + bucket, all expression work (no UDFs)
+        # P1 lineage + P2 content hash, all expression work (no UDFs)
         staged = (
             df.select(*content_cols)
             .withColumn("run_id", F.lit(run_id))
             .withColumn("extracted_at", stamp)
             .withColumn(HASH_COL, row_hash(df, content_cols))
-            .withColumn(BUCKET_COL, _key_bucket(key_cols, self.n_buckets))
         )
-        # cluster by bucket FIRST, then batch-internal exact dedup (A1
-        # within the run) keyed (bucket, hash): equal hashes imply equal
-        # content, hence equal keys, hence the same bucket, so the dedup
-        # result is identical — but the bucket partitioning now satisfies
-        # the dedup's clustering requirement and the whole stage runs on
-        # ONE exchange where dedup-then-repartition paid two full
-        # shuffles of the batch (plan-verified: 2 Exchange → 1). The
-        # bucket clustering also keeps every partitioned write below at
-        # one file per touched bucket instead of (tasks × buckets) small
-        # files — at 100 TB this shuffle-before-dynamic-partition-insert
-        # is the standard pattern; without it a 1000-task stage writing
-        # 4096 buckets would create millions of files.
-        staged = staged.repartition(F.col(BUCKET_COL)).dropDuplicates(
-            [BUCKET_COL, HASH_COL]
-        )
+        if not created:
+            # cluster by bucket FIRST, then batch-internal exact dedup (A1
+            # within the run) keyed (bucket, hash): equal hashes imply
+            # equal content, hence equal keys, hence the same bucket, so
+            # the dedup result is identical — but the bucket partitioning
+            # now satisfies the dedup's clustering requirement and the
+            # whole stage runs on ONE exchange where dedup-then-repartition
+            # paid two full shuffles of the batch (plan-verified: 2
+            # Exchange → 1). The bucket clustering also keeps every
+            # partitioned write below at one file per touched bucket
+            # instead of (tasks × buckets) small files — at 100 TB this
+            # shuffle-before-dynamic-partition-insert is the standard
+            # pattern; without it a 1000-task stage writing 4096 buckets
+            # would create millions of files.
+            staged = (
+                staged.withColumn(BUCKET_COL, _key_bucket(meta.key_cols, meta.n_buckets))
+                .repartition(F.col(BUCKET_COL))
+                .dropDuplicates([BUCKET_COL, HASH_COL])
+            )
+        else:
+            # a new table has no count before its bronze write (it is sized
+            # from it): the dedup clusters on the hash, so a large first
+            # batch spreads over as many tasks as the exchange gives it
+            staged = staged.repartition(F.col(HASH_COL)).dropDuplicates([HASH_COL])
         staged.persist()
         try:
             # 1. bronze: per-run partition (never read-modify other runs).
@@ -398,7 +701,8 @@ class TableStore:
             n_delta, buckets = _counts(batch)
             if not n_delta:
                 # nothing to dedup and no bucket to refresh: silver and
-                # gold stay as they are (a new table gets neither)
+                # gold stay as they are (a new table gets neither, and no
+                # sidecar: its first non-empty batch sizes it)
                 return PersistResult(table, run_id, 0, 0, [], [])
 
             # 2. silver: anti-join on (_kb, _row_hash) — bucket-pruned probe.
@@ -408,7 +712,23 @@ class TableStore:
             #    needed to infer them.
             silver_path = self._path("silver", table)
             fresh = staged  # no silver yet: the anti-join is vacuous
-            if self._exists(silver_path):
+            if created:
+                meta = TableMeta(
+                    list(key_cols), updated_col, _widened(None, content),
+                    self._sized(table, run_id),
+                )
+                # the sidecar goes before silver: a table with silver has one
+                self._write_meta(table, meta)
+                fresh = staged.withColumn(
+                    BUCKET_COL, _key_bucket(meta.key_cols, meta.n_buckets)
+                )
+                # one bucket is one file without an exchange
+                fresh = (
+                    fresh.coalesce(1)
+                    if meta.n_buckets == 1
+                    else fresh.repartition(F.col(BUCKET_COL))
+                )
+            elif self._exists(silver_path):
                 old = (
                     self.spark.read.schema(f"{HASH_COL} string, {BUCKET_COL} int")
                     .parquet(silver_path)
@@ -424,6 +744,8 @@ class TableStore:
                 silver_path
             )
             n_new, touched = _counts(new)
+            if created:
+                buckets = touched
 
             # 3. gold: recompute ONLY the batch's buckets from silver,
             #    dynamic partition overwrite leaves the rest untouched.
@@ -441,6 +763,8 @@ class TableStore:
             )
         finally:
             staged.unpersist()
+        # 4. growth: a gold bucket past BUCKET_BYTES splits the table
+        self._grow(table, meta, buckets)
         return PersistResult(table, run_id, n_delta, n_new, buckets, touched)
 
     def rebuild_gold(
@@ -471,6 +795,7 @@ class TableStore:
         overwrite comes first; a crash before the gold write leaves
         silver's rows unchanged, and re-running the refresh repairs gold.
         """
+        meta = self._open(table, key_cols, updated_col)
         order = []
         if updated_col is not None:
             order.append(F.col(updated_col).desc_nulls_last())
@@ -488,9 +813,9 @@ class TableStore:
         # write below (one file per bucket).
         rank = F.row_number().over(Window.partitionBy(BUCKET_COL, *key_cols).orderBy(*order))
         if compact:
-            silver = self._compact(table, buckets, rank)
+            silver = self._compact(table, meta, buckets, rank)
         else:
-            silver = self.read("silver", table)
+            silver = self._read(meta, "silver", table)
             if buckets is not None:
                 silver = silver.filter(F.col(BUCKET_COL).isin(buckets))
             silver = silver.repartition(F.col(BUCKET_COL)).withColumn("_rn", rank)
@@ -517,6 +842,8 @@ class TableStore:
             # the write; a crash in between is repaired by re-running this
             # idempotent rebuild, same as the documented gold-commit
             # window). O(selected buckets) directory ops, no data rewrite.
+            # A gold with no bucket left reads as 0 typed rows under the
+            # pinned schema.
             latest.persist()
             survivors = {
                 r[BUCKET_COL] for r in latest.select(BUCKET_COL).distinct().collect()
@@ -529,23 +856,6 @@ class TableStore:
             fs, P = _fs(self.spark, gold_path)
             for b in set(rebuilt) - survivors:
                 fs.delete(P(f"{gold_path}/{BUCKET_COL}={b}"), True)
-            if not survivors:
-                # every key of the selected buckets tombstoned away. If NO
-                # bucket dir remains anywhere in gold, the directory has
-                # zero parquet footers and a later read('gold', ...) dies
-                # with 'unable to infer schema' — write one empty,
-                # schema-bearing part file instead (BUCKET_COL stays as a
-                # regular int column, same name/type the partitioned read
-                # surfaces), so an emptied table reads as 0 typed rows.
-                gp = P(gold_path)
-                has_bucket_dirs = fs.exists(gp) and any(
-                    st.getPath().getName().startswith(f"{BUCKET_COL}=")
-                    for st in fs.listStatus(gp)
-                )
-                if not has_bucket_dirs:
-                    self.spark.createDataFrame([], latest.schema).coalesce(
-                        1
-                    ).write.mode("overwrite").parquet(gold_path)
 
     def gold_asof(
         self,
@@ -662,14 +972,21 @@ class TableStore:
         """
         from pyspark.sql import Window
 
+        meta = self._load(table)
+        if meta is not None:
+            meta = meta.keyed(key_cols)
         ckpt_run = max(
             (r for r in self.list_checkpoints(table) if r <= run_id), default=None
         )
-        bronze = self.read("bronze", table).filter(F.col("run_id") <= run_id)
+        bronze = self._read(meta, "bronze", table).filter(F.col("run_id") <= run_id)
+        bucket = _key_bucket(meta.key_cols, meta.n_buckets)
         if ckpt_run is not None:
-            base = self.spark.read.parquet(self._ckpt_path(table, ckpt_run))
+            # a checkpoint written before a split holds the old buckets
+            base = self.spark.read.parquet(self._ckpt_path(table, ckpt_run)).withColumn(
+                BUCKET_COL, bucket
+            )
             bronze = bronze.filter(F.col("run_id") > ckpt_run)
-        staged = bronze.withColumn(BUCKET_COL, _key_bucket(key_cols, self.n_buckets))
+        staged = bronze.withColumn(BUCKET_COL, bucket)
         if ckpt_run is not None:
             staged = staged.join(
                 base.select(BUCKET_COL, HASH_COL), [BUCKET_COL, HASH_COL], "left_anti"
@@ -744,10 +1061,14 @@ class TableStore:
         ``persist`` to the same table. ``persist(compact=True)`` runs this
         same rewrite inside its gold refresh (:meth:`rebuild_gold`).
         """
-        self._compact(table, buckets)
+        self._compact(table, self._open(table), buckets)
 
     def _compact(
-        self, table: str, buckets: list[int] | None, rank: Column | None = None
+        self,
+        table: str,
+        meta: TableMeta | None,
+        buckets: list[int] | None,
+        rank: Column | None = None,
     ) -> DataFrame:
         """The compaction write of :meth:`compact_silver`; returns the
         materialized copy of the selected buckets it wrote. ``rank`` (a
@@ -755,7 +1076,7 @@ class TableStore:
         exchange, before the copy: under adaptive execution the copy
         reports no partitioning, so a window over it would shuffle
         again."""
-        silver = self.read("silver", table)
+        silver = self._read(meta, "silver", table)
         if buckets is not None:
             silver = silver.filter(F.col(BUCKET_COL).isin(buckets))
         snap = silver.repartition(F.col(BUCKET_COL))
@@ -785,7 +1106,7 @@ class TableStore:
         is the price of every later scan skipping ~(1 - selectivity) of
         the bytes.
         """
-        silver = self.read("silver", table)
+        silver = self._read(self._open(table), "silver", table)
         if buckets is not None:
             silver = silver.filter(F.col(BUCKET_COL).isin(buckets))
         snap = (
@@ -893,7 +1214,7 @@ class TableStore:
         """
         from pyspark.sql import Window
 
-        silver = self.read("silver", table)
+        silver = self._read(self._open(table), "silver", table)
         if buckets is not None:
             silver = silver.filter(F.col(BUCKET_COL).isin(buckets))
         ranked = []
@@ -930,13 +1251,19 @@ class TableStore:
         dynamic-overwrite windows anywhere above bronze are always
         repairable. Cost is O(bronze history of the selected buckets).
 
-        ``key_cols`` must match the values used by :meth:`persist` so the
-        recomputed ``_kb`` agrees with the existing layout.
+        ``key_cols`` must match the values used by :meth:`persist`; the
+        recomputed ``_kb`` uses the table's recorded count, so it agrees
+        with the existing layout.
         """
         if key_cols is None:
             raise ValueError("rebuild_silver needs the table's key_cols")
-        bronze = self.read("bronze", table)
-        staged = bronze.withColumn(BUCKET_COL, _key_bucket(key_cols, self.n_buckets))
+        meta = self._open(table, key_cols)
+        if meta is None and (meta := self._load(table)) is not None:
+            # bronze only: record the count this rebuild buckets by
+            meta = meta.keyed(key_cols)
+            self._write_meta(table, meta)
+        bronze = self._read(meta, "bronze", table)
+        staged = bronze.withColumn(BUCKET_COL, _key_bucket(meta.key_cols, meta.n_buckets))
         if buckets is not None:
             staged = staged.filter(F.col(BUCKET_COL).isin(buckets))
         from pyspark.sql import Window
@@ -1041,12 +1368,25 @@ class TableStore:
     # --------------------------------------------------------------- reads
 
     def read(self, layer: str, table: str) -> DataFrame:
-        """mergeSchema: runs may add columns (API payload drift — the
-        reference keeps every field, U1 ``pd.concat`` alignment); files
-        written before a column existed read it as NULL."""
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            self._path(layer, table)
-        )
+        """One layer under the table's pinned schema (``_table.json``), so
+        no footer job infers it. Runs may add columns (API payload drift —
+        the reference keeps every field, U1 ``pd.concat`` alignment): files
+        written before a column existed read it as NULL, and the columns
+        come in the recorded order (:func:`_widened`) whichever files the
+        read touches. Bronze reads the same columns without ``_kb``, with
+        its ``run_id`` partition last. A table written before the sidecar
+        existed reads under a schema inferred from its footers on the
+        driver (:meth:`_load`)."""
+        return self._read(self._load(table), layer, table)
+
+    def _read(self, meta: TableMeta | None, layer: str, table: str) -> DataFrame:
+        path = self._path(layer, table)
+        if meta is None:  # no table: the plain read raises Spark's own error
+            return self.spark.read.parquet(path)
+        schema = meta.schema
+        if layer == "bronze":
+            schema = StructType(schema.fields[:-1])
+        return self.spark.read.schema(schema).parquet(path)
 
     def read_delta(self, table: str, run_id: str) -> DataFrame:
         """One run's delta = the bronze run partition (partition-pruned)."""

@@ -37,7 +37,8 @@ run would:
   dynamic overwrite: a replay replaces its own partition instead of
   appending duplicates.
 - **Built probe.** A sink whose first batch builds an artifact asks
-  :func:`_built` whether that build finished. Builds write the params
+  :func:`_built` whether that build finished; it returns the loaded
+  params, or ``None`` for "build again". Builds write the params
   sidecar last (a ``_building_`` marker first), so an absent, empty,
   marker or junk sidecar means "build again"; any other error, e.g. an
   IO failure, propagates instead of rebuilding over an existing
@@ -301,15 +302,14 @@ def write_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
     )
 
 
-def _built(spark, path: str, load_params) -> bool:
-    """Whether the artifact at ``path`` finished its build: False for an
-    absent, empty, ``_building_`` or junk params sidecar; any other error
-    propagates (module docstring, "Sink frame")."""
+def _built(spark, path: str, load_params):
+    """The params of the artifact at ``path`` if its build finished;
+    ``None`` for an absent, empty, ``_building_`` or junk params sidecar.
+    Any other error propagates (module docstring, "Sink frame")."""
     try:
-        load_params(spark, path)
+        return load_params(spark, path)
     except SIDECAR_INCOMPLETE:
-        return False
-    return True
+        return None
 
 
 def _append_unseen(
@@ -350,7 +350,7 @@ def _guarded_view_sink(path: str, build, append):
             return
         spark = batch_df.sparkSession
         batch_key = f"batch_{batch_id:08d}"
-        if not _built(spark, path, MV.load_matview_params):
+        if _built(spark, path, MV.load_matview_params) is None:
             build(batch_df, batch_key)
             applied = {batch_key}
             return
@@ -483,7 +483,7 @@ def stream_into_ann_index(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        if not _built(spark, path, AIX.load_ann_params):
+        if _built(spark, path, AIX.load_ann_params) is None:
             AIX.build_ann_index(batch_df, path, **(build_params or {}))
             return
         _append_unseen(batch_df, path, "codes", id_col, id_col, AIX.append_ann_index)
@@ -825,7 +825,7 @@ def stream_into_sq8_index(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        if not _built(spark, path, AIX.load_sq8_params):
+        if _built(spark, path, AIX.load_sq8_params) is None:
             AIX.build_sq8_index(batch_df, path)
             return
         _append_unseen(batch_df, path, "codes", id_col, id_col, AIX.append_sq8_index)
@@ -866,7 +866,8 @@ def stream_into_text_index(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        if not _built(spark, path, TIX.load_text_params):
+        p = _built(spark, path, TIX.load_text_params)
+        if p is None:
             TIX.build_text_index(batch_df, path)
             return
         _append_unseen(batch_df, path, "doclen", "doc_id", id_col, TIX.append_text_index)
@@ -875,7 +876,6 @@ def stream_into_text_index(
         # through the layout-aware compactor, gated on the same cheap
         # metadata probe (recursive part-file count; appends land one file
         # per TOUCHED bucket, so steady state is tok_buckets files)
-        p = TIX.load_text_params(spark, path)
         if TIX.postings_file_count(spark, path) > 3 * max(1, p.tok_buckets):
             # a legacy flat store (tok_buckets == 0) upgrades to the
             # default bucket count here

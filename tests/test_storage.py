@@ -124,10 +124,10 @@ def test_persist_empty_batch_writes_no_silver_or_gold(spark, store):
 
 
 def test_persist_onto_existing_table_job_budget(spark, store):
-    """A persist onto an existing table takes at most 8 Spark jobs: the
+    """A persist onto an existing table takes at most 7 Spark jobs: the
     bronze and silver writes count their own rows and buckets (no count
-    actions), and the silver probe reads under a fixed schema (no footer
-    job)."""
+    actions), and the silver probe and the gold refresh read under a
+    fixed schema (no footer job)."""
     sc = spark.sparkContext
     first = spark.createDataFrame(
         [(str(i), f"{i}@x", "2020-01-01") for i in range(50)], SCHEMA
@@ -145,7 +145,7 @@ def test_persist_onto_existing_table_job_budget(spark, store):
     assert (res.n_delta, res.n_new_silver) == (55, 55)
     assert store.read("gold", "t").count() == 80
     jobs = sc.statusTracker().getJobIdsForGroup("persist-job-budget")
-    assert 0 < len(jobs) <= 8, sorted(jobs)
+    assert 0 < len(jobs) <= 7, sorted(jobs)
 
 
 def test_gold_latest_per_key_with_updates_across_runs(spark, store):
@@ -837,6 +837,226 @@ def test_tombstone_all_keys_reads_empty_gold(spark, store):
     }
 
 
+# ---- table metadata: pinned schema, recorded bucket count, splits ---------
+
+
+def _table_json(store, table):
+    import json
+
+    with open(f"{store.root}/_meta/{table}/_table.json") as f:
+        return json.load(f)
+
+
+def _rows_by_name(df):
+    """``df``'s rows as tuples in column-name order, without
+    ``extracted_at``."""
+    df = df.drop("extracted_at")
+    cols = sorted(df.columns)
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _by_name(store, layer, table):
+    return _rows_by_name(store.read(layer, table))
+
+
+def _asof_is_gold(store, run_id):
+    asof = store.gold_asof("t", run_id, ["cid"], updated_col="udate")
+    return _rows_by_name(asof) == _by_name(store, "gold", "t")
+
+
+def _bucket_dirs(store, layer, table):
+    root = f"{store.root}/{layer}/{table}"
+    return sorted(int(d.split("=", 1)[1]) for d in os.listdir(root) if d.startswith("_kb="))
+
+
+def _data_bytes(path):
+    return sum(
+        os.path.getsize(os.path.join(d, n))
+        for d, _, names in os.walk(path)
+        for n in names
+        if not n.startswith((".", "_"))
+    )
+
+
+def _batches(spark):
+    return [
+        spark.createDataFrame([(str(i), f"{i}@x", "2020-01-01") for i in range(20)], SCHEMA),
+        spark.createDataFrame(
+            [(str(i), f"{i}@y", "2020-01-02", f"+{i}") for i in range(10, 30)],
+            SCHEMA + ", phone string",
+        ),
+        spark.createDataFrame([(str(i), f"{i}@z", "2020-01-03") for i in range(25, 40)], SCHEMA),
+    ]
+
+
+def _persist(store, batches, first_run=1):
+    for i, df in enumerate(batches, first_run):
+        store.persist(df, "t", ["cid"], run_id=f"r{i}", updated_col="udate",
+                      extracted_at=f"2020-06-0{i} 00:00:00")
+
+
+def test_new_table_sized_from_its_first_batch(spark, tmp_path, monkeypatch):
+    """A store without an explicit count gives a small table one bucket;
+    a first batch whose bronze bytes exceed BUCKET_BYTES gets the fewest
+    power-of-two buckets that keep them under it per bucket, laid out as
+    a store given that count explicitly."""
+    from activecampaign_api_data_pipeline_spark import storage
+
+    small = TableStore(spark, str(tmp_path / "small"))
+    _persist(small, _batches(spark)[:1])
+    assert _table_json(small, "t")["n_buckets"] == 1
+    assert _bucket_dirs(small, "silver", "t") == [0] == _bucket_dirs(small, "gold", "t")
+
+    limit = _data_bytes(f"{small.root}/bronze/t/run_id=r1") // 3
+    monkeypatch.setattr(storage, "BUCKET_BYTES", limit)
+    sized = TableStore(spark, str(tmp_path / "sized"))
+    _persist(sized, _batches(spark)[:1])
+    n = _table_json(sized, "t")["n_buckets"]
+    size = _data_bytes(f"{sized.root}/bronze/t/run_id=r1")
+    assert n > 1 and n & (n - 1) == 0
+    assert size <= n * limit < 2 * size
+    assert max(_bucket_dirs(sized, "gold", "t")) < n
+    monkeypatch.setattr(storage, "BUCKET_BYTES", 1 << 40)
+    fixed = TableStore(spark, str(tmp_path / "fixed"), n_buckets=n)
+    _persist(fixed, _batches(spark)[:1])
+    for layer in ("silver", "gold"):
+        assert _by_name(sized, layer, "t") == _by_name(fixed, layer, "t")
+
+
+def test_split_equals_store_built_at_the_new_count(spark, tmp_path, monkeypatch):
+    """A gold bucket that outgrows BUCKET_BYTES splits the table to a
+    power-of-two multiple of its count. Silver and gold then equal a store
+    given the new count from the start, every bucket directory is below
+    the count, and no staging is left."""
+    from activecampaign_api_data_pipeline_spark import storage
+
+    batches = _batches(spark)
+    split = TableStore(spark, str(tmp_path / "split"))
+    _persist(split, batches[:1])
+    assert _table_json(split, "t")["n_buckets"] == 1
+    monkeypatch.setattr(storage, "BUCKET_BYTES", _data_bytes(f"{split.root}/gold/t") * 2 // 3)
+    _persist(split, batches[1:], first_run=2)
+    meta = _table_json(split, "t")
+    n = meta["n_buckets"]
+    assert n > 1 and n & (n - 1) == 0 and not meta["splitting"]
+    for layer in ("silver", "gold"):
+        assert max(_bucket_dirs(split, layer, "t")) < n
+        assert not [d for d in os.listdir(f"{split.root}/{layer}") if "__" in d]
+
+    monkeypatch.setattr(storage, "BUCKET_BYTES", 1 << 40)
+    fixed = TableStore(spark, str(tmp_path / "fixed"), n_buckets=n)
+    _persist(fixed, batches)
+    for layer in ("silver", "gold"):
+        assert _by_name(split, layer, "t") == _by_name(fixed, layer, "t")
+    # time travel and the silver rebuild bucket by the new count too
+    assert _asof_is_gold(split, "r3")
+    split.rebuild_silver("t", key_cols=["cid"])
+    assert _by_name(split, "silver", "t") == _by_name(fixed, "silver", "t")
+
+
+def test_legacy_lake_without_sidecar(spark, tmp_path):
+    """A lake written before ``_table.json`` existed (16 buckets, no
+    sidecar) reads, time-travels, persists and rebuilds as a lake that kept
+    its sidecar, and records ``n_buckets=16`` on its first write."""
+    import shutil
+
+    batches = _batches(spark)
+    legacy = TableStore(spark, str(tmp_path / "legacy"), n_buckets=16)
+    kept = TableStore(spark, str(tmp_path / "kept"), n_buckets=16)
+    for store in (legacy, kept):
+        _persist(store, batches[:2])
+    shutil.rmtree(f"{legacy.root}/_meta")
+    legacy = TableStore(spark, legacy.root)
+
+    for layer in ("bronze", "silver", "gold"):
+        assert _by_name(legacy, layer, "t") == _by_name(kept, layer, "t")
+    assert _asof_is_gold(legacy, "r2")
+    assert not os.path.exists(f"{legacy.root}/_meta")  # reads write nothing
+
+    for store in (legacy, kept):
+        _persist(store, batches[2:], first_run=3)
+    meta = _table_json(legacy, "t")
+    assert (meta["n_buckets"], meta["key_cols"], meta["updated_col"]) == (16, ["cid"], "udate")
+    for layer in ("silver", "gold"):
+        assert _by_name(legacy, layer, "t") == _by_name(kept, layer, "t")
+        assert max(_bucket_dirs(legacy, layer, "t")) < 16
+    assert _asof_is_gold(legacy, "r3")
+    silver = _by_name(legacy, "silver", "t")
+    legacy.rebuild_silver("t", key_cols=["cid"])
+    assert _by_name(legacy, "silver", "t") == silver
+
+
+def test_reopened_store_keeps_recorded_count(spark, tmp_path):
+    """A store reopened with another ``n_buckets`` keeps each table's
+    recorded count for persist, time travel and the silver rebuild."""
+    batches = _batches(spark)
+    root = str(tmp_path / "lake")
+    _persist(TableStore(spark, root, n_buckets=2), batches[:1])
+    reopened = TableStore(spark, root, n_buckets=8)
+    _persist(reopened, batches[1:], first_run=2)
+    reopened.rebuild_silver("t", key_cols=["cid"])
+    fixed = TableStore(spark, str(tmp_path / "fixed"), n_buckets=2)
+    _persist(fixed, batches)
+    assert _table_json(reopened, "t")["n_buckets"] == 2
+    for layer in ("silver", "gold"):
+        assert max(_bucket_dirs(reopened, layer, "t")) < 2
+        assert _by_name(reopened, layer, "t") == _by_name(fixed, layer, "t")
+    assert _asof_is_gold(reopened, "r3")
+
+
+def test_drift_columns_read_in_one_order(spark, tmp_path):
+    """Two stores that gain the same columns in different batch orders
+    read every layer in the same column order: the first batch's columns,
+    the lineage and hash, then the added columns by name. A changed
+    column type or another key set is refused before any write."""
+    base = spark.createDataFrame([("1", "a@x", "2020-01-01")], SCHEMA)
+    with_a = spark.createDataFrame([("2", "b@x", "2020-01-02", "A")], SCHEMA + ", a string")
+    with_b = spark.createDataFrame([("3", "c@x", "2020-01-03", 7)], SCHEMA + ", b long")
+    one = TableStore(spark, str(tmp_path / "one"))
+    two = TableStore(spark, str(tmp_path / "two"))
+    for store, order in ((one, (base, with_a, with_b)), (two, (base, with_b, with_a))):
+        for i, df in enumerate(order):
+            store.persist(df, "t", ["cid"], run_id=f"r{i}", updated_col="udate")
+    cols = ["cid", "email", "udate", "run_id", "extracted_at", "_row_hash", "a", "b", "_kb"]
+    assert one.read("silver", "t").columns == cols == two.read("silver", "t").columns
+    assert one.read("gold", "t").columns == cols == two.read("gold", "t").columns
+    bronze = [c for c in cols if c not in ("run_id", "_kb")] + ["run_id"]
+    assert one.read("bronze", "t").columns == bronze == two.read("bronze", "t").columns
+
+    retyped = spark.createDataFrame([("4", "d@x", "2020-01-04", "x")], SCHEMA + ", b string")
+    with pytest.raises(ValueError, match="changed type"):
+        one.persist(retyped, "t", ["cid"], run_id="r9", updated_col="udate")
+    with pytest.raises(ValueError, match="keyed by"):
+        one.persist(base, "t", ["email"], run_id="r9")
+    assert not os.path.exists(f"{one.root}/bronze/t/run_id=r9")
+
+
+def test_store_reads_pinned_schema_and_buckets_by_recorded_count():
+    """``storage.py`` reads no layer with a merged schema, and every
+    ``_key_bucket`` call passes a table metadata's ``key_cols`` and
+    ``n_buckets`` (never the store's constructor count)."""
+    import ast
+    import pathlib
+
+    from activecampaign_api_data_pipeline_spark import storage
+
+    src = pathlib.Path(storage.__file__).read_text()
+    assert "mergeSchema" not in src
+    calls = [
+        n
+        for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id == "_key_bucket"
+    ]
+    assert len(calls) >= 4
+    for call in calls:
+        args = [(a.value.id, a.attr) for a in call.args if isinstance(a, ast.Attribute)
+                and isinstance(a.value, ast.Name)]
+        assert len(args) == len(call.args) == 2 and not call.keywords, ast.dump(call)
+        (keys_of, keys), (count_of, count) = args
+        assert (keys, count) == ("key_cols", "n_buckets"), ast.dump(call)
+        assert keys_of == count_of != "self", ast.dump(call)
+
+
 # ---- commit protocol: fault injection at every commit step --------------
 #
 # Every artifact that is replaced whole commits through storage._heal /
@@ -976,6 +1196,22 @@ def _commit_verbs():
 
     def sidecar_read(spark, root):
         return read_text_sidecar(spark, f"{root}/side/params.json")
+
+    def table(spark, root):
+        _persist(TableStore(spark, root, n_buckets=1), _batches(spark)[:2])
+
+    def split(spark, root):
+        TableStore(spark, root)._split("t", 4)
+
+    def split_read(spark, root):
+        store = TableStore(spark, root)
+        meta = _table_json(store, "t")
+        return (
+            [_sorted_rows(store.read(layer, "t")) for layer in ("silver", "gold")],
+            [_bucket_dirs(store, layer, "t") for layer in ("silver", "gold")],
+            (meta["n_buckets"], meta["splitting"]),
+        )
+
     return {
         "compact_artifact": (
             artifact,
@@ -1020,6 +1256,11 @@ def _commit_verbs():
         "update_kmv_first": (none, kmv_fold(0), kmv_read, "docs_kmv_v"),
         "write_text_sidecar": (sidecar('{"v": 1}'), sidecar('{"v": 2}'), sidecar_read, "/params.json"),
         "write_text_sidecar_first": (none, sidecar('{"v": 2}'), sidecar_read, "/params.json"),
+        # a split commits three artifacts: the sidecar (its commit point),
+        # then the silver and gold swaps
+        "split_table_json": (table, split, split_read, "/_table.json"),
+        "split_silver": (table, split, split_read, "/silver/t"),
+        "split_gold": (table, split, split_read, "/gold/t"),
     }
 
 
@@ -1030,6 +1271,7 @@ _COMMIT_CASES = [
         "compact_artifact", "vacuum_ann_index", "vacuum_sq8_index", "optimize_zorder",
         "compact_matview", "compact_hll_view", "compact_join_history",
         "compact_text_index", "update_kmv", "write_text_sidecar",
+        "split_table_json", "split_silver", "split_gold",
     )
     for point in ("staged", "aside", "in")
 ] + [(verb, point) for verb in _FIRST_WRITES for point in ("staged", "in")]
@@ -1076,7 +1318,7 @@ def test_commit_crash_heals_to_crash_free_state(
         os.path.join(d, n)
         for d, dirs, files in os.walk(root)
         for n in dirs + files
-        if re.search(r"__(compacting|optimizing|old|tmp)", n)
+        if re.search(r"__(compacting|optimizing|old|tmp|splitting)", n)
     ]
     assert not left, left
 
