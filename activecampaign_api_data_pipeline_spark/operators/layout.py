@@ -28,31 +28,12 @@ pruning decision is a manifest scan, never a data scan.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from activecampaign_api_data_pipeline_spark.storage import _fs, _heal, _swap
+from activecampaign_api_data_pipeline_spark.storage import _fs, _heal, _swap, zorder_key
 
 MANIFEST = "_manifest"
-
-
-def morton_value(a: Column, b: Column, bits: int = 16) -> Column:
-    """Interleave the low ``bits`` bits of two non-negative integer
-    columns (a→even positions, b→odd) as one long — whole-stage-codegen
-    bit arithmetic, no Python. Columns wider than ``bits`` still
-    cluster correctly on their low bits; callers with wide domains
-    should pre-scale (e.g. divide out the unit) rather than raise
-    ``bits`` past 31."""
-    pieces = [
-        F.shiftleft(F.shiftright(a.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i)
-        for i in range(bits)
-    ] + [
-        F.shiftleft(F.shiftright(b.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        for i in range(bits)
-    ]
-    return reduce(lambda x, y: x.bitwiseOR(y), pieces).alias("_zv")
 
 
 def write_zordered(
@@ -67,7 +48,7 @@ def write_zordered(
     Morton curve of ``(col_a, col_b)``, plus a ``_manifest`` table of
     per-file min/max for both columns and a row count. One range
     shuffle + one metadata-sized aggregate."""
-    zv = morton_value(F.col(col_a), F.col(col_b), bits)
+    zv = zorder_key([F.col(col_a), F.col(col_b)], bits)
     (
         df.withColumn("_zv", zv)
         .repartitionByRange(n_files, F.col("_zv"))
@@ -186,7 +167,7 @@ def optimize_zorder(
         raise FileNotFoundError(
             f"optimize_zorder: no live table at {path} and no staging copy"
         )
-    zv = morton_value(F.col(col_a), F.col(col_b), bits)
+    zv = zorder_key([F.col(col_a), F.col(col_b)], bits)
     (
         spark.read.parquet(path)
         .withColumn("_zv", zv)

@@ -66,7 +66,9 @@ Actions are few as well: the bronze and silver writes count their own
 rows and buckets as they run (``DataFrame.observe``), so no count job
 re-reads a batch, and an empty batch stops after bronze — it writes no
 silver and no gold. A persist onto an existing table runs at most 7 Spark
-jobs. With ``compact=True`` (the streaming sink's cadence), the gold
+jobs, with or without ``tombstone_col``: the gold write reports the
+buckets it kept, so finding the emptied ones costs no job. With
+``compact=True`` (the streaming sink's cadence), the gold
 refresh also compacts the batch's silver buckets from its own read: one
 ``_kb`` exchange ranks them, one materialized copy feeds both the silver
 rewrite and the gold write, and the persist runs 9 jobs where a persist
@@ -93,7 +95,10 @@ arbitrary buckets (default: all).
 Determinism: gold ordering is an explicit total order
 (updated_col DESC, extracted_at DESC, run_id DESC, _row_hash DESC) — the
 reference leans on pandas' stable mergesort file order (:186), which has no
-distributed equivalent (SURVEY.md §7.3).
+distributed equivalent (SURVEY.md §7.3). Each layout rule is stated once:
+gold's order in :func:`_latest_rank`, the first-seen rule in
+:func:`_first_rank`, and every rewrite of a bucketed layer goes through
+:meth:`TableStore._write_buckets`.
 
 Commit protocol: every artifact that is replaced whole — a compacted or
 vacuumed directory, a Z-ordered table, a KMV sketch, a text sidecar — is
@@ -124,7 +129,7 @@ import json
 import os
 from dataclasses import dataclass, replace
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
@@ -347,6 +352,33 @@ def _counts(obs: Observation) -> tuple[int, list[int]]:
     return m["n"], sorted(m.get("buckets", []))
 
 
+def _latest_rank(key_cols: list[str], updated_col: str | None) -> Column:
+    """Gold's total order: per key, rank 1 is the row with the greatest
+    ``updated_col`` (when the table has one), then ``extracted_at``,
+    ``run_id`` and ``_row_hash``. The rank runs per ``(_kb, keys)``: the
+    same groups as per key, because ``_kb`` is a function of the keys, so
+    a frame clustered by ``_kb`` already satisfies its distribution."""
+    order = [updated_col] if updated_col is not None else []
+    order += ["extracted_at", "run_id", HASH_COL]
+    w = Window.partitionBy(BUCKET_COL, *key_cols)
+    return F.row_number().over(w.orderBy(*[F.col(c).desc_nulls_last() for c in order]))
+
+
+def _first_rank() -> Column:
+    """The first-seen rule: per ``(_kb, _row_hash)``, rank 1 is the row
+    with the earliest ``extracted_at``, then ``run_id`` — the copy the
+    persist path's anti-join keeps, since it drops later replays."""
+    w = Window.partitionBy(BUCKET_COL, HASH_COL)
+    return F.row_number().over(
+        w.orderBy(F.col("extracted_at").asc_nulls_last(), F.col("run_id").asc_nulls_last())
+    )
+
+
+def _top(df: DataFrame, rank: Column) -> DataFrame:
+    """The rows of ``df`` that ``rank`` (a ``row_number`` window) ranks 1."""
+    return df.withColumn("_rn", rank).filter(F.col("_rn") == 1).drop("_rn")
+
+
 def _data_files(spark: SparkSession, path: str) -> list:
     """Hadoop ``FileStatus`` of every data file under ``path`` (Spark's
     listing rule: no ``_`` or ``.`` file names), oldest first; empty when
@@ -361,6 +393,21 @@ def _data_files(spark: SparkSession, path: str) -> list:
         if not p.getName().startswith(("_", ".")) and "/_temporary/" not in p.toString():
             out.append(st)
     return sorted(out, key=lambda st: (st.getModificationTime(), st.getPath().toString()))
+
+
+def _partitions(spark: SparkSession, path: str, name: str) -> list[str]:
+    """The values of the ``name=value`` directories directly under
+    ``path``, sorted; empty when ``path`` is absent. A listing, no Spark
+    job."""
+    fs, P = _fs(spark, path)
+    if not fs.exists(P(path)):
+        return []
+    prefix = f"{name}="
+    return sorted(
+        st.getPath().getName()[len(prefix):]
+        for st in fs.listStatus(P(path))
+        if st.isDirectory() and st.getPath().getName().startswith(prefix)
+    )
 
 
 def _footer_schema(spark: SparkSession, path) -> StructType:
@@ -550,11 +597,13 @@ class TableStore:
         new = replace(meta, n_buckets=n_buckets, splitting=True)
         for layer in ("silver", "gold"):
             if self._exists(self._path(layer, table)):
-                self._read(meta, layer, table).withColumn(
+                rows = self._read(meta, layer, table).withColumn(
                     BUCKET_COL, _key_bucket(new.key_cols, new.n_buckets)
-                ).repartition(F.col(BUCKET_COL)).write.mode("overwrite").partitionBy(
-                    BUCKET_COL
-                ).parquet(self._path(layer, table) + "__splitting")
+                )
+                self._write_buckets(
+                    new, rows.repartition(F.col(BUCKET_COL)),
+                    self._path(layer, table) + "__splitting",
+                )
         self._write_meta(table, new)
         self._finish_split(table, new)
 
@@ -571,36 +620,29 @@ class TableStore:
         self._write_meta(table, done)
         return done
 
-    def _sized(self, table: str, run_id: str) -> int:
-        """A new table's bucket count: the explicit one, else the fewest
-        buckets (a power of two) that keep the bytes of its first bronze
-        run partition under :data:`BUCKET_BYTES` each."""
-        if self.n_buckets is not None:
-            return self.n_buckets
-        size = sum(
-            st.getLen()
-            for st in _data_files(self.spark, f"{self._path('bronze', table)}/run_id={run_id}")
-        )
+    def _fit(self, paths) -> int:
+        """The fewest buckets (a power of two) that keep the largest of
+        ``paths``' data bytes under :data:`BUCKET_BYTES` each. An FS
+        listing, no Spark job."""
+        size = max((sum(st.getLen() for st in _data_files(self.spark, p)) for p in paths), default=0)
         n = 1
         while size > n * BUCKET_BYTES:
             n *= 2
         return n
 
+    def _sized(self, table: str, run_id: str) -> int:
+        """A new table's bucket count: the explicit one, else the count
+        that fits its first bronze run partition (:meth:`_fit`)."""
+        if self.n_buckets is not None:
+            return self.n_buckets
+        return self._fit([f"{self._path('bronze', table)}/run_id={run_id}"])
+
     def _grow(self, table: str, meta: TableMeta, buckets: list[int]) -> None:
         """Split the table when a bucket of ``buckets`` outgrew
         :data:`BUCKET_BYTES` in gold, into enough buckets that the largest
-        one's bytes, evenly spread, fit. An FS listing, no Spark job."""
+        one's bytes, evenly spread, fit."""
         gold = self._path("gold", table)
-        biggest = max(
-            (
-                sum(st.getLen() for st in _data_files(self.spark, f"{gold}/{BUCKET_COL}={b}"))
-                for b in buckets
-            ),
-            default=0,
-        )
-        factor = 1
-        while biggest > factor * BUCKET_BYTES:
-            factor *= 2
+        factor = self._fit([f"{gold}/{BUCKET_COL}={b}" for b in buckets])
         if factor > 1:
             self._split(table, meta.n_buckets * factor)
 
@@ -706,10 +748,8 @@ class TableStore:
                 return PersistResult(table, run_id, 0, 0, [], [])
 
             # 2. silver: anti-join on (_kb, _row_hash) — bucket-pruned probe.
-            #    The probe reads only the two columns it joins on, under a
-            #    pinned schema: this method writes both with these types
-            #    (md5 hex string, int partition value), so no footer job is
-            #    needed to infer them.
+            #    The probe reads only the two columns it joins on, under the
+            #    table's pinned schema, so no footer job infers them.
             silver_path = self._path("silver", table)
             fresh = staged  # no silver yet: the anti-join is vacuous
             if created:
@@ -729,11 +769,7 @@ class TableStore:
                     else fresh.repartition(F.col(BUCKET_COL))
                 )
             elif self._exists(silver_path):
-                old = (
-                    self.spark.read.schema(f"{HASH_COL} string, {BUCKET_COL} int")
-                    .parquet(silver_path)
-                    .filter(F.col(BUCKET_COL).isin(buckets))
-                )
+                old = self._read(meta, "silver", table, buckets).select(BUCKET_COL, HASH_COL)
                 fresh = staged.join(old, [BUCKET_COL, HASH_COL], "left_anti").repartition(
                     F.col(BUCKET_COL)
                 )
@@ -796,66 +832,42 @@ class TableStore:
         silver's rows unchanged, and re-running the refresh repairs gold.
         """
         meta = self._open(table, key_cols, updated_col)
-        order = []
-        if updated_col is not None:
-            order.append(F.col(updated_col).desc_nulls_last())
-        order += [
-            F.col("extracted_at").desc_nulls_last(),
-            F.col("run_id").desc_nulls_last(),
-            F.col(HASH_COL).desc(),
-        ]
-        from pyspark.sql import Window
-
-        # ``_kb`` is a function of the keys, so ranking per (_kb, keys)
-        # forms the same groups as ranking per keys; and a frame clustered
-        # by ``_kb`` already satisfies that window's distribution. One
-        # shuffle on ``_kb`` then serves both the rank and the bucketed
-        # write below (one file per bucket).
-        rank = F.row_number().over(Window.partitionBy(BUCKET_COL, *key_cols).orderBy(*order))
+        # one shuffle on ``_kb`` serves both the rank (_latest_rank) and
+        # the bucketed write below (one file per bucket)
+        ranked = (
+            self._read(meta, "silver", table, buckets)
+            .repartition(F.col(BUCKET_COL))
+            .withColumn("_rn", _latest_rank(key_cols, updated_col))
+        )
         if compact:
-            silver = self._compact(table, meta, buckets, rank)
-        else:
-            silver = self._read(meta, "silver", table)
-            if buckets is not None:
-                silver = silver.filter(F.col(BUCKET_COL).isin(buckets))
-            silver = silver.repartition(F.col(BUCKET_COL)).withColumn("_rn", rank)
-        latest = silver.filter(F.col("_rn") == 1).drop("_rn")
-        rebuilt = None
-        if tombstone_col is not None:
-            # drop keys whose LATEST row is a delete marker (after the
-            # rank, so an upsert newer than a tombstone resurrects the
-            # key); null marker = not deleted
-            rebuilt = (
-                buckets
-                if buckets is not None
-                else [r[BUCKET_COL] for r in silver.select(BUCKET_COL).distinct().collect()]
-            )
-            latest = latest.filter(
-                ~F.coalesce(F.col(tombstone_col), F.lit(False))
-            )
-        gold_path = self._path("gold", table)
-        if tombstone_col is not None:
-            # dynamic overwrite only rewrites partitions PRESENT in the
-            # output — a bucket whose every key tombstoned away would keep
-            # its stale partition. Find the selected buckets with zero
-            # survivors and drop their partition dirs explicitly (after
-            # the write; a crash in between is repaired by re-running this
-            # idempotent rebuild, same as the documented gold-commit
-            # window). O(selected buckets) directory ops, no data rewrite.
-            # A gold with no bucket left reads as 0 typed rows under the
-            # pinned schema.
-            latest.persist()
-            survivors = {
-                r[BUCKET_COL] for r in latest.select(BUCKET_COL).distinct().collect()
-            }
-        latest.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(BUCKET_COL).parquet(gold_path)
-        if tombstone_col is not None:
-            latest.unpersist()
-            fs, P = _fs(self.spark, gold_path)
-            for b in set(rebuilt) - survivors:
-                fs.delete(P(f"{gold_path}/{BUCKET_COL}={b}"), True)
+            # rank before the copy: under adaptive execution the copy
+            # reports no partitioning, so a window over it would shuffle
+            # again
+            ranked = self._compact(meta, table, ranked)
+        latest = ranked.filter(F.col("_rn") == 1)
+        gold = self._path("gold", table)
+        if tombstone_col is None:
+            self._write_buckets(meta, latest, gold)
+            return
+        # drop keys whose LATEST row is a delete marker (after the rank, so
+        # an upsert newer than a tombstone resurrects the key); null marker
+        # = not deleted. Dynamic overwrite only rewrites partitions PRESENT
+        # in the output, so a bucket whose every key tombstoned away would
+        # keep its stale partition: the write reports the buckets it kept,
+        # and the other selected ones (all of gold's, by a listing, when
+        # none are given) are dropped after it. A crash in between is
+        # repaired by re-running this idempotent rebuild, as in the
+        # documented gold-commit window. A gold with no bucket left reads
+        # as 0 typed rows under the pinned schema.
+        kept = Observation()
+        self._write_buckets(
+            meta, _observed(latest.filter(~F.coalesce(F.col(tombstone_col), F.lit(False))), kept),
+            gold,
+        )
+        selected = _partitions(self.spark, gold, BUCKET_COL) if buckets is None else buckets
+        fs, P = _fs(self.spark, gold)
+        for b in {int(b) for b in selected} - set(_counts(kept)[1]):
+            fs.delete(P(f"{gold}/{BUCKET_COL}={b}"), True)
 
     def gold_asof(
         self,
@@ -885,23 +897,7 @@ class TableStore:
         which also keeps snapshots reachable after :meth:`vacuum_bronze`
         has dropped the runs a checkpoint already covers.
         """
-        from pyspark.sql import Window
-
-        first = self._first_asof(table, run_id, key_cols)
-        order = []
-        if updated_col is not None:
-            order.append(F.col(updated_col).desc_nulls_last())
-        order += [
-            F.col("extracted_at").desc_nulls_last(),
-            F.col("run_id").desc_nulls_last(),
-            F.col(HASH_COL).desc(),
-        ]
-        w = Window.partitionBy(*key_cols).orderBy(*order)
-        return (
-            first.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        return _top(self._first_asof(table, run_id, key_cols), _latest_rank(key_cols, updated_col))
 
     def gold_diff(
         self,
@@ -960,7 +956,8 @@ class TableStore:
         """The dedup state as of ``run_id``: first occurrence of every
         ``(bucket, row_hash)`` across bronze runs ≤ run_id, carrying its
         FIRST run's lineage (re-appearing content keeps its original
-        timestamps, exactly as the persist path's anti-join behaves).
+        timestamps, exactly as the persist path's anti-join behaves), in
+        the table's column order (silver's and gold's).
 
         Incremental from the nearest :meth:`checkpoint_asof` snapshot ≤
         ``run_id`` when one exists: restore the checkpoint, replay only
@@ -970,8 +967,6 @@ class TableStore:
         union. By induction this equals the full replay bit-for-bit while
         reading O(delta) bronze instead of O(history).
         """
-        from pyspark.sql import Window
-
         meta = self._load(table)
         if meta is not None:
             meta = meta.keyed(key_cols)
@@ -980,42 +975,30 @@ class TableStore:
         )
         bronze = self._read(meta, "bronze", table).filter(F.col("run_id") <= run_id)
         bucket = _key_bucket(meta.key_cols, meta.n_buckets)
-        if ckpt_run is not None:
-            # a checkpoint written before a split holds the old buckets
-            base = self.spark.read.parquet(self._ckpt_path(table, ckpt_run)).withColumn(
-                BUCKET_COL, bucket
+        if ckpt_run is None:
+            return _top(bronze.withColumn(BUCKET_COL, bucket), _first_rank()).select(
+                *meta.schema.names
             )
-            bronze = bronze.filter(F.col("run_id") > ckpt_run)
-        staged = bronze.withColumn(BUCKET_COL, bucket)
-        if ckpt_run is not None:
-            staged = staged.join(
-                base.select(BUCKET_COL, HASH_COL), [BUCKET_COL, HASH_COL], "left_anti"
-            )
-        wf = Window.partitionBy(BUCKET_COL, HASH_COL).orderBy(
-            F.col("extracted_at").asc_nulls_last(), F.col("run_id").asc_nulls_last()
+        # the checkpoint reads under the table's schema, so a column added
+        # after it reads as NULL; one written before a split holds the old
+        # buckets, so ``_kb`` is recomputed
+        base = (
+            self.spark.read.schema(meta.schema)
+            .parquet(self._ckpt_path(table, ckpt_run))
+            .withColumn(BUCKET_COL, bucket)
         )
-        first = (
-            staged.withColumn("_rn", F.row_number().over(wf))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        delta = (
+            bronze.filter(F.col("run_id") > ckpt_run)
+            .withColumn(BUCKET_COL, bucket)
+            .join(base.select(BUCKET_COL, HASH_COL), [BUCKET_COL, HASH_COL], "left_anti")
         )
-        if ckpt_run is not None:
-            first = base.unionByName(first, allowMissingColumns=True)
-        return first
+        return base.unionByName(_top(delta, _first_rank()))
 
     def _ckpt_path(self, table: str, run_id: str) -> str:
         return f"{self.root}/ckpt/{table}/asof_run={run_id}"
 
     def list_checkpoints(self, table: str) -> list[str]:
-        path = f"{self.root}/ckpt/{table}"
-        if not self._exists(path):
-            return []
-        fs, P = _fs(self.spark, path)
-        return sorted(
-            f.getPath().getName().split("=", 1)[1]
-            for f in fs.listStatus(P(path))
-            if f.isDirectory() and f.getPath().getName().startswith("asof_run=")
-        )
+        return _partitions(self.spark, f"{self.root}/ckpt/{table}", "asof_run")
 
     def checkpoint_asof(self, table: str, run_id: str, key_cols: list[str]) -> None:
         """Persist the dedup state as of ``run_id`` so later
@@ -1061,32 +1044,10 @@ class TableStore:
         ``persist`` to the same table. ``persist(compact=True)`` runs this
         same rewrite inside its gold refresh (:meth:`rebuild_gold`).
         """
-        self._compact(table, self._open(table), buckets)
-
-    def _compact(
-        self,
-        table: str,
-        meta: TableMeta | None,
-        buckets: list[int] | None,
-        rank: Column | None = None,
-    ) -> DataFrame:
-        """The compaction write of :meth:`compact_silver`; returns the
-        materialized copy of the selected buckets it wrote. ``rank`` (a
-        window per ``(_kb, ...)``) is computed into ``_rn`` on the ``_kb``
-        exchange, before the copy: under adaptive execution the copy
-        reports no partitioning, so a window over it would shuffle
-        again."""
-        silver = self._read(meta, "silver", table)
-        if buckets is not None:
-            silver = silver.filter(F.col(BUCKET_COL).isin(buckets))
-        snap = silver.repartition(F.col(BUCKET_COL))
-        if rank is not None:
-            snap = snap.withColumn("_rn", rank)
-        snap = snap.localCheckpoint(eager=True)
-        snap.drop("_rn").write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(BUCKET_COL).parquet(self._path("silver", table))
-        return snap
+        meta = self._open(table)
+        self._compact(
+            meta, table, self._read(meta, "silver", table, buckets).repartition(F.col(BUCKET_COL))
+        )
 
     def cluster_silver(
         self, table: str, sort_cols: list[str], buckets: list[int] | None = None
@@ -1106,17 +1067,12 @@ class TableStore:
         is the price of every later scan skipping ~(1 - selectivity) of
         the bytes.
         """
-        silver = self._read(self._open(table), "silver", table)
-        if buckets is not None:
-            silver = silver.filter(F.col(BUCKET_COL).isin(buckets))
-        snap = (
-            silver.repartition(F.col(BUCKET_COL))
-            .sortWithinPartitions(BUCKET_COL, *sort_cols)
-            .localCheckpoint(eager=True)
+        meta = self._open(table)
+        silver = self._read(meta, "silver", table, buckets)
+        self._compact(
+            meta, table,
+            silver.repartition(F.col(BUCKET_COL)).sortWithinPartitions(BUCKET_COL, *sort_cols),
         )
-        snap.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(BUCKET_COL).parquet(self._path("silver", table))
 
     def vacuum_bronze(self, table: str, keep_runs: int) -> list[str]:
         """Bronze retention: drop the oldest run partitions beyond the
@@ -1134,15 +1090,9 @@ class TableStore:
         O(removed runs), no data rewrite.
         """
         path = self._path("bronze", table)
-        if not self._exists(path):
-            return []
-        fs, P = _fs(self.spark, path)
-        runs = sorted(
-            f.getPath().getName().split("=", 1)[1]
-            for f in fs.listStatus(P(path))
-            if f.isDirectory() and f.getPath().getName().startswith("run_id=")
-        )
+        runs = _partitions(self.spark, path, "run_id")
         drop = runs[: max(len(runs) - keep_runs, 0)]
+        fs, P = _fs(self.spark, path)
         for rid in drop:
             fs.delete(P(f"{path}/run_id={rid}"), True)
         return drop
@@ -1162,27 +1112,11 @@ class TableStore:
         fragmentation instead of a blind cadence.
         """
         path = self._path("silver", table)
-        if not self._exists(path):
-            return False
-        fs, P = _fs(self.spark, path)
-        names = (
-            None if buckets is None else {f"{BUCKET_COL}={b}" for b in buckets}
-        )
-        dirs = [
-            st.getPath()
-            for st in fs.listStatus(P(path))
-            if st.isDirectory()
-            and st.getPath().getName().startswith(f"{BUCKET_COL}=")
-            and (names is None or st.getPath().getName() in names)
-        ]
-        # data files only: Spark's own listing skips "_" and "." names
+        wanted = None if buckets is None else {str(b) for b in buckets}
         per_bucket = [
-            sum(
-                1
-                for st in fs.listStatus(d)
-                if st.isFile() and not st.getPath().getName().startswith(("_", "."))
-            )
-            for d in dirs
+            len(_data_files(self.spark, f"{path}/{BUCKET_COL}={b}"))
+            for b in _partitions(self.spark, path, BUCKET_COL)
+            if wanted is None or b in wanted
         ]
         parts = sum(1 for n in per_bucket if n)
         if parts == 0 or sum(per_bucket) <= max_files_per_bucket * parts:
@@ -1212,11 +1146,8 @@ class TableStore:
         (:func:`zorder_key`). Mechanics and single-writer contract as
         :meth:`cluster_silver`.
         """
-        from pyspark.sql import Window
-
-        silver = self._read(self._open(table), "silver", table)
-        if buckets is not None:
-            silver = silver.filter(F.col(BUCKET_COL).isin(buckets))
+        meta = self._open(table)
+        silver = self._read(meta, "silver", table, buckets)
         ranked = []
         for c in zorder_cols:
             w = Window.partitionBy(BUCKET_COL).orderBy(F.col(c).asc_nulls_first())
@@ -1226,17 +1157,13 @@ class TableStore:
                     F.floor(pr * (1 << bits)).cast("long"), F.lit((1 << bits) - 1)
                 )
             )
-        z = zorder_key(ranked, bits=bits)
-        snap = (
-            silver.withColumn("_z", z)
+        self._compact(
+            meta, table,
+            silver.withColumn("_z", zorder_key(ranked, bits=bits))
             .repartition(F.col(BUCKET_COL))
             .sortWithinPartitions(BUCKET_COL, "_z")
-            .drop("_z")
-            .localCheckpoint(eager=True)
+            .drop("_z"),
         )
-        snap.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(BUCKET_COL).parquet(self._path("silver", table))
 
     def rebuild_silver(
         self, table: str, buckets: list[int] | None = None, key_cols: list[str] | None = None
@@ -1262,25 +1189,14 @@ class TableStore:
             # bronze only: record the count this rebuild buckets by
             meta = meta.keyed(key_cols)
             self._write_meta(table, meta)
-        bronze = self._read(meta, "bronze", table)
-        staged = bronze.withColumn(BUCKET_COL, _key_bucket(meta.key_cols, meta.n_buckets))
+        staged = self._read(meta, "bronze", table).withColumn(
+            BUCKET_COL, _key_bucket(meta.key_cols, meta.n_buckets)
+        )
         if buckets is not None:
             staged = staged.filter(F.col(BUCKET_COL).isin(buckets))
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(BUCKET_COL, HASH_COL).orderBy(
-            F.col("extracted_at").asc_nulls_last(), F.col("run_id").asc_nulls_last()
+        self._compact(
+            meta, table, _top(staged, _first_rank()).repartition(F.col(BUCKET_COL))
         )
-        first = (
-            staged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .repartition(F.col(BUCKET_COL))
-            .localCheckpoint(eager=True)
-        )
-        first.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(BUCKET_COL).parquet(self._path("silver", table))
 
     def stats(self, table: str) -> DataFrame:
         """Operational per-layer summary — rows, files, partitions — the
@@ -1379,14 +1295,42 @@ class TableStore:
         driver (:meth:`_load`)."""
         return self._read(self._load(table), layer, table)
 
-    def _read(self, meta: TableMeta | None, layer: str, table: str) -> DataFrame:
+    def _read(
+        self, meta: TableMeta | None, layer: str, table: str, buckets: list[int] | None = None
+    ) -> DataFrame:
+        """One layer under ``meta``'s schema; of a bucketed layer, only
+        ``buckets`` (partition-pruned) when given."""
         path = self._path(layer, table)
         if meta is None:  # no table: the plain read raises Spark's own error
             return self.spark.read.parquet(path)
         schema = meta.schema
         if layer == "bronze":
             schema = StructType(schema.fields[:-1])
-        return self.spark.read.schema(schema).parquet(path)
+        df = self.spark.read.schema(schema).parquet(path)
+        return df if buckets is None else df.filter(F.col(BUCKET_COL).isin(buckets))
+
+    def _write_buckets(self, meta: TableMeta, df: DataFrame, path: str) -> None:
+        """The one writer of a bucketed layer's files: ``df``'s rows in the
+        table's columns (helper columns such as ``_rn`` drop out),
+        partitioned by ``_kb``, with dynamic partition overwrite — the
+        ``_kb`` partitions ``df`` holds are replaced, every other one is
+        untouched. Re-running it with the same rows writes the same layer,
+        which every recovery path and a replayed stream batch rely on."""
+        df.select(*meta.schema.names).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(BUCKET_COL).parquet(path)
+
+    def _compact(self, meta: TableMeta, table: str, clustered: DataFrame) -> DataFrame:
+        """Every silver rewrite: overwrite the silver buckets that
+        ``clustered`` (silver rows clustered by ``_kb``) holds with its
+        rows, one file per bucket, and return the materialized copy it
+        wrote. ``localCheckpoint`` takes
+        the copy BEFORE the overwrite: Spark refuses to overwrite a path
+        its plan still reads, and the copy removes the
+        re-read-during-delete race."""
+        snap = clustered.localCheckpoint(eager=True)
+        self._write_buckets(meta, snap, self._path("silver", table))
+        return snap
 
     def read_delta(self, table: str, run_id: str) -> DataFrame:
         """One run's delta = the bronze run partition (partition-pruned)."""

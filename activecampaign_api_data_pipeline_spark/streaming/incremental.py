@@ -420,7 +420,7 @@ def stream_into_store(
     group; the sink joins it before returning, so the batch commits only
     after both writes, and an error in either fails the batch. With
     ``compact_every=1`` and ``kmv``, a batch onto an existing table runs
-    14 Spark jobs: 10 for the persist with its compacting gold refresh
+    13 Spark jobs: 9 for the persist with its compacting gold refresh
     and 4 for the KMV fold (``tests/test_streaming.py`` pins the budget).
     """
 

@@ -123,12 +123,25 @@ def test_persist_empty_batch_writes_no_silver_or_gold(spark, store):
     assert _gold_map(store, "contacts") == gold
 
 
+def _jobs(spark, group, action):
+    """``action()``'s result and the ids of the Spark jobs it ran, counted
+    under the job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_persist_onto_existing_table_job_budget(spark, store):
     """A persist onto an existing table takes at most 7 Spark jobs: the
     bronze and silver writes count their own rows and buckets (no count
     actions), and the silver probe and the gold refresh read under a
-    fixed schema (no footer job)."""
-    sc = spark.sparkContext
+    fixed schema (no footer job). A persist with ``tombstone_col`` takes
+    no more: its gold write reports the buckets it kept."""
     first = spark.createDataFrame(
         [(str(i), f"{i}@x", "2020-01-01") for i in range(50)], SCHEMA
     )
@@ -136,16 +149,24 @@ def test_persist_onto_existing_table_job_budget(spark, store):
     batch = spark.createDataFrame(
         [(str(i), f"{i}@y", "2020-01-02") for i in range(25, 80)], SCHEMA
     )
-    sc.setJobGroup("persist-job-budget", "persist onto an existing table")
-    try:
-        res = store.persist(batch, "t", ["cid"], run_id="r2", updated_col="udate")
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
+    res, jobs = _jobs(spark, "persist-job-budget", lambda: store.persist(
+        batch, "t", ["cid"], run_id="r2", updated_col="udate"))
     assert (res.n_delta, res.n_new_silver) == (55, 55)
     assert store.read("gold", "t").count() == 80
-    jobs = sc.statusTracker().getJobIdsForGroup("persist-job-budget")
-    assert 0 < len(jobs) <= 7, sorted(jobs)
+    assert 0 < len(jobs) <= 7, jobs
+
+    sch = SCHEMA + ", del boolean"
+    store.persist(spark.createDataFrame(
+        [(str(i), f"{i}@x", "2020-01-01", False) for i in range(50)], sch
+    ), "d", ["cid"], run_id="r1", updated_col="udate", tombstone_col="del")
+    deletes = spark.createDataFrame(
+        [(str(i), f"{i}@y", "2020-01-02", i < 30) for i in range(25, 80)], sch
+    )
+    res, jobs = _jobs(spark, "tombstone-job-budget", lambda: store.persist(
+        deletes, "d", ["cid"], run_id="r2", updated_col="udate", tombstone_col="del"))
+    assert (res.n_delta, res.n_new_silver) == (55, 55)
+    assert store.read("gold", "d").count() == 75
+    assert 0 < len(jobs) <= 7, jobs
 
 
 def test_gold_latest_per_key_with_updates_across_runs(spark, store):
@@ -1031,10 +1052,39 @@ def test_drift_columns_read_in_one_order(spark, tmp_path):
     assert not os.path.exists(f"{one.root}/bronze/t/run_id=r9")
 
 
+def test_gold_asof_is_gold_by_position(spark, tmp_path):
+    """``gold_asof`` of the latest run is gold row for row and column for
+    column (the table's pinned column order, not bronze's), with and
+    without a checkpoint. A checkpoint taken before a column was added
+    reads under the pinned schema: the column reads as NULL, and no
+    footer job infers the checkpoint's schema."""
+    batches = _batches(spark)
+
+    def positional(df):
+        return df.columns, sorted(tuple(r) for r in df.collect())
+
+    def asof(store):
+        return positional(store.gold_asof("t", "r3", ["cid"], updated_col="udate"))
+
+    plain = TableStore(spark, str(tmp_path / "plain"), n_buckets=2)
+    _persist(plain, batches)
+    assert asof(plain) == positional(plain.read("gold", "t"))
+
+    ckpt = TableStore(spark, str(tmp_path / "ckpt"), n_buckets=2)
+    _persist(ckpt, batches[:1])
+    ckpt.checkpoint_asof("t", "r1", ["cid"])  # before ``phone`` exists
+    _persist(ckpt, batches[1:], first_run=2)
+    got, jobs = _jobs(spark, "gold-asof-checkpoint", lambda: asof(ckpt))
+    assert got == positional(ckpt.read("gold", "t")) == asof(plain)
+    assert 0 < len(jobs) <= 4, jobs
+
+
 def test_store_reads_pinned_schema_and_buckets_by_recorded_count():
     """``storage.py`` reads no layer with a merged schema, and every
     ``_key_bucket`` call passes a table metadata's ``key_cols`` and
-    ``n_buckets`` (never the store's constructor count)."""
+    ``n_buckets`` (never the store's constructor count). Each layout rule
+    is stated once: one ``_kb`` dynamic-overwrite writer, one definition
+    of gold's order and one of the first-seen order."""
     import ast
     import pathlib
 
@@ -1042,9 +1092,50 @@ def test_store_reads_pinned_schema_and_buckets_by_recorded_count():
 
     src = pathlib.Path(storage.__file__).read_text()
     assert "mergeSchema" not in src
+    tree = ast.parse(src)
+
+    def defining(attr):
+        """Names of the functions whose body calls ``.<attr>(...)``."""
+        return {
+            fn.name
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr
+        }
+
+    def overwrite_writers():
+        """Functions holding a ``.write....parquet(...)`` chain that
+        overwrites and partitions by ``_kb``."""
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for n in ast.walk(fn):
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) \
+                        and n.func.attr == "parquet":
+                    chain, node = {}, n.func.value
+                    while isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                        chain[node.func.attr] = [ast.unparse(a) for a in node.args]
+                        node = node.func.value
+                    if chain.get("mode") == ["'overwrite'"] and chain.get("partitionBy") == [
+                        "BUCKET_COL"
+                    ]:
+                        yield fn.name
+
+    assert list(overwrite_writers()) == ["_write_buckets"]
+    assert src.count("partitionOverwriteMode") == 2
+    assert {
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef) and "partitionOverwriteMode" in ast.unparse(fn)
+    } == {"_write_buckets", "persist"}
+    assert defining("row_number") == {"_latest_rank", "_first_rank"}
+    assert defining("desc_nulls_last") | defining("desc") == {"_latest_rank"}
+    assert defining("asc_nulls_last") | defining("asc") == {"_first_rank"}
     calls = [
         n
-        for n in ast.walk(ast.parse(src))
+        for n in ast.walk(tree)
         if isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id == "_key_bucket"
     ]
     assert len(calls) >= 4
