@@ -34,18 +34,26 @@ once, and the chatter and digest are written from it side by side once
 every persist has finished. A failed task stops the run before its next
 fan-out; ``run_pipeline`` raises once every task it started has finished,
 and the watermark stays where it was (T1).
+
+The mart (:func:`build_ac_chatter`) takes each source's event time from its
+table spec, and every dim name through one rule (:func:`_lookup`: a
+broadcast left join on the dim's ``id``, NULL names when the dim was not
+loaded), so ``chatter_master`` has one schema whatever ``cfg.dims`` holds.
+The sync's own lake files, the dim cache's ``_meta.json`` and
+``state.json``, go through the store's Hadoop FileSystem helpers, so
+``lake_root`` may be a local path or any Hadoop URI.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import threading
 import time
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
@@ -60,7 +68,14 @@ from activecampaign_api_data_pipeline_spark.operators.rollup import digest_lines
 from activecampaign_api_data_pipeline_spark.operators.snapshots import top_n_per_group
 from activecampaign_api_data_pipeline_spark.sources.fanout import ENDPOINT_COL, fetch_children
 from activecampaign_api_data_pipeline_spark.sources.rest_client import RestClient
-from activecampaign_api_data_pipeline_spark.storage import TableStore, write_digests
+from activecampaign_api_data_pipeline_spark.storage import (
+    SIDECAR_INCOMPLETE,
+    TableStore,
+    max_id_watermark,
+    read_text_sidecar,
+    write_digests,
+    write_text_sidecar,
+)
 
 #: id-column candidates probed case-insensitively on the seed
 #: (reference :280-301).
@@ -268,17 +283,19 @@ def load_dim_cached(
     name: str,
     fields: list[str],
 ) -> DataFrame:
-    """TTL-cached dim snapshot (S6, :335-384): parquet + meta JSON sidecar,
-    refetched when older than ``refresh_days``; 404 → empty dim. The dim
+    """TTL-cached dim snapshot (S6, :335-384): parquet + ``_meta.json``
+    sidecar (:func:`..storage.write_text_sidecar`), refetched when older
+    than ``refresh_days`` or when the sidecar is absent or unreadable;
+    404 → empty dim. The dim
     fetch is a single driver-side client, so it uses the full budget, and
     waits for its turn at the API."""
     cache_dir = f"{cfg.lake_root}/dims/{name}"
     meta_path = f"{cache_dir}/_meta.json"
-    fresh = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-        fresh = (time.time() - meta["fetched_at"]) < cfg.refresh_days * 86400
+    try:
+        meta = json.loads(read_text_sidecar(spark, meta_path))
+        fresh = time.time() - meta["fetched_at"] < cfg.refresh_days * 86400
+    except SIDECAR_INCOMPLETE:  # absent, or junk left by a crashed write
+        fresh = False
     if not fresh:
         client = RestClient(cfg.base_url, rate=cfg.rate)
         with _API_TURN:
@@ -296,8 +313,7 @@ def load_dim_cached(
         schema = ", ".join(f"{f} string" for f in fields)
         df = spark.createDataFrame(data, schema)
         df.coalesce(1).write.mode("overwrite").parquet(cache_dir)
-        with open(meta_path, "w") as f:
-            json.dump({"fetched_at": time.time(), "n": len(data)}, f)
+        write_text_sidecar(spark, meta_path, json.dumps({"fetched_at": time.time(), "n": len(data)}))
     return spark.read.parquet(cache_dir)
 
 
@@ -500,8 +516,7 @@ def run_pipeline(
 
     # --- watermark advanced only after everything succeeded (T1, :1696-1700);
     # computed from the materialized snapshot that was persisted above.
-    new_max = new_contacts.agg(F.max(F.col("id").cast("long"))).collect()[0][0]
-    state["max_contact_id"] = max(watermark, int(new_max or 0))
+    state["max_contact_id"] = max(watermark, max_id_watermark(new_contacts, "id") or 0)
     state["last_run_id"] = run_id
     store.save_state(state)
     return {"run_id": run_id, "watermark": state["max_contact_id"], "children": counts}
@@ -528,6 +543,17 @@ AC_EVENT_SCHEMA: list[tuple[str, str]] = [
 ]
 
 
+def _lookup(df: DataFrame, dim: DataFrame | None, key: str, **cols: Column) -> DataFrame:
+    """Left-join a broadcast dim's ``id`` onto ``key``, adding ``cols``
+    (expressions over the dim's columns); typed NULL strings when the dim
+    was not loaded. ``df`` keeps its column order and the new columns
+    follow it, so the mart has one schema whatever dims a run loaded."""
+    if dim is None:
+        return df.withColumns({c: F.lit(None).cast("string") for c in cols})
+    m = dim.select(F.col("id").alias("_dim_id"), *(e.alias(c) for c, e in cols.items()))
+    return df.join(F.broadcast(m), F.col(key) == F.col("_dim_id"), "left").drop("_dim_id")
+
+
 def build_ac_chatter(
     store: TableStore,
     dims: dict[str, DataFrame],
@@ -537,13 +563,19 @@ def build_ac_chatter(
     """Chatter mart + digest from stored gold tables (reference :1016-1507).
 
     Conform each child source onto AC_EVENT_SCHEMA [U2] with the
-    reference's per-source title/detail templates (:1244-1366), cap
-    per-contact history [W2], enrich names via broadcast joins [J1/J2/P6]
-    — campaign/message/automation chains (:899-994), stage/pipeline/
-    account/score/user name maps (:1044-1127), deal facts (:1154-1162) —
-    render chatter lines with the acting user [F1, :1411-1422], order
-    deterministically [O1], and roll up the per-contact digest
-    [A5/A6/W3, :1427-1506].
+    reference's per-source title/detail templates (:1244-1366), its event
+    time from the table spec's ``ts``, cap per-contact history [W2],
+    enrich names via broadcast joins [J1/J2/P6] — campaign/message/
+    automation chains (:899-994), stage/pipeline/account/score/user name
+    maps (:1044-1127), deal facts (:1154-1162) — render chatter lines with
+    the acting user [F1, :1411-1422], order deterministically [O1], and
+    roll up the per-contact digest [A5/A6/W3, :1427-1506].
+
+    Every dim lookup goes through :func:`_lookup`, and the tag, list and
+    account ids in ``detail`` become names through one join keyed by
+    ``(event_type, id)``. A dim that was not loaded gives NULL names, so
+    the chatter has one schema (names, types, order) whatever ``dims``
+    holds.
 
     The sorted chatter is computed here, eagerly, and materialized once
     (``localCheckpoint``); the returned chatter is that copy, and the
@@ -555,135 +587,94 @@ def build_ac_chatter(
         except FileNotFoundError:
             return None
 
+    # per source: event type, title, detail and ids; event_ts is the
+    # spec's ``ts`` and a deal child's deal_id its parent column
+    conformed = {
+        "activities": {
+            "event_type": F.coalesce(F.col("reference_type"), F.lit("activity")),
+            "title": F.concat_ws(" ", F.lit("Actividad:"), F.col("reference_type")),
+            "detail": F.col("description"),
+            "user_id": nullify_sentinels(F.col("user")),
+        },
+        "emailActivities": {
+            "event_type": F.concat_ws("_", F.lit("email"), F.col("type")),
+            "title": F.concat_ws(" ", F.lit("Email:"), F.col("type")),
+            "campaign_id": nullify_sentinels(F.col("campaignid")),
+            "message_id": nullify_sentinels(F.col("messageid")),
+        },
+        "contactNotes": {
+            "event_type": F.lit("note"),
+            "title": F.lit("Nota"),
+            "detail": F.col("note"),
+            "user_id": nullify_sentinels(F.col("userid")),
+        },
+        "contactLogs": {
+            "event_type": F.concat_ws("_", F.lit("log"), F.col("action")),
+            "title": F.concat_ws(" ", F.lit("Log:"), F.col("action")),
+            "detail": F.col("message"),
+        },
+        "bounceLogs": {"event_type": F.lit("bounce"), "title": F.lit("Email rebotado"),
+                       "detail": F.col("reason")},
+        "contactTags": {"event_type": F.lit("tag_added"), "title": F.lit("Tag"), "detail": F.col("tag")},
+        "contactLists": {"event_type": F.lit("list_membership"), "title": F.lit("Lista"),
+                         "detail": F.col("list")},
+        "trackingLogs": {"event_type": F.lit("page_visit"), "title": F.lit("Visita"),
+                         "detail": F.col("url")},
+        "geoIps": {"event_type": F.lit("geo_ip"), "title": F.lit("Geo"),
+                   "detail": F.concat_ws(" ", F.col("ip"), F.col("country"))},
+        "contactGoals": {"event_type": F.lit("goal"), "title": F.lit("Meta"), "detail": F.col("name")},
+        "scoreValues": {
+            "event_type": F.lit("score_change"),
+            "title": F.lit("Score"),
+            "detail": F.coalesce(F.col("scoreValue"), F.col("score")),
+            "score_id": nullify_sentinels(F.col("score")),
+        },
+        "accountContacts": {"event_type": F.lit("account_link"), "title": F.lit("Cuenta"),
+                            "detail": F.col("account")},
+        "contactTasks": {
+            "event_type": F.lit("task"),
+            "title": F.concat_ws(" ", F.lit("Tarea:"), F.col("title")),
+            "detail": F.col("note"),
+            "user_id": nullify_sentinels(F.col("userid")),
+        },
+        "contactAutomations": {
+            "event_type": F.lit("automation_run"),
+            "title": F.lit("Automatización"),
+            # P5 code→label with pass-through on unknown codes (:409-410,781-782)
+            "detail": code_map(F.col("status"), AUTOMATION_STATUS_LABELS),
+            # the event's own automation id wins over the campaign chain (J5)
+            "automation_id": F.coalesce(
+                nullify_sentinels(F.col("automation")), nullify_sentinels(F.col("seriesid"))
+            ),
+        },
+        "dealActivities": {
+            "event_type": F.lit("deal_activity"),
+            "title": F.lit("Actividad de deal"),  # rendered with the deal title below
+            "detail": nullify_sentinels(F.col("dataAction")),  # folded into stage=/action=
+            "deal_stage_id": nullify_sentinels(F.col("d_stageid")),
+            "pipeline_id": nullify_sentinels(F.col("d_groupid")),
+            "user_id": nullify_sentinels(F.col("userid")),
+        },
+        "dealNotes": {"event_type": F.lit("deal_note"), "title": F.lit("Nota de deal"),
+                      "detail": F.col("note")},
+        "dealTasks": {"event_type": F.lit("deal_task"), "title": F.lit("Tarea de deal"),
+                      "detail": F.col("title")},
+    }
+    specs = {**CHILD_SPECS, **DEAL_CHILD_SPECS}
     branches = []
-
-    def add(source: str, df: DataFrame | None, mapping: dict) -> None:
-        if df is not None:
-            base = {
-                "event_id": F.concat_ws(":", F.lit(source), F.col("id")),
-                "contact_id": F.col("contact_id"),
-                "source_row_id": F.col("id"),
-            }
-            branches.append((source, df, {**base, **mapping}))
-
-    add("activities", best("activities"), {
-        "event_ts": F.col("tstamp"),
-        "event_type": F.coalesce(F.col("reference_type"), F.lit("activity")),
-        "title": F.concat_ws(" ", F.lit("Actividad:"), F.col("reference_type")),
-        "detail": F.col("description"),
-        "user_id": nullify_sentinels(F.col("user")),
-    })
-    add("emailActivities", best("emailActivities"), {
-        "event_ts": F.col("tstamp"),
-        "event_type": F.concat_ws("_", F.lit("email"), F.col("type")),
-        "title": F.concat_ws(" ", F.lit("Email:"), F.col("type")),
-        "campaign_id": nullify_sentinels(F.col("campaignid")),
-        "message_id": nullify_sentinels(F.col("messageid")),
-    })
-    add("contactNotes", best("contactNotes"), {
-        "event_ts": F.col("cdate"),
-        "event_type": F.lit("note"),
-        "title": F.lit("Nota"),
-        "detail": F.col("note"),
-        "user_id": nullify_sentinels(F.col("userid")),
-    })
-    add("contactLogs", best("contactLogs"), {
-        "event_ts": F.col("tstamp"),
-        "event_type": F.concat_ws("_", F.lit("log"), F.col("action")),
-        "title": F.concat_ws(" ", F.lit("Log:"), F.col("action")),
-        "detail": F.col("message"),
-    })
-    add("bounceLogs", best("bounceLogs"), {
-        "event_ts": F.col("tstamp"),
-        "event_type": F.lit("bounce"),
-        "title": F.lit("Email rebotado"),
-        "detail": F.col("reason"),
-    })
-    add("contactTags", best("contactTags"), {
-        "event_ts": F.col("cdate"),
-        "event_type": F.lit("tag_added"),
-        "title": F.lit("Tag"),
-        "detail": F.col("tag"),
-    })
-    add("contactLists", best("contactLists"), {
-        "event_ts": F.col("udate"),
-        "event_type": F.lit("list_membership"),
-        "title": F.lit("Lista"),
-        "detail": F.col("list"),
-    })
-    add("trackingLogs", best("trackingLogs"), {
-        "event_ts": F.col("tstamp"),
-        "event_type": F.lit("page_visit"),
-        "title": F.lit("Visita"),
-        "detail": F.col("url"),
-    })
-    add("geoIps", best("geoIps"), {
-        "event_ts": F.col("tstamp"),
-        "event_type": F.lit("geo_ip"),
-        "title": F.lit("Geo"),
-        "detail": F.concat_ws(" ", F.col("ip"), F.col("country")),
-    })
-    add("contactGoals", best("contactGoals"), {
-        "event_ts": F.col("cdate"),
-        "event_type": F.lit("goal"),
-        "title": F.lit("Meta"),
-        "detail": F.col("name"),
-    })
-    add("scoreValues", best("scoreValues"), {
-        "event_ts": F.col("tstamp"),
-        "event_type": F.lit("score_change"),
-        "title": F.lit("Score"),
-        "detail": F.coalesce(F.col("scoreValue"), F.col("score")),
-        "score_id": nullify_sentinels(F.col("score")),
-    })
-    add("accountContacts", best("accountContacts"), {
-        "event_ts": F.col("cdate"),
-        "event_type": F.lit("account_link"),
-        "title": F.lit("Cuenta"),
-        "detail": F.col("account"),
-    })
-    add("contactTasks", best("contactTasks"), {
-        "event_ts": F.col("udate"),
-        "event_type": F.lit("task"),
-        "title": F.concat_ws(" ", F.lit("Tarea:"), F.col("title")),
-        "detail": F.col("note"),
-        "user_id": nullify_sentinels(F.col("userid")),
-    })
-    add("contactAutomations", best("contactAutomations"), {
-        "event_ts": F.col("lastdate"),
-        "event_type": F.lit("automation_run"),
-        "title": F.lit("Automatización"),
-        # P5 code→label with pass-through on unknown codes (:409-410,781-782)
-        "detail": code_map(F.col("status"), AUTOMATION_STATUS_LABELS),
-        # the event's own automation id wins over the campaign chain (J5)
-        "automation_id": F.coalesce(
-            nullify_sentinels(F.col("automation")), nullify_sentinels(F.col("seriesid"))
-        ),
-    })
-    add("dealActivities", best("dealActivities"), {
-        "event_ts": F.col("cdate"),
-        "event_type": F.lit("deal_activity"),
-        "title": F.lit("Actividad de deal"),  # patched with deal title below
-        "detail": nullify_sentinels(F.col("dataAction")),  # folded into stage=/action=
-        "deal_id": F.col("deal_id"),
-        "deal_stage_id": nullify_sentinels(F.col("d_stageid")),
-        "pipeline_id": nullify_sentinels(F.col("d_groupid")),
-        "user_id": nullify_sentinels(F.col("userid")),
-    })
-    add("dealNotes", best("dealNotes"), {
-        "event_ts": F.col("cdate"),
-        "event_type": F.lit("deal_note"),
-        "title": F.lit("Nota de deal"),
-        "detail": F.col("note"),
-        "deal_id": F.col("deal_id"),
-    })
-    add("dealTasks", best("dealTasks"), {
-        "event_ts": F.col("udate"),
-        "event_type": F.lit("deal_task"),
-        "title": F.lit("Tarea de deal"),
-        "detail": F.col("title"),
-        "deal_id": F.col("deal_id"),
-    })
+    for source, mapping in conformed.items():
+        df = best(source)
+        if df is None:
+            continue
+        base = {
+            "event_id": F.concat_ws(":", F.lit(source), F.col("id")),
+            "contact_id": F.col("contact_id"),
+            "source_row_id": F.col("id"),
+            "event_ts": F.col(specs[source]["ts"]),
+        }
+        if source in DEAL_CHILD_SPECS:
+            base["deal_id"] = F.col("deal_id")
+        branches.append((source, df, {**base, **mapping}))
     if not branches:
         raise FileNotFoundError("no child tables persisted yet")
 
@@ -697,163 +688,102 @@ def build_ac_chatter(
     # reference :899-994): campaign name by id; message id from the event
     # else the campaign's; automation from the event else campaign seriesid
     # else the maybe-JSON links column (sentinels "" / "0" → NULL throughout)
-    campaigns = dims.get("campaigns")
-    if campaigns is not None:
-        camp = campaigns.select(
-            F.col("id").alias("campaign_id"),
-            F.col("name").alias("campaign_name"),
-            nullify_sentinels(F.col("message_id")).alias("_camp_msg_id"),
-            F.coalesce(
-                nullify_sentinels(F.col("seriesid")),
-                id_from_url(F.get_json_object("links", "$.automation")),
-            ).alias("_camp_auto_id"),
-        )
-        capped = (
-            capped.join(F.broadcast(camp), "campaign_id", "left")
-            .withColumn("message_id", F.coalesce(F.col("message_id"), F.col("_camp_msg_id")))
-            .withColumn("automation_id", F.coalesce(F.col("automation_id"), F.col("_camp_auto_id")))
-            .drop("_camp_msg_id", "_camp_auto_id")
-        )
-    messages = dims.get("messages")
-    if messages is not None:
-        msg = messages.select(
-            F.col("id").alias("message_id"), F.col("subject").alias("message_subject")
-        )
-        capped = capped.join(F.broadcast(msg), "message_id", "left")
-    automations = dims.get("automations")
-    if automations is not None:
-        autos = automations.select(
-            F.col("id").alias("automation_id"), F.col("name").alias("automation_name")
-        )
-        capped = capped.join(F.broadcast(autos), "automation_id", "left")
-    for c in ("campaign_name", "message_subject", "automation_name"):
-        if c not in capped.columns:
-            capped = capped.withColumn(c, F.lit(None).cast("string"))
-    # email events: detail = subject else campaign name (reference :1241)
-    capped = capped.withColumn(
-        "detail",
-        F.when(
-            F.col("event_type").startswith("email_"),
-            F.coalesce("message_subject", "campaign_name", "detail"),
-        ).otherwise(F.col("detail")),
-    )
-    # automation events: render the automation NAME in the title (:1317-1321)
-    capped = capped.withColumn(
-        "title",
-        F.when(
-            (F.col("event_type") == "automation_run") & F.col("automation_name").isNotNull(),
-            F.concat_ws(": ", F.lit("Automatización"), F.col("automation_name")),
-        ).otherwise(F.col("title")),
-    )
+    capped = _lookup(
+        capped, dims.get("campaigns"), "campaign_id",
+        campaign_name=F.col("name"),
+        _camp_msg_id=nullify_sentinels(F.col("message_id")),
+        _camp_auto_id=F.coalesce(
+            nullify_sentinels(F.col("seriesid")),
+            id_from_url(F.get_json_object("links", "$.automation")),
+        ),
+    ).withColumns({
+        "message_id": F.coalesce("message_id", "_camp_msg_id"),
+        "automation_id": F.coalesce("automation_id", "_camp_auto_id"),
+    }).drop("_camp_msg_id", "_camp_auto_id")
+    capped = _lookup(capped, dims.get("messages"), "message_id", message_subject=F.col("subject"))
+    capped = _lookup(capped, dims.get("automations"), "automation_id", automation_name=F.col("name"))
 
     # deal title/stage/pipeline from the deals FACT table (reference
     # :1154-1162 — the one enrichment whose lookup side is a fact, not a
     # dim catalog); the event's own d_stageid/d_groupid win (:1332-1337)
-    deals_tbl = best("deals")
-    if deals_tbl is not None:
-        dl = deals_tbl.select(
-            F.col("id").alias("deal_id"),
+    deals = best("deals")
+    if deals is None:
+        capped = capped.withColumns(
+            {c: F.lit(None).cast("string") for c in ("deal_title", "deal_stage", "_deal_group")}
+        )
+    else:
+        dl = deals.select(
+            F.col("id").alias("_deal_id"),
             F.col("title").alias("deal_title"),
             F.col("stage").alias("deal_stage"),
-            *([F.col("group").alias("_deal_group")] if "group" in deals_tbl.columns else []),
-        ).dropDuplicates(["deal_id"])
+            F.col("group").alias("_deal_group"),
+        ).dropDuplicates(["_deal_id"])
         # no broadcast hint: deals is a FACT table (unbounded at scale);
         # Catalyst auto-broadcasts under the threshold, AQE picks a
         # shuffle join above it
-        capped = capped.join(dl, "deal_id", "left")
-    for c in ("deal_title", "deal_stage", "_deal_group"):
-        if c not in capped.columns:
-            capped = capped.withColumn(c, F.lit(None).cast("string"))
-    capped = (
-        capped.withColumn("deal_stage_id", F.coalesce("deal_stage_id", "deal_stage"))
-        .withColumn("pipeline_id", F.coalesce("pipeline_id", "_deal_group"))
-        .drop("_deal_group")
+        capped = capped.join(dl, F.col("deal_id") == F.col("_deal_id"), "left").drop("_deal_id")
+    capped = capped.withColumns({
+        "deal_stage_id": F.coalesce("deal_stage_id", "deal_stage"),
+        "pipeline_id": F.coalesce("pipeline_id", "_deal_group"),
+    }).drop("_deal_group")
+
+    # stage / pipeline / user / score name maps (reference :1094-1127),
+    # keyed on the id columns carried through the conform schema
+    capped = _lookup(capped, dims.get("dealStages"), "deal_stage_id", deal_stage_name=F.col("title"))
+    capped = _lookup(capped, dims.get("dealGroups"), "pipeline_id", pipeline_name=F.col("title"))
+    capped = _lookup(
+        capped, dims.get("users"), "user_id",
+        user_name=full_name(F.col("firstName"), F.col("lastName"), F.col("email")),
     )
+    capped = _lookup(capped, dims.get("scores"), "score_id", score_name=F.col("name"))
 
-    # stage / pipeline / user name maps (reference :1094-1115) — broadcast
-    # dims keyed on the id columns carried through the conform schema
-    deal_stages = dims.get("dealStages")
-    if deal_stages is not None:
-        st = deal_stages.select(
-            F.col("id").alias("deal_stage_id"), F.col("title").alias("deal_stage_name")
+    # tag/list/account id→name (J1): the id rides in ``detail`` and is
+    # replaced by its name, one broadcast join keyed by (event_type, id)
+    names = [
+        dims[d].select(F.lit(t).alias("_nm_type"), F.col("id").alias("_nm_id"), F.col(c).alias("_nm"))
+        for d, t, c in (
+            ("tags", "tag_added", "tag"),
+            ("lists", "list_membership", "name"),
+            ("accounts", "account_link", "name"),
         )
-        capped = capped.join(F.broadcast(st), "deal_stage_id", "left")
-    deal_groups = dims.get("dealGroups")
-    if deal_groups is not None:
-        pl = deal_groups.select(
-            F.col("id").alias("pipeline_id"), F.col("title").alias("pipeline_name")
+        if dims.get(d) is not None
+    ]
+    if names:
+        on = (F.col("event_type") == F.col("_nm_type")) & (F.col("detail") == F.col("_nm_id"))
+        capped = (
+            capped.join(F.broadcast(reduce(DataFrame.unionByName, names)), on, "left")
+            .withColumn("detail", F.coalesce("_nm", "detail"))
+            .drop("_nm_type", "_nm_id", "_nm")
         )
-        capped = capped.join(F.broadcast(pl), "pipeline_id", "left")
-    users = dims.get("users")
-    if users is not None:
-        usr = users.select(
-            F.col("id").alias("user_id"),
-            full_name(F.col("firstName"), F.col("lastName"), F.col("email")).alias("user_name"),
-        )
-        capped = capped.join(F.broadcast(usr), "user_id", "left")
-    scores = dims.get("scores")
-    if scores is not None:
-        sc = scores.select(F.col("id").alias("score_id"), F.col("name").alias("score_name"))
-        capped = capped.join(F.broadcast(sc), "score_id", "left")
-    for c in ("deal_stage_name", "pipeline_name", "user_name", "score_name"):
-        if c not in capped.columns:
-            capped = capped.withColumn(c, F.lit(None).cast("string"))
 
-    # deal activity rendering (reference :1330-1340): title carries the deal
-    # title, detail becomes "stage=<name> action=<action>" with the stage
-    # NAME when the dim resolves it, else the raw stage id
-    is_da = F.col("event_type") == "deal_activity"
-    capped = capped.withColumn(
-        "title",
-        F.when(is_da, F.concat_ws(": ", F.lit("Deal"), F.col("deal_title"))).otherwise(F.col("title")),
-    ).withColumn(
-        "detail",
-        F.when(
+    # per event type, on disjoint types: email detail = subject else
+    # campaign name (:1241); the automation NAME in the title (:1317-1321);
+    # a deal activity's title carries the deal title and its detail is
+    # "stage=<name> action=<action>" with the stage NAME when the dim
+    # resolves it, else the raw stage id (:1330-1340); a score event's
+    # detail is prefixed with the score NAME (:1123-1127)
+    etype = F.col("event_type")
+    is_da = etype == "deal_activity"
+    capped = capped.withColumns({
+        "title": F.when(
+            (etype == "automation_run") & F.col("automation_name").isNotNull(),
+            F.concat_ws(": ", F.lit("Automatización"), F.col("automation_name")),
+        ).when(is_da, F.concat_ws(": ", F.lit("Deal"), F.col("deal_title")))
+        .otherwise(F.col("title")),
+        "detail": F.when(
+            etype.startswith("email_"), F.coalesce("message_subject", "campaign_name", "detail")
+        ).when(
             is_da,
             F.concat_ws(
                 " ",
                 F.concat(F.lit("stage="), F.coalesce("deal_stage_name", "deal_stage_id", F.lit(""))),
                 F.concat(F.lit("action="), F.coalesce("detail", F.lit(""))),
             ),
-        ).otherwise(F.col("detail")),
-    )
-    # score events: prefix the score NAME (score dim, reference :1123-1127)
-    capped = capped.withColumn(
-        "detail",
-        F.when(
-            (F.col("event_type") == "score_change") & F.col("score_name").isNotNull(),
+        ).when(
+            (etype == "score_change") & F.col("score_name").isNotNull(),
             F.concat_ws(": ", F.col("score_name"), F.col("detail")),
         ).otherwise(F.col("detail")),
-    )
-
-    # tag/list/account id→name enrichment via broadcast dims (J1); the id
-    # rides in ``detail`` and is replaced by its name per event type
-    tags = dims.get("tags")
-    if tags is not None:
-        tag_names = tags.select(F.col("id").alias("detail"), F.col("tag").alias("tag_name"))
-        capped = capped.join(F.broadcast(tag_names), "detail", "left").withColumn(
-            "detail",
-            F.when(F.col("event_type") == "tag_added", F.coalesce("tag_name", "detail"))
-            .otherwise(F.col("detail")),
-        ).drop("tag_name")
-    lists = dims.get("lists")
-    if lists is not None:
-        list_names = lists.select(F.col("id").alias("detail"), F.col("name").alias("list_name"))
-        capped = capped.join(F.broadcast(list_names), "detail", "left").withColumn(
-            "detail",
-            F.when(F.col("event_type") == "list_membership", F.coalesce("list_name", "detail"))
-            .otherwise(F.col("detail")),
-        ).drop("list_name")
-    accounts = dims.get("accounts")
-    if accounts is not None:
-        acct_names = accounts.select(
-            F.col("id").alias("detail"), F.col("name").alias("account_name")
-        )
-        capped = capped.join(F.broadcast(acct_names), "detail", "left").withColumn(
-            "detail",
-            F.when(F.col("event_type") == "account_link", F.coalesce("account_name", "detail"))
-            .otherwise(F.col("detail")),
-        ).drop("account_name")
+    })
 
     # contact enrich + name (J2/P6, :1390-1397)
     contacts = store.read_best("contacts").select(

@@ -126,7 +126,6 @@ forward (:meth:`TableStore._split`).
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
@@ -243,11 +242,13 @@ SIDECAR_INCOMPLETE = (FileNotFoundError, TypeError, ValueError, KeyError, IndexE
 
 
 def read_text_sidecar(spark: SparkSession, path: str) -> str | None:
-    """First non-empty line of a text sidecar — single-file OR legacy
-    directory layout (part-* files from the old Spark text writer) — via
-    direct FileSystem ops, no Spark job. Returns ``None`` when the sidecar
-    is absent or empty (the crashed-legacy-dir-write case); genuine IO
-    errors propagate."""
+    """Text of a sidecar, stripped — single-file OR legacy directory layout
+    (the first part-* file from the old Spark text writer that is not
+    blank) — via direct FileSystem ops, no Spark job. Returns ``None``
+    when the sidecar is absent or blank (the crashed-legacy-dir-write
+    case); genuine IO errors propagate. Every writer's payload is one
+    line; ``state.json`` from before it committed through
+    :func:`write_text_sidecar` spans several."""
     fs, P = _fs(spark, path)
     target = P(path)
     if not fs.exists(target):
@@ -271,9 +272,9 @@ def read_text_sidecar(spark: SparkSession, path: str) -> str | None:
             )
         finally:
             stream.close()
-        for line in data.decode("utf-8").splitlines():
-            if line.strip():
-                return line
+        text = data.decode("utf-8").strip()
+        if text:
+            return text
     return None
 
 
@@ -1350,19 +1351,20 @@ class TableStore:
         return f"{self.root}/state.json"
 
     def load_state(self) -> dict:
-        """Reference ``load_json`` of state.json (:70-74, :1557-1559)."""
-        if os.path.exists(self._state_path):
-            with open(self._state_path) as f:
-                return json.load(f)
-        return {}
+        """Reference ``load_json`` of state.json (:70-74, :1557-1559); ``{}``
+        before the first run. Reads only: the next :meth:`save_state` heals
+        a crashed one. A crash between its two renames leaves no live
+        state, so that run starts from watermark 0 and silver dedups the
+        contacts it fetches again."""
+        raw = read_text_sidecar(self.spark, self._state_path)
+        return {} if raw is None else json.loads(raw)
 
     def save_state(self, state: dict) -> None:
-        """Atomic-rename write, advanced only after a successful run (:1696-1700)."""
-        os.makedirs(self.root, exist_ok=True)
-        tmp = self._state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=2, sort_keys=True)
-        os.replace(tmp, self._state_path)
+        """Commit the state as one JSON line through
+        :func:`write_text_sidecar` (the module's commit protocol, on any
+        Hadoop FileSystem), advanced only after a successful run
+        (:1696-1700)."""
+        write_text_sidecar(self.spark, self._state_path, json.dumps(state, sort_keys=True))
 
 
 def zorder_key(bucketed: list[Column], bits: int = 16) -> Column:

@@ -2,7 +2,10 @@
 → medallion store → chatter mart/digest, with incremental + idempotent
 semantics across runs."""
 
+import dataclasses
+import json
 import os
+import pathlib
 import time
 import urllib.parse
 
@@ -11,7 +14,9 @@ from pyspark.sql import functions as F
 
 from activecampaign_api_data_pipeline_spark.plans import pipeline as pipeline_mod
 from activecampaign_api_data_pipeline_spark.plans.pipeline import (
+    DIM_ENDPOINTS,
     PipelineConfig,
+    load_dim_cached,
     resolve_seed_ids,
     run_pipeline,
 )
@@ -478,3 +483,67 @@ def test_dim_row_cap_guards_driver_memory(spark, mock, tmp_path):
     ok = PipelineConfig(base_url=url, lake_root=str(tmp_path / "lake_ok"),
                        rate=10000, max_dim_rows=2)
     assert load_dim_cached(spark, ok, "tags", ["id", "tag"]).count() == 2
+
+
+def _mart_rows(spark, root: str) -> dict[str, list[dict]]:
+    """Both mart tables' rows as dicts, in a fixed order."""
+    return {
+        mart: sorted(
+            (r.asDict() for r in spark.read.parquet(f"{root}/mart/{mart}").collect()),
+            key=lambda r: json.dumps(r, sort_keys=True),
+        )
+        for mart in ("chatter_master", "contact_digest")
+    }
+
+
+def test_mart_rows_and_one_schema_for_any_dims(spark, mock, cfg):
+    """``chatter_master`` and ``contact_digest`` of the golden mock equal,
+    row for row by column name, the rows recorded in
+    ``tests/fixtures/golden_mart.json`` by the mart as it was before its
+    dim lookups were folded into one rule: once with every dim loaded,
+    once with the benchmark's three. Both runs write one
+    ``chatter_master`` schema: names, types and order."""
+    fixture = pathlib.Path(__file__).parent / "fixtures" / "golden_mart.json"
+    want = json.loads(fixture.read_text())
+    schemas = []
+    for name, dims in (
+        ("all_dims", list(DIM_ENDPOINTS)),
+        ("perfbench_dims", ["automations", "users", "scores"]),
+    ):
+        run_cfg = dataclasses.replace(cfg, lake_root=f"{cfg.lake_root}_{name}", dims=dims)
+        run_pipeline(spark, run_cfg, run_id="r1")
+        assert _mart_rows(spark, run_cfg.lake_root) == want[name], name
+        schemas.append(spark.read.parquet(f"{run_cfg.lake_root}/mart/chatter_master").schema)
+    assert schemas[0] == schemas[1]
+
+
+def test_sync_on_hadoop_uri_lake_root(spark, mock, cfg, tmp_path, monkeypatch):
+    """A ``file://`` lake root: the dim cache's ``_meta.json`` and
+    ``state.json`` live in the lake, so a second run fetches no dim
+    again and keeps the watermark, and nothing lands under the working
+    directory."""
+    m, _ = mock
+    monkeypatch.chdir(tmp_path)
+    uri = dataclasses.replace(cfg, lake_root=(tmp_path / "uri_lake").as_uri())
+    run_pipeline(spark, uri, run_id="r1")
+    n_tag_calls = sum("/api/3/tags" in p for p in m.request_log)
+    res = run_pipeline(spark, uri, run_id="r2")
+    assert sum("/api/3/tags" in p for p in m.request_log) == n_tag_calls
+    assert res["watermark"] == 3
+    assert TableStore(spark, uri.lake_root).load_state()["max_contact_id"] == 3
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("file:")]
+
+
+def test_junk_dim_meta_refetches(spark, mock, cfg):
+    """A ``_meta.json`` cut short by a crash mid-write marks the dim stale:
+    it is fetched again instead of raising on every later run."""
+    m, _ = mock
+    os.makedirs(f"{cfg.lake_root}/dims/tags")
+    with open(f"{cfg.lake_root}/dims/tags/_meta.json", "w") as f:
+        f.write("{")
+    assert load_dim_cached(spark, cfg, "tags", ["id", "tag"]).count() == 2
+    n_tag_calls = sum("/api/3/tags" in p for p in m.request_log)
+    assert n_tag_calls >= 1
+    # the refetch wrote a readable sidecar: the next load is a cache hit
+    assert load_dim_cached(spark, cfg, "tags", ["id", "tag"]).count() == 2
+    assert sum("/api/3/tags" in p for p in m.request_log) == n_tag_calls

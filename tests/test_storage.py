@@ -329,6 +329,19 @@ def test_state_checkpoint_roundtrip(store, spark):
     assert max_id_watermark(df, "id") == 42
 
 
+def test_state_written_indented_still_loads(store):
+    """A ``state.json`` written as indented JSON, the format before the
+    state committed through ``write_text_sidecar``, keeps its watermark."""
+    import json
+
+    os.makedirs(store.root, exist_ok=True)
+    with open(f"{store.root}/state.json", "w") as f:
+        json.dump({"last_run_id": "r9", "max_contact_id": 41}, f, indent=2, sort_keys=True)
+    assert store.load_state() == {"last_run_id": "r9", "max_contact_id": 41}
+    store.save_state({**store.load_state(), "max_contact_id": 42})
+    assert store.load_state() == {"last_run_id": "r9", "max_contact_id": 42}
+
+
 def test_read_best_falls_back_to_silver(spark, store, tmp_path):
     # a table persisted with zero new gold rows still exposes silver
     df = spark.createDataFrame(_rows(("1", "a@x", "2020-01-01")), SCHEMA)
@@ -1294,6 +1307,9 @@ def _commit_verbs():
     def split(spark, root):
         TableStore(spark, root)._split("t", 4)
 
+    def state(v):
+        return lambda spark, root: TableStore(spark, root).save_state({"max_contact_id": v})
+
     def split_read(spark, root):
         store = TableStore(spark, root)
         meta = _table_json(store, "t")
@@ -1347,6 +1363,9 @@ def _commit_verbs():
         "update_kmv_first": (none, kmv_fold(0), kmv_read, "docs_kmv_v"),
         "write_text_sidecar": (sidecar('{"v": 1}'), sidecar('{"v": 2}'), sidecar_read, "/params.json"),
         "write_text_sidecar_first": (none, sidecar('{"v": 2}'), sidecar_read, "/params.json"),
+        "save_state": (
+            state(1), state(2), lambda spark, root: TableStore(spark, root).load_state(), "/state.json"
+        ),
         # a split commits three artifacts: the sidecar (its commit point),
         # then the silver and gold swaps
         "split_table_json": (table, split, split_read, "/_table.json"),
@@ -1361,7 +1380,7 @@ _COMMIT_CASES = [
     for verb in (
         "compact_artifact", "vacuum_ann_index", "vacuum_sq8_index", "optimize_zorder",
         "compact_matview", "compact_hll_view", "compact_join_history",
-        "compact_text_index", "update_kmv", "write_text_sidecar",
+        "compact_text_index", "update_kmv", "write_text_sidecar", "save_state",
         "split_table_json", "split_silver", "split_gold",
     )
     for point in ("staged", "aside", "in")
@@ -1440,6 +1459,30 @@ def test_only_storage_rename_renames():
             and n.func.attr == "rename"
             and id(n) not in allowed
         ]
+    assert not offenders, offenders
+
+
+def test_lake_files_go_through_hadoop_fs():
+    """The store and the sync reach lake files only through Hadoop
+    FileSystem helpers: a local ``open`` or ``os`` call fails on a DFS
+    URI root, and a local rename skips the commit protocol. The staged
+    lanes and ``queries.py`` move local temp files and are not checked."""
+    import ast
+    import pathlib
+
+    from activecampaign_api_data_pipeline_spark import storage
+
+    pkg = pathlib.Path(storage.__file__).parent
+    local = {"open", "os.replace", "os.path.exists", "os.makedirs", "shutil.move"}
+    files = [pkg / "storage.py"] + [
+        f for d in ("plans", "streaming", "sources", "operators") for f in sorted((pkg / d).rglob("*.py"))
+    ]
+    offenders = [
+        f"{f.relative_to(pkg)}:{n.lineno}"
+        for f in files
+        for n in ast.walk(ast.parse(f.read_text()))
+        if isinstance(n, ast.Call) and ast.unparse(n.func) in local
+    ]
     assert not offenders, offenders
 
 
